@@ -23,25 +23,22 @@ import sys
 
 
 def _cmd_convert(args) -> int:
-    from .operators.extract import extract_spans, extracted_flat
+    from .operators.extract import extract_files, nested_from_flat
     from .session import get_spark
-    from .sources import read_pdf_docs, read_text_docs, write_docs_json
+    from .sources import file_doc_ids, pdf_to_spans, text_to_spans, write_docs_json
 
     spark = get_spark("pdf_extractor_spark.convert", master=args.master)
     if args.format == "pdf":
-        docs = read_pdf_docs(spark, args.input, glob=args.glob or "*.pdf")
+        glob, to_spans = args.glob or "*.pdf", pdf_to_spans
     else:
-        docs = read_text_docs(spark, args.input, glob=args.glob or "*.md")
-    extracted = extract_spans(
-        docs,
-        merge_strategy=args.merge_strategy,
-        mega_span_threshold=args.mega_span_threshold,
-    )
-    flat = extracted_flat(extracted)
+        glob, to_spans = args.glob or "*.md", text_to_spans
+    flat = extract_files(spark, args.input, glob, to_spans, args.merge_strategy)
     flat.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+    written = spark.read.parquet(args.output)
+    n = written.count()
     if args.json_dir:
-        write_docs_json(extracted, args.json_dir)
+        docs = file_doc_ids(spark, args.input, glob)
+        write_docs_json(nested_from_flat(written, docs), args.json_dir)
     print(f"convert: {n} elements -> {args.output}")
     return 0
 
@@ -383,7 +380,6 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--glob", default=None)
     c.add_argument("--json-dir", default=None)
     c.add_argument("--merge-strategy", default="default")
-    c.add_argument("--mega-span-threshold", type=int, default=5_000)
     c.set_defaults(fn=_cmd_convert)
 
     s = sub.add_parser("search", help="unified search over an SF dir")

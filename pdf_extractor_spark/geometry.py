@@ -1,9 +1,7 @@
 """Bounding-box geometry: IoU kernel + native Catalyst expression.
 
 Reference: utils.py:45-79 ``calculate_iou`` over [x1,y1,x2,y2] boxes
-(embedded fixture: (0,0,2,2)×(1,1,3,3) → 1/7, disjoint → 0, utils.py:86-104),
-and the camelot→pymupdf coordinate transform consumed at
-table_extraction.py:446.
+(embedded fixture: (0,0,2,2)×(1,1,3,3) → 1/7, disjoint → 0, utils.py:86-104).
 
 The Spark variant is a pure column expression (greatest/least
 arithmetic) so IoU theta-joins stay inside whole-stage codegen — no
@@ -12,7 +10,7 @@ Python in the join hot path.
 
 from __future__ import annotations
 
-from typing import List, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -51,12 +49,3 @@ def iou_expr(
     union = a1 + a2 - inter
     return F.when(union <= 0, F.lit(0.0)).otherwise(inter / union)
 
-
-def camelot_to_pymupdf(
-    bbox: List[float], page_height: float, zoom: float = 1.0
-) -> List[float]:
-    """y-flip + zoom transform (consumed at table_extraction.py:446;
-    impl lived in a non-vendored external module — semantics
-    reconstructed from the call sites)."""
-    x1, y1, x2, y2 = bbox
-    return [x1 * zoom, (page_height - y2) * zoom, x2 * zoom, (page_height - y1) * zoom]

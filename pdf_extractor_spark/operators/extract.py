@@ -17,8 +17,11 @@ Scale design (this is the 100 TB shape, not just the local[32] shape):
   explode spreads the *bytes* of the skewed minority across the
   cluster), and re-assembled per doc in ``applyInPandas``. Only the
   skewed tail pays a shuffle (SURVEY.md §4 custom-work items 1-3).
+* Files (CLI ``convert``) skip the ``(doc_id, spans)`` stage:
+  :func:`extract_files` is one ``binaryFile`` scan feeding one
+  ``mapInArrow`` pass that decodes and extracts each file once.
 * All tokenize/classify work happens inside Arrow batches — the plan
-  contains only ``MapInPandas``/``ArrowEvalPython``/
+  contains only ``MapInArrow``/``MapInPandas``/``ArrowEvalPython``/
   ``FlatMapGroupsInPandas`` nodes, never row-at-a-time
   ``BatchEvalPython`` (north-rule "zero per-row Python" requirement).
 
@@ -33,12 +36,13 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
 from ..docmodel import extract_document, extract_document_cols
 from ..schema import ELEMENT_COLUMNS, EXTRACTED_SCHEMA, FLAT_SCHEMA, OUT_SPAN_STRUCT
+from ..sources import SpansFn, binary_files, doc_id_from
 
 OUT_SPANS_TYPE = ArrayType(OUT_SPAN_STRUCT)
 
@@ -46,6 +50,28 @@ OUT_SPANS_TYPE = ArrayType(OUT_SPAN_STRUCT)
 # ---------------------------------------------------------------------------
 # flat path (performance path): mapInArrow emitting element rows
 # ---------------------------------------------------------------------------
+
+
+def _flat_record_batch(docs, merge_strategy: str, schema):
+    """The one Arrow element emitter: ``docs`` yields (doc_id, kinds,
+    texts, media_refs, offsets) per document; each runs through
+    ``extract_document_cols`` and the elements land as one
+    FLAT_SCHEMA ``RecordBatch``."""
+    import pyarrow as pa
+
+    all_cols = ("doc_id", *ELEMENT_COLUMNS)
+    out: dict = {c: [] for c in all_cols}
+    id_col = out["doc_id"]
+    el_cols = [(c, out[c]) for c in ELEMENT_COLUMNS]
+    for did, kinds, texts, refs, offs in docs:
+        els = extract_document_cols(kinds, texts, refs, offs, merge_strategy)
+        id_col.extend([did] * len(els))
+        for c, col in el_cols:
+            col.extend([el[c] for el in els])
+    return pa.RecordBatch.from_arrays(
+        [pa.array(out[c], type=schema.field(j).type) for j, c in enumerate(all_cols)],
+        schema=schema,
+    )
 
 
 def _flat_arrow_batches(merge_strategy: str):
@@ -58,7 +84,6 @@ def _flat_arrow_batches(merge_strategy: str):
         import pyarrow as pa
 
         schema = _arrow_flat_schema()
-        all_cols = ("doc_id", *ELEMENT_COLUMNS)
         for batch in batches:
             doc_ids = batch.column(0).to_pylist()
             spans = batch.column(1)
@@ -72,24 +97,11 @@ def _flat_arrow_batches(merge_strategy: str):
             refs = flat.field("media_ref").to_pylist()
             offs = flat.field("offset").to_pylist()
             lo = spans.offsets.to_pylist()
-            out: dict = {c: [] for c in all_cols}
-            id_col = out["doc_id"]
-            el_cols = [(c, out[c]) for c in ELEMENT_COLUMNS]
-            for i, did in enumerate(doc_ids):
-                s, e = lo[i], lo[i + 1]
-                els = extract_document_cols(
-                    kinds[s:e], texts[s:e], refs[s:e], offs[s:e], merge_strategy
-                )
-                id_col.extend([did] * len(els))
-                for c, col in el_cols:
-                    col.extend([el[c] for el in els])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out[c], type=schema.field(j).type)
-                    for j, c in enumerate(all_cols)
-                ],
-                schema=schema,
+            docs = (
+                (did, kinds[s:e], texts[s:e], refs[s:e], offs[s:e])
+                for did, s, e in zip(doc_ids, lo, lo[1:])
             )
+            yield _flat_record_batch(docs, merge_strategy, schema)
 
     return gen
 
@@ -198,6 +210,74 @@ def _extract_mega_flat(mega: DataFrame, merge_strategy: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# file path (CLI convert): one binaryFile scan → one mapInArrow pass
+# ---------------------------------------------------------------------------
+
+
+def _file_arrow_batches(root: str, to_spans: SpansFn, merge_strategy: str):
+    def span_cols(path: str, payload: bytes):
+        spans = to_spans(payload)
+        return (
+            doc_id_from(path, root),
+            [s["kind"] for s in spans],
+            [s["text"] for s in spans],
+            [s["media_ref"] for s in spans],
+            [s["offset"] for s in spans],
+        )
+
+    def gen(batches):
+        schema = _arrow_flat_schema()
+        for batch in batches:
+            paths = batch.column(0).to_pylist()
+            contents = batch.column(1)
+            # one file's bytes in Python at a time, not the whole batch's
+            docs = (span_cols(p, contents[i].as_py()) for i, p in enumerate(paths))
+            yield _flat_record_batch(docs, merge_strategy, schema)
+
+    return gen
+
+
+def extract_files(
+    spark: SparkSession,
+    path: str,
+    glob: str,
+    to_spans: SpansFn,
+    merge_strategy: str = "default",
+) -> DataFrame:
+    """Directory of files → one row per extracted element (flat), in
+    one pass: a single ``binaryFile`` scan feeds a single
+    ``mapInArrow`` generator that runs, per file, ``to_spans`` (bytes
+    → spans: ``sources.text_to_spans`` or ``sources.pdf_to_spans``)
+    and then ``extract_document_cols``. Each file is read and decoded
+    once, with no exchange and no nested array in between.
+
+    There is no mega-doc branch here: ``binaryFile`` holds a whole file
+    in one row, and its spans exist only once it is decoded inside one
+    Python worker, so an explode/shuffle afterwards saves no memory.
+    """
+    files = binary_files(spark, path, glob).select("path", "content")
+    return files.mapInArrow(
+        _file_arrow_batches(path, to_spans, merge_strategy), schema=FLAT_SCHEMA
+    )
+
+
+def nested_from_flat(flat: DataFrame, doc_ids: DataFrame) -> DataFrame:
+    """Flat element rows → (doc_id, out_spans): the doc-level shape of
+    :func:`extract_spans`, each document's elements in offset order.
+    ``doc_ids`` lists every document, so one that extracted to nothing
+    keeps its row with ``out_spans = []``."""
+    keyed = F.struct(F.col("offset").alias("k"), F.struct(*ELEMENT_COLUMNS).alias("el"))
+    grouped = flat.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list(keyed)).alias("els")
+    )
+    out_spans = F.transform("els", lambda x: x["el"])
+    return doc_ids.join(grouped, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce(out_spans, F.array().cast(OUT_SPANS_TYPE)).alias("out_spans"),
+    )
+
+
+# ---------------------------------------------------------------------------
 # nested path (doc-level API): (doc_id, out_spans) per document
 # ---------------------------------------------------------------------------
 
@@ -255,7 +335,15 @@ def _extract_mega_nested(mega: DataFrame, merge_strategy: str) -> DataFrame:
 
 
 def extracted_flat(extracted: DataFrame) -> DataFrame:
-    """(doc_id, out_spans) → one row per element, inline columns."""
-    return extracted.select(
-        "doc_id", F.posexplode("out_spans").alias("pos", "el")
-    ).select("doc_id", *[F.col(f"el.{c}").alias(c) for c in ELEMENT_COLUMNS])
+    """(doc_id, out_spans) → one row per element, inline columns.
+
+    ``posexplode_outer`` + a null filter rather than ``posexplode``:
+    for the plain generator Catalyst infers a ``size(out_spans) > 0``
+    filter and pushes it below the projection, which evaluates an
+    ``out_spans`` UDF twice (once for the filter, once for the rows).
+    """
+    return (
+        extracted.select("doc_id", F.posexplode_outer("out_spans").alias("pos", "el"))
+        .where(F.col("pos").isNotNull())
+        .select("doc_id", *[F.col(f"el.{c}").alias(c) for c in ELEMENT_COLUMNS])
+    )

@@ -8,14 +8,17 @@ S13 JSON sink              → one JSON document per line (to_json, text sink)
 
 Everything is DataFrame-native; the only Python is the Arrow-batched
 decode/classify kernel (mapInPandas), mirroring the reference's
-corpus_utils loaders (corpus_utils.py:121-205) Spark-first.
+corpus_utils loaders (corpus_utils.py:121-205) Spark-first. The
+per-file ``bytes → spans`` functions (:func:`text_to_spans`,
+:func:`pdf_to_spans`) are also what the one-pass file extractor
+(``operators.extract.extract_files``) runs per file.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from typing import Iterator, List, Optional
+from typing import Callable, Iterator, List, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -23,8 +26,11 @@ from pyspark.sql import functions as F
 
 from .schema import DOCS_SCHEMA
 
+# one file's bytes → its ordered span dicts (text_to_spans, pdf_to_spans)
+SpansFn = Callable[[bytes], List[dict]]
 
-def _doc_id_from(path: str, root: str) -> str:
+
+def doc_id_from(path: str, root: str) -> str:
     """doc_id = path relative to the input root (basename alone would
     collide for same-named files in different subdirectories, silently
     conflating documents in every doc_id-keyed operator)."""
@@ -91,6 +97,70 @@ def decode_with_fallback(payload: bytes) -> str:
         return payload.decode("latin-1")
 
 
+def binary_files(
+    spark: SparkSession, path: str, glob: str, recursive: bool = True
+) -> DataFrame:
+    """The ``binaryFile`` reader every file source shares (S6): the
+    glob and recursion ride the DataFrame reader, so file listing and
+    partition planning stay on the JVM. Columns: path,
+    modificationTime, length, content (read only when selected)."""
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", glob)
+        .option("recursiveFileLookup", str(recursive).lower())
+        .load(path)
+    )
+
+
+def file_doc_ids(
+    spark: SparkSession, path: str, glob: str, recursive: bool = True
+) -> DataFrame:
+    """doc_id of every matching file, from a path-only listing (no
+    file content is read) — the doc list a per-file sink joins against
+    so documents that extract to nothing still appear."""
+    root = path
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            ids = [doc_id_from(p, root) for p in batch.column(0).to_pylist()]
+            yield pa.RecordBatch.from_arrays([pa.array(ids, pa.string())], ["doc_id"])
+
+    return binary_files(spark, path, glob, recursive).select("path").mapInArrow(
+        gen, schema="doc_id string"
+    )
+
+
+def text_to_spans(payload: bytes) -> List[dict]:
+    """Text/markdown file bytes → spans: decode (S5), classify (S7)."""
+    return lines_to_spans(decode_with_fallback(payload))
+
+
+def _read_docs(
+    spark: SparkSession,
+    path: str,
+    glob: str,
+    recursive: bool,
+    to_spans: SpansFn,
+) -> DataFrame:
+    """Files → docs(doc_id, spans), ``to_spans`` run per file in Arrow
+    batches on executors."""
+    root = path
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": [doc_id_from(p, root) for p in pdf["path"]],
+                    "spans": [to_spans(bytes(c)) for c in pdf["content"]],
+                }
+            )
+
+    files = binary_files(spark, path, glob, recursive).select("path", "content")
+    return files.mapInPandas(gen, schema=DOCS_SCHEMA)
+
+
 def read_text_docs(
     spark: SparkSession,
     path: str,
@@ -99,34 +169,12 @@ def read_text_docs(
 ) -> DataFrame:
     """Directory of text/markdown files → docs(doc_id, spans).
 
-    One document per file; doc_id = file name relative-ish (base name).
-    The glob/recursion ride the DataFrame reader (S6) so partition
-    planning and file listing stay on the JVM; decode + classify run
-    in Arrow batches (S5/S7).
+    One document per file; doc_id = the file's path relative to
+    ``path``. The glob/recursion ride the DataFrame reader (S6) so
+    partition planning and file listing stay on the JVM; decode +
+    classify run in Arrow batches (S5/S7).
     """
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", str(recursive).lower())
-        .load(path)
-        .select("path", "content")
-    )
-
-    root = path
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [_doc_id_from(p, root) for p in pdf["path"]],
-                    "spans": [
-                        lines_to_spans(decode_with_fallback(bytes(c)))
-                        for c in pdf["content"]
-                    ],
-                }
-            )
-
-    return files.mapInPandas(gen, schema=DOCS_SCHEMA)
+    return _read_docs(spark, path, glob, recursive, text_to_spans)
 
 
 def read_docs_json(spark: SparkSession, path: str) -> DataFrame:
@@ -230,26 +278,7 @@ def pdf_to_spans(data: bytes) -> List[dict]:
 def read_pdf_docs(spark: SparkSession, path: str, glob: str = "*.pdf") -> DataFrame:
     """Directory of PDFs → docs(doc_id, spans); parse runs in Arrow
     batches on executors (S1: binaryFile scan → mapInPandas)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "content")
-    )
-
-    root = path
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [_doc_id_from(p, root) for p in pdf["path"]],
-                    "spans": [pdf_to_spans(bytes(c)) for c in pdf["content"]],
-                }
-            )
-
-    return files.mapInPandas(gen, schema=DOCS_SCHEMA)
+    return _read_docs(spark, path, glob, True, pdf_to_spans)
 
 
 # ---------------------------------------------------------------------------

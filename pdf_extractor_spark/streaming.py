@@ -921,6 +921,12 @@ def stream_convert_progress(
                 PROGRESS_EVENTS_SCHEMA,
             )
             events = bounds.unionByName(progress)
+            flat.write.mode("overwrite").parquet(
+                f"{output_dir}/batch=b{epoch_id}"
+            )
+            events.write.mode("overwrite").parquet(
+                f"{events_dir}/batch=b{epoch_id}"
+            )
         except Exception as e:  # the reference's error event branch
             spark.createDataFrame(
                 [(int(epoch_id), 0, "error", None, None, None,
@@ -930,12 +936,6 @@ def stream_convert_progress(
                 f"{events_dir}/batch=b{epoch_id}"
             )
             raise
-        flat.write.mode("overwrite").parquet(
-            f"{output_dir}/batch=b{epoch_id}"
-        )
-        events.write.mode("overwrite").parquet(
-            f"{events_dir}/batch=b{epoch_id}"
-        )
 
     query = (
         docs.writeStream.foreachBatch(sink)
@@ -953,10 +953,10 @@ def read_progress_events(spark: SparkSession, events_dir: str) -> DataFrame:
     received, replayable from disk."""
     import os
 
+    # a subscriber may arrive before the first wave creates events_dir
+    names = os.listdir(events_dir) if os.path.isdir(events_dir) else []
     dirs = sorted(
-        os.path.join(events_dir, d)
-        for d in os.listdir(events_dir)
-        if d.startswith("batch=")
+        os.path.join(events_dir, d) for d in names if d.startswith("batch=")
     )
     if not dirs:
         return spark.createDataFrame([], PROGRESS_EVENTS_SCHEMA)

@@ -34,6 +34,66 @@ def test_cli_convert_md_dir(spark, tmp_path, capsys):
     assert all("out_spans" in d for d in lines)
 
 
+
+def _json_lines(path):
+    lines = []
+    for f in os.listdir(path):
+        if f.startswith("part-"):
+            with open(os.path.join(path, f), encoding="utf-8") as fh:
+                lines += [l.rstrip("\n") for l in fh if l.strip()]
+    return sorted(lines)
+
+
+def test_cli_convert_json_sink_matches_nested_path(spark, tmp_path):
+    """--json-dir is built from the written flat output, yet writes
+    exactly what the doc-level path writes, including the line of a
+    doc that extracts to nothing."""
+    from pdf_extractor_spark.__main__ import main
+    from pdf_extractor_spark.operators.extract import extract_spans
+    from pdf_extractor_spark.sources import read_text_docs, write_docs_json
+
+    src = tmp_path / "docs"
+    (src / "sub").mkdir(parents=True)
+    (src / "blank.md").write_text("\n\n")
+    (src / "latin.md").write_bytes("# Caf\xe9\n\nna\xefve text\n".encode("latin-1"))
+    (src / "sub" / "c.md").write_text("## Sub\n\n| h1 | h2 |\n|---|---|\n| 1 | 2 |\n")
+    jdir = str(tmp_path / "json")
+    rc = main([
+        "convert", "--input", str(src), "--output", str(tmp_path / "elements"),
+        "--json-dir", jdir,
+    ])
+    assert rc == 0
+    ref = str(tmp_path / "json_ref")
+    write_docs_json(extract_spans(read_text_docs(spark, str(src))), ref)
+    got = _json_lines(jdir)
+    assert got == _json_lines(ref)
+    assert '{"doc_id":"blank.md","out_spans":[]}' in got
+    assert {json.loads(l)["doc_id"] for l in got} == {"blank.md", "latin.md", "sub/c.md"}
+
+
+def test_cli_convert_pdf_dir(spark, tmp_path):
+    """--format pdf: the flat output equals extract_elements over
+    read_pdf_docs on the same two-page PDFs."""
+    from pdf_extractor_spark.__main__ import main
+    from pdf_extractor_spark.operators.extract import extract_elements
+    from pdf_extractor_spark.sources import read_pdf_docs
+    from tests.test_pdf_and_detect import MD_PAGE1, MD_PAGE2, make_pdf
+
+    src = tmp_path / "pdfs"
+    src.mkdir()
+    (src / "x.pdf").write_bytes(make_pdf([MD_PAGE1, MD_PAGE2]))
+    (src / "y.pdf").write_bytes(make_pdf([MD_PAGE2, MD_PAGE1]))
+    out = str(tmp_path / "elements")
+    rc = main(["convert", "--input", str(src), "--output", out, "--format", "pdf"])
+    assert rc == 0
+    got = spark.read.parquet(out)
+    expect = extract_elements(read_pdf_docs(spark, str(src)))
+    assert got.columns == expect.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
+    assert {r["doc_id"] for r in got.select("doc_id").distinct().collect()} == {
+        "x.pdf", "y.pdf"}
+    assert got.where("page = 2").count() > 0
+
 def test_cli_search_bm25(spark, capsys):
     from pdf_extractor_spark.__main__ import main
 

@@ -126,3 +126,22 @@ def test_deterministic_across_runs(spark, small_corpus):
     a = extract_spans(df).orderBy("doc_id").collect()
     b = extract_spans(df).orderBy("doc_id").collect()
     assert a == b
+
+
+def test_nested_flat_view_evaluates_udf_once(spark):
+    """extracted_flat over the nested adapter evaluates the extract UDF
+    in one place. With a plain posexplode, Catalyst infers a
+    size(out_spans) > 0 filter and pushes it below the projection, so
+    the UDF ran once for the filter and again for the rows. An empty
+    and a blank doc are included: both extract to no rows either way."""
+    blank = [{"kind": "text", "text": "  ", "media_ref": "", "offset": 0}]
+    rows = corpus_rows(50, mega_every=6, mega_factor=8) + [
+        {"doc_id": "empty", "spans": []},
+        {"doc_id": "blank", "spans": blank},
+    ]
+    df = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
+    flat = extracted_flat(extract_spans(df))
+    plan = flat._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [") == 1, plan
+    expect = extract_elements(df)
+    assert sorted(map(tuple, flat.collect())) == sorted(map(tuple, expect.collect()))

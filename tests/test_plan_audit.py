@@ -500,3 +500,50 @@ def test_r5_tpch_close_plan_shapes(spark):
     # dimension broadcasts reach the joins
     for name in ("tpch_q11_important_stock", "tpch_q12_shipmode_priority"):
         assert "BroadcastHashJoin" in _plan(spark, name), name
+
+
+def _executed_node_names(spark, after_id, wait_s=10.0):
+    """Node names of each SQL execution with id > after_id, from the
+    status store (final plans; works with the UI off)."""
+    import time
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    deadline = time.monotonic() + wait_s
+    while True:
+        ex = store.executionsList()
+        items = [ex.apply(i) for i in range(ex.size())]
+        items = [e for e in items if e.executionId() > after_id]
+        if all(e.completionTime().isDefined() for e in items) or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    out = []
+    for e in items:
+        nodes = store.planGraph(e.executionId()).allNodes()
+        out.append([nodes.apply(i).name().strip() for i in range(nodes.size())])
+    return out
+
+
+def test_convert_write_is_one_scan_one_python_pass(spark, tmp_path):
+    """CLI convert reads, decodes and extracts each file once: the
+    executed write plan is one binaryFile scan feeding one MapInArrow,
+    with no Exchange."""
+    from pdf_extractor_spark.__main__ import main
+
+    src = tmp_path / "docs"
+    src.mkdir()
+    for i in range(6):
+        (src / f"d{i}.md").write_text(f"# Doc {i}\n\ntext {i}\n\n| a | b |\n| 1 | 2 |\n")
+    store = spark._jsparkSession.sharedState().statusStore()
+    ex = store.executionsList()
+    before = max((ex.apply(i).executionId() for i in range(ex.size())), default=-1)
+    assert main(["convert", "--input", str(src), "--output", str(tmp_path / "out")]) == 0
+    writes = [n for n in _executed_node_names(spark, before)
+              if "Execute InsertIntoHadoopFsRelationCommand" in n]
+    assert len(writes) == 1, writes
+    names = writes[0]
+    python_nodes = [n for n in names if n.startswith(
+        ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+         "FlatMapGroupsInPandas", "BatchEvalPython"))]
+    assert python_nodes == ["MapInArrow"], names
+    assert names.count("Scan binaryFile") == 1, names
+    assert not any(n.startswith("Exchange") for n in names), names

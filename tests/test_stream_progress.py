@@ -95,3 +95,41 @@ def test_progress_replay_idempotent(spark, tmp_path):
     assert [r["event"] for r in wave2] == (
         ["start"] + ["progress"] * 3 + ["complete"]
     )
+
+
+def test_progress_write_failure_leaves_error_event(spark, tmp_path):
+    """A wave whose flat-element write fails records an ``error`` event
+    before the query fails, as a failing extraction does."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from pdf_extractor_spark.streaming import (
+        read_progress_events,
+        stream_convert_progress,
+    )
+
+    inbox = str(tmp_path / "inbox")
+    events = str(tmp_path / "events")
+    _inbox_docs(spark, 0, 4).write.mode("overwrite").parquet(inbox)
+    # the output path is a regular file, so no batch dir can be made in it
+    out = tmp_path / "flat"
+    out.write_text("not a directory")
+
+    with pytest.raises(StreamingQueryException):
+        stream_convert_progress(spark, inbox, str(out), events, str(tmp_path / "ckpt"))
+    ev = read_progress_events(spark, events).collect()
+    assert [(r["epoch_id"], r["event"]) for r in ev] == [(0, "error")]
+    assert ev[0]["message"].startswith("Error during conversion: ")
+
+
+def test_progress_events_before_first_wave(spark, tmp_path):
+    """A subscriber that reads before any wave has created the events
+    dir gets the empty event frame, not FileNotFoundError."""
+    from pdf_extractor_spark.streaming import (
+        PROGRESS_EVENTS_SCHEMA,
+        read_progress_events,
+    )
+
+    ev = read_progress_events(spark, str(tmp_path / "events"))
+    assert ev.collect() == []
+    assert ev.schema == spark.createDataFrame([], PROGRESS_EVENTS_SCHEMA).schema
