@@ -58,7 +58,7 @@ def main() -> int:
         )
     docs = spark.read.parquet(corpus_path)
     n_docs = docs.count()
-    flat = extract_elements(docs, mega_span_threshold=2000)
+    flat = extract_elements(docs)
     # two warm passes: python workers spawn on the first, codegen/JIT
     # and executor-side caches settle on the second (measured: pass 2
     # is still ~20% slower than steady state on this host)

@@ -54,7 +54,6 @@ def fused_extracted_flat(
     spark: SparkSession,
     sf_dir: str,
     merge_strategy: str = "default",
-    mega_span_threshold: int = 2000,
 ) -> DataFrame:
     """Synthesis + extraction FUSED into one Arrow pass (R5 flagship
     increment): the span lists are born and consumed inside the same
@@ -65,17 +64,12 @@ def fused_extracted_flat(
     sandbox artifact of staging the synthetic corpus; profiling put
     the double conversion at ~2× the state-machine kernel itself.
 
-    Skew safety is unchanged: docs whose synthetic span count can
-    reach ``mega_span_threshold`` (the deterministic mega-id slice —
-    the sandbox stand-in for the ``size(spans)`` scan predicate the
-    parquet path pushes down) still route through
-    :func:`extract_elements`'s explode→shuffle mega path; only the
-    bounded majority extracts inline. Semantics are byte-identical:
-    both paths call ``docmodel.extract_document_cols`` (the single
-    semantic source, per CLAUDE.md) — pinned by
-    tests/test_extract_fused.py full-row equality vs the unfused
-    pipeline."""
-    from ..schema import ELEMENT_COLUMNS, FLAT_SCHEMA
+    Every doc, mega-ids included, goes through the shared emitter
+    ``operators.extract._flat_record_batch`` (so through
+    ``docmodel.extract_document_cols``, the single semantic source) —
+    pinned by tests/test_extract_fused.py full-row equality vs the
+    unfused pipeline."""
+    from ..schema import FLAT_SCHEMA
     from ..session import ensure_pyfiles
 
     ensure_pyfiles(spark)
@@ -90,87 +84,30 @@ def fused_extracted_flat(
         # would re-infer the nested list/struct columns per batch
         # (section_path, table_rows, code_functions), which measured
         # SLOWER than the two-stage pipeline it replaces
-        import pyarrow as pa
-
-        from ..docmodel import extract_document_cols
-        from ..operators.extract import _arrow_flat_schema
+        from ..operators.extract import (
+            _arrow_flat_schema,
+            _flat_record_batch,
+            _span_cols,
+        )
 
         schema = _arrow_flat_schema()
-        all_cols = ("doc_id", *ELEMENT_COLUMNS)
         for batch in batches:
-            ints = batch.column(0).to_pylist()
-            out: dict = {c: [] for c in all_cols}
-            id_col = out["doc_id"]
-            el_cols = [(c, out[c]) for c in ELEMENT_COLUMNS]
-            for i in ints:
-                spans = make_doc_spans(i, mega_every=50, mega_factor=20)
-                if len(spans) >= mega_span_threshold and i % 50 == 49:
-                    continue  # the skew branch below owns this doc
-                    # (exact complement of its predicate; non-mega-id
-                    # docs are ≤ ~60 spans by construction, so a tiny
-                    # threshold cannot strand an oversized doc here)
-                els = extract_document_cols(
-                    [s["kind"] for s in spans],
-                    [s["text"] for s in spans],
-                    [s["media_ref"] for s in spans],
-                    [s["offset"] for s in spans],
-                    merge_strategy,
+            docs = (
+                _span_cols(
+                    f"doc-{i:07d}", make_doc_spans(i, mega_every=50, mega_factor=20)
                 )
-                id_col.extend([f"doc-{i:07d}"] * len(els))
-                for c, col in el_cols:
-                    col.extend([el[c] for el in els])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out[c], type=schema.field(j).type)
-                    for j, c in enumerate(all_cols)
-                ],
-                schema=schema,
+                for i in batch.column(0).to_pylist()
             )
+            yield _flat_record_batch(docs, merge_strategy, schema)
 
-    fused = ids.mapInArrow(gen, schema=FLAT_SCHEMA)
-    # oversized docs: the deterministic mega-id predicate prunes the
-    # re-synthesis to the only ids that CAN exceed the threshold (the
-    # sandbox stand-in for the size(spans) scan predicate the parquet
-    # path pushes down), then the size filter routes exactly the
-    # over-threshold docs into the explode skew path — zero rows when
-    # none exceed (plan present, data absent), and the inline skip
-    # above partitions docs exactly (same len(spans) predicate)
-    from ..operators.extract import _extract_mega_flat
-
-    mega_ids = ids.where(F.col("doc_id") % 50 == 49)
-    mega_corpus = spans_corpus_from_documents_ids(spark, mega_ids).where(
-        F.size("spans") >= mega_span_threshold
-    )
-    return fused.unionByName(_extract_mega_flat(mega_corpus, merge_strategy))
-
-
-def spans_corpus_from_documents_ids(spark: SparkSession, ids: DataFrame) -> DataFrame:
-    """Span synthesis over an explicit doc_id frame (the mega slice of
-    the fused path; same generator as spans_corpus_from_documents)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ints = pdf["doc_id"].astype("int64").tolist()
-            if not ints:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": [f"doc-{i:07d}" for i in ints],
-                    "spans": [
-                        make_doc_spans(i, mega_every=50, mega_factor=20)
-                        for i in ints
-                    ],
-                }
-            )
-
-    return ids.mapInPandas(gen, schema=DOCS_SCHEMA)
+    return ids.mapInArrow(gen, schema=FLAT_SCHEMA)
 
 
 def extract_elements_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: full extraction pipeline → exploded element view
     (fused synthesis+extraction — one Python crossing, the production
     scan→extract shape)."""
-    flat = fused_extracted_flat(spark, sf_dir, mega_span_threshold=2000)
+    flat = fused_extracted_flat(spark, sf_dir)
     return flat.select(
         "doc_id", "offset", "kind", "media_ref", "page", "section_id"
     )
@@ -178,7 +115,7 @@ def extract_elements_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def extract_kind_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 — element-type histogram over the extracted corpus."""
-    flat = fused_extracted_flat(spark, sf_dir, mega_span_threshold=2000)
+    flat = fused_extracted_flat(spark, sf_dir)
     return flat.groupBy("kind").agg(F.count("*").alias("n"))
 
 
@@ -188,7 +125,7 @@ def merged_tables_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.table_merge import merge_tables_native
 
     corpus = spans_corpus_from_documents(spark, sf_dir)
-    flat = extract_elements(corpus, merge_strategy="none", mega_span_threshold=2000)
+    flat = extract_elements(corpus, merge_strategy="none")
     merged = merge_tables_native(flat)
     return merged.select(
         "doc_id",
@@ -265,7 +202,7 @@ def table_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quality import with_table_quality
 
     corpus = spans_corpus_from_documents(spark, sf_dir)
-    flat = extract_elements(corpus, mega_span_threshold=2000)
+    flat = extract_elements(corpus)
     return with_table_quality(flat)
 
 
@@ -275,7 +212,7 @@ def search_extracted_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs in ArangoDB; here it is a DataFrame pipeline over the
     extraction output)."""
     corpus = spans_corpus_from_documents(spark, sf_dir)
-    flat = extract_elements(corpus, mega_span_threshold=2000)
+    flat = extract_elements(corpus)
     text_docs = (
         flat.filter(F.col("kind").isin("text", "heading"))
         .groupBy("doc_id")
@@ -347,7 +284,7 @@ def code_metadata_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     no extra shuffle, no UDF beyond the existing Arrow kernel.
     """
     corpus = spans_corpus_from_documents(spark, sf_dir)
-    flat = extract_elements(corpus, mega_span_threshold=2000)
+    flat = extract_elements(corpus)
     code = flat.filter(F.col("kind") == "code")
     first_fn = F.element_at("code_functions", 1)
     return code.select(

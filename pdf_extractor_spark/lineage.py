@@ -321,7 +321,6 @@ def run_with_lineage(
     n_buckets: int = 16,
     run_id: str = "run-0",
     merge_strategy: str = "default",
-    mega_span_threshold: int = 5_000,
     fail_after_buckets: Optional[int] = None,
     commit_mode: str = "per_bucket",
 ) -> dict[str, dict]:
@@ -367,9 +366,7 @@ def run_with_lineage(
     pending = bucketed.filter(F.col("bucket").isin([int(b) for b in todo])) if todo else None
     if pending is not None:
         extracted = extract_elements(
-            pending.drop("bucket"),
-            merge_strategy=merge_strategy,
-            mega_span_threshold=mega_span_threshold,
+            pending.drop("bucket"), merge_strategy=merge_strategy
         ).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
         if commit_mode == "batch":
             extracted = extracted.persist()

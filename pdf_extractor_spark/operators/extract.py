@@ -3,27 +3,26 @@
 Scale design (this is the 100 TB shape, not just the local[32] shape):
 
 * Extraction is per-document and stateless across documents, so the
-  main path is **map-only with zero shuffle**: an Arrow-batched
-  ``mapInPandas`` over the ``spans`` array column that emits the flat
-  element rows directly. 1000 executors scan their Iceberg/parquet
-  splits and write — no exchange anywhere in the plan, and no nested
-  struct-array construction + posexplode round trip (measured ~2×
-  faster than the nested variant at local[32]).
-* Skewed **mega-documents** (span count ≥ ``mega_span_threshold``) are
-  the one hazard: a handful of 1000×-median rows inside a batch blow up
-  Python-worker memory and straggle a partition. They are split out by
-  a cheap native ``size(spans)`` predicate (pushed into the scan),
-  exploded to one-row-per-span, shuffled by ``doc_id`` (this salt-like
-  explode spreads the *bytes* of the skewed minority across the
-  cluster), and re-assembled per doc in ``applyInPandas``. Only the
-  skewed tail pays a shuffle (SURVEY.md §4 custom-work items 1-3).
+  plan is **map-only with zero shuffle**: one ``mapInArrow`` over the
+  ``(doc_id, spans)`` rows emits the flat element rows directly. 1000
+  executors scan their Iceberg/parquet splits and write — no exchange
+  anywhere in the plan, and no nested struct-array construction +
+  posexplode round trip (measured ~2× faster than the nested variant
+  at local[32]).
+* Mega-documents take the same pass. The scan already holds a
+  mega-doc's whole ``spans`` array as one row in one task, and Spark
+  bounds each Arrow batch sent to Python by rows
+  (``arrow.maxRecordsPerBatch``, see ``session.py``) and by bytes
+  (``arrow.maxBytesPerBatch``). An explode → shuffle → regroup by
+  ``doc_id`` would gather the doc back into one Python worker, so it
+  would buy no memory bound and cost a per-span shuffle.
 * Files (CLI ``convert``) skip the ``(doc_id, spans)`` stage:
   :func:`extract_files` is one ``binaryFile`` scan feeding one
   ``mapInArrow`` pass that decodes and extracts each file once.
 * All tokenize/classify work happens inside Arrow batches — the plan
-  contains only ``MapInArrow``/``MapInPandas``/``ArrowEvalPython``/
-  ``FlatMapGroupsInPandas`` nodes, never row-at-a-time
-  ``BatchEvalPython`` (north-rule "zero per-row Python" requirement).
+  contains only ``MapInArrow``/``ArrowEvalPython`` nodes, never
+  row-at-a-time ``BatchEvalPython`` (north-rule "zero per-row Python"
+  requirement).
 
 Reference lifecycle being re-expressed: cli.py convert →
 process_pdf → extract_from_markdown token walk
@@ -41,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
 from ..docmodel import extract_document, extract_document_cols
-from ..schema import ELEMENT_COLUMNS, EXTRACTED_SCHEMA, FLAT_SCHEMA, OUT_SPAN_STRUCT
+from ..schema import ELEMENT_COLUMNS, FLAT_SCHEMA, OUT_SPAN_STRUCT
 from ..sources import SpansFn, binary_files, doc_id_from
 
 OUT_SPANS_TYPE = ArrayType(OUT_SPAN_STRUCT)
@@ -75,10 +74,8 @@ def _flat_record_batch(docs, merge_strategy: str, schema):
 
 
 def _flat_arrow_batches(merge_strategy: str):
-    """mapInArrow kernel: columnar span access — no per-span dicts, no
-    pandas round trip. ~25-40% less conversion overhead than the
-    mapInPandas variant on this corpus (kept below for the streaming
-    path, where mapInArrow is equivalent but pandas is fine)."""
+    """mapInArrow kernel over (doc_id, spans) batches: columnar span
+    access — no per-span dicts, no pandas round trip."""
 
     def gen(batches):
         import pyarrow as pa
@@ -107,106 +104,38 @@ def _flat_arrow_batches(merge_strategy: str):
 
 
 def _arrow_flat_schema():
-    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    return pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("kind", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("media_ref", pa.string()),
-            pa.field("offset", pa.int32()),
-            pa.field("page", pa.int32()),
-            pa.field("level", pa.int32()),
-            pa.field("token_count", pa.int32()),
-            pa.field("section_path", pa.list_(pa.string())),
-            pa.field("section_id", pa.string()),
-            pa.field("table_headers", pa.list_(pa.string())),
-            pa.field("table_rows", pa.list_(pa.list_(pa.string()))),
-            pa.field("is_multi_page", pa.bool_()),
-            pa.field("page_range", pa.string()),
-            pa.field("code_language", pa.string()),
-            pa.field(
-                "code_functions",
-                pa.list_(
-                    pa.struct(
-                        [
-                            pa.field("name", pa.string()),
-                            pa.field("params", pa.list_(pa.string())),
-                        ]
-                    )
-                ),
-            ),
-        ]
+    return to_arrow_schema(FLAT_SCHEMA)
+
+
+def _span_cols(doc_id: str, spans: list):
+    """Span dicts → the (doc_id, kinds, texts, media_refs, offsets)
+    tuple :func:`_flat_record_batch` consumes."""
+    return (
+        doc_id,
+        [s["kind"] for s in spans],
+        [s["text"] for s in spans],
+        [s["media_ref"] for s in spans],
+        [s["offset"] for s in spans],
     )
-
-
-def _flat_batches(merge_strategy: str):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict = {c: [] for c in ("doc_id", *ELEMENT_COLUMNS)}
-            for did, spans in zip(pdf["doc_id"], pdf["spans"]):
-                span_list = [] if spans is None else list(spans)
-                for el in extract_document(span_list, merge_strategy):
-                    out["doc_id"].append(did)
-                    for c in ELEMENT_COLUMNS:
-                        out[c].append(el[c])
-            if not out["doc_id"]:
-                # a batch whose docs all extract to nothing: pandas
-                # types the empty list columns float64 and Arrow cannot
-                # cast empty float64 → list<string> — yield nothing
-                continue
-            yield pd.DataFrame(out)
-
-    return gen
 
 
 def extract_elements(
     docs: DataFrame,
     merge_strategy: str = "default",
-    mega_span_threshold: int = 5_000,
+    mega_span_threshold: int | None = None,
 ) -> DataFrame:
     """docs(doc_id, spans) → one row per extracted element (flat).
 
     The offset column is the within-document element order (the
-    north-rule equality order). Map-only for ordinary docs; mega-docs
-    take the explode/shuffle skew path.
+    north-rule equality order). One map-only ``mapInArrow`` pass for
+    every document, batch or streaming. ``mega_span_threshold`` is
+    ignored; it is accepted only for callers that still pass it.
     """
-    n_spans = F.size("spans")
-    small = docs.filter(n_spans < mega_span_threshold)
-    small_out = small.select("doc_id", "spans").mapInArrow(
+    return docs.select("doc_id", "spans").mapInArrow(
         _flat_arrow_batches(merge_strategy), schema=FLAT_SCHEMA
     )
-    mega = docs.filter(n_spans >= mega_span_threshold)
-    mega_out = _extract_mega_flat(mega, merge_strategy)
-    return small_out.unionByName(mega_out)
-
-
-def _extract_mega_flat(mega: DataFrame, merge_strategy: str) -> DataFrame:
-    """Skew path: explode → shuffle by doc_id → reassemble per group.
-
-    Exploding turns one multi-MB row into thousands of small rows, so
-    the shuffle write of a mega-doc is spread over many map tasks and
-    AQE's skew handling sees ordinary-sized blocks. ``applyInPandas``
-    receives the whole document group and runs the same state machine,
-    emitting flat element rows.
-    """
-
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # null offsets arrive as NaN in pandas; docmodel's `or 0` guard
-        # doesn't catch NaN (truthy) and NaN sort order is unstable —
-        # map them to 0 up front, matching the flat path's null handling
-        pdf = pdf.assign(offset=pdf["offset"].fillna(0).astype("int64"))
-        pdf = pdf.sort_values("offset", kind="mergesort")
-        spans = pdf[["kind", "text", "media_ref", "offset"]].to_dict("records")
-        els = extract_document(spans, merge_strategy)
-        out: dict = {c: [e[c] for e in els] for c in ELEMENT_COLUMNS}
-        return pd.DataFrame({"doc_id": [pdf["doc_id"].iloc[0]] * len(els), **out})
-
-    exploded = mega.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"
-    )
-    return exploded.groupBy("doc_id").applyInPandas(run_group, schema=FLAT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -215,23 +144,16 @@ def _extract_mega_flat(mega: DataFrame, merge_strategy: str) -> DataFrame:
 
 
 def _file_arrow_batches(root: str, to_spans: SpansFn, merge_strategy: str):
-    def span_cols(path: str, payload: bytes):
-        spans = to_spans(payload)
-        return (
-            doc_id_from(path, root),
-            [s["kind"] for s in spans],
-            [s["text"] for s in spans],
-            [s["media_ref"] for s in spans],
-            [s["offset"] for s in spans],
-        )
-
     def gen(batches):
         schema = _arrow_flat_schema()
         for batch in batches:
             paths = batch.column(0).to_pylist()
             contents = batch.column(1)
             # one file's bytes in Python at a time, not the whole batch's
-            docs = (span_cols(p, contents[i].as_py()) for i, p in enumerate(paths))
+            docs = (
+                _span_cols(doc_id_from(p, root), to_spans(contents[i].as_py()))
+                for i, p in enumerate(paths)
+            )
             yield _flat_record_batch(docs, merge_strategy, schema)
 
     return gen
@@ -250,10 +172,6 @@ def extract_files(
     → spans: ``sources.text_to_spans`` or ``sources.pdf_to_spans``)
     and then ``extract_document_cols``. Each file is read and decoded
     once, with no exchange and no nested array in between.
-
-    There is no mega-doc branch here: ``binaryFile`` holds a whole file
-    in one row, and its spans exist only once it is decoded inside one
-    Python worker, so an explode/shuffle afterwards saves no memory.
     """
     files = binary_files(spark, path, glob).select("path", "content")
     return files.mapInArrow(
@@ -295,11 +213,7 @@ def make_extract_udf(merge_strategy: str = "default"):
     return extract_udf
 
 
-def extract_spans(
-    docs: DataFrame,
-    merge_strategy: str = "default",
-    mega_span_threshold: int = 5_000,
-) -> DataFrame:
+def extract_spans(docs: DataFrame, merge_strategy: str = "default") -> DataFrame:
     """docs(doc_id, spans) → (doc_id, out_spans), one row per document.
 
     Doc-level view for consumers that want the whole ordered sequence
@@ -307,31 +221,7 @@ def extract_spans(
     reference's per-doc output). The flat path is the throughput path.
     """
     udf = make_extract_udf(merge_strategy)
-    n_spans = F.size("spans")
-
-    small = docs.filter(n_spans < mega_span_threshold)
-    small_out = small.select("doc_id", udf(F.col("spans")).alias("out_spans"))
-
-    mega = docs.filter(n_spans >= mega_span_threshold)
-    mega_out = _extract_mega_nested(mega, merge_strategy)
-    return small_out.unionByName(mega_out)
-
-
-def _extract_mega_nested(mega: DataFrame, merge_strategy: str) -> DataFrame:
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # null offsets arrive as NaN in pandas; docmodel's `or 0` guard
-        # doesn't catch NaN (truthy) and NaN sort order is unstable —
-        # map them to 0 up front, matching the flat path's null handling
-        pdf = pdf.assign(offset=pdf["offset"].fillna(0).astype("int64"))
-        pdf = pdf.sort_values("offset", kind="mergesort")
-        spans = pdf[["kind", "text", "media_ref", "offset"]].to_dict("records")
-        out = extract_document(spans, merge_strategy)
-        return pd.DataFrame({"doc_id": [pdf["doc_id"].iloc[0]], "out_spans": [out]})
-
-    exploded = mega.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"
-    )
-    return exploded.groupBy("doc_id").applyInPandas(run_group, schema=EXTRACTED_SCHEMA)
+    return docs.select("doc_id", udf(F.col("spans")).alias("out_spans"))
 
 
 def extracted_flat(extracted: DataFrame) -> DataFrame:

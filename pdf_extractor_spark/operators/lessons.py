@@ -14,10 +14,13 @@ Mapping:
   ``offset = 0`` (the MERGE key pair);
 * ``lesson_<uuid4[:8]>`` auto-key  → ``lesson_<md5(fields)[:8]>``
   (disclosed deterministic stand-in — uuid4 is unreproducible by
-  design; shape and collision behavior preserved);
+  design; shape preserved, but two lessons with identical
+  problem/solution/project/module now share a key);
 * document insert                  → one copy-on-write MERGE commit
   (init_store on first write), so snapshots / time travel / vacuum
-  work on the lessons collection for free;
+  work on the lessons collection for free; an insert on an existing
+  key raises ValueError (the reference's duplicate-_key error)
+  instead of overwriting;
 * ``collection.get``               → :func:`lineage.point_lookup`
   (bucket pruning + clustered row-group skipping);
 * AQL list query                   → one filtered scan; the
@@ -153,11 +156,17 @@ def add_lesson(
 ) -> Dict[str, Any]:
     """Insert one lesson; returns the committed document (with _key).
     ValueError on missing required fields, first failure wins —
-    lessons_crud.py:68-72 semantics and message."""
+    lessons_crud.py:68-72 semantics and message. ValueError too when
+    the key is already taken (a custom key, or the content-derived auto
+    key of an identical lesson): the reference's insert raises on a
+    duplicate _key, so an add never overwrites — only
+    :func:`update_lesson` changes a stored lesson."""
     _validate(data)
     data = dict(data)
     if "_key" not in data:
         data["_key"] = _auto_key(data)
+    if get_lesson(spark, store_dir, data["_key"]) is not None:
+        raise ValueError(f"Lesson with key '{data['_key']}' already exists")
     if "created_date" not in data:
         data["created_date"] = date.today().strftime("%Y-%m-%d")
     data["embed_text"] = _embed_text(data)

@@ -70,13 +70,6 @@ OUT_SPAN_STRUCT = StructType(
     ]
 )
 
-EXTRACTED_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("out_spans", ArrayType(OUT_SPAN_STRUCT)),
-    ]
-)
-
 # element columns shared by the nested struct and the flat row schema
 ELEMENT_COLUMNS = tuple(f.name for f in OUT_SPAN_STRUCT.fields)
 

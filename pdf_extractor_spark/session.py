@@ -2,7 +2,7 @@
 
 Settings chosen for the 100 TB design point (SURVEY.md §4 "custom Spark
 work"): AQE on (runtime re-plan + skew-join splitting), Arrow transfer
-on with bounded batch sizes so a mega-document's span array cannot blow
+on with bounded batch sizes so a batch of large span arrays cannot blow
 an executor's Python worker (reference analog: the 1 GiB memory guard,
 table_extraction.py:59).
 """
@@ -102,13 +102,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # bound Arrow batches: mega-doc span arrays are large per row, so
-        # cap rows-per-batch (SURVEY.md §4 item 3). 1024 rows × the
-        # scalar path's 5k-span ceiling ≈ 320 MB worst-case batch per
-        # task (~2× in flight with the copy) — fits a 4 GB executor
-        # core; docs above the ceiling take the explode/applyInPandas
-        # skew path instead. Measured: 1024 is ~35% faster than 256 on
-        # the sf0.1 corpus (less per-batch overhead); 4096 regresses.
+        # bound Arrow batches by rows here (SURVEY.md §4 item 3); the
+        # byte bound is Spark's arrow.maxBytesPerBatch (default 64 MiB),
+        # which cuts a batch early when a few mega-doc span arrays fill
+        # it — every doc, mega or not, takes the one mapInArrow pass.
+        # Measured: 1024 is ~35% faster than 256 on the sf0.1 corpus
+        # (less per-batch overhead); 4096 regresses.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

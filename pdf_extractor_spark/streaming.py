@@ -7,24 +7,17 @@ new document files landing in a directory are extracted exactly once,
 with the stream checkpoint providing the resume guarantee (the
 streaming analog of the lineage table's anti-join).
 
-Map-only streaming: the extraction kernel is the same Arrow-batched
-``mapInPandas`` as the batch flat path, which is fully
-streaming-compatible (no stateful operator, no watermark needed).
-Mega-documents (``size(spans) >= mega_span_threshold``) are routed OUT
-of the scalar kernel to a side parquet "backfill topic" — the
-groupBy/applyInPandas skew path is not streamable without the
-state-store API, and a true mega-doc in the stream would blow the
-Arrow batch bound the batch path guards against. The batch
-:func:`backfill_merge` / :func:`backfill_extract` companions drain the
-topic through the batch skew path and land the same rows the batch
-pipeline would have produced.
+Map-only streaming: the extraction kernel is the batch
+:func:`operators.extract.extract_elements` itself — one ``mapInArrow``
+pass, fully streaming-compatible (no stateful operator, no watermark
+needed), for every document whatever its span count.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.extract import _flat_batches
+from .operators.extract import extract_elements
 from .schema import DOCS_SCHEMA, FLAT_SCHEMA
 
 
@@ -35,8 +28,6 @@ def stream_extract(
     checkpoint_dir: str,
     merge_strategy: str = "default",
     max_files_per_trigger: int | None = None,
-    mega_span_threshold: int | None = None,
-    backfill_dir: str | None = None,
 ):
     """Watch ``input_dir`` for parquet docs, extract, append parquet.
 
@@ -44,34 +35,11 @@ def stream_extract(
     then stop — so callers (and tests) invoke it per micro-batch wave;
     a long-running deployment would use a processingTime trigger
     instead. Returns the finished StreamingQuery.
-
-    With ``mega_span_threshold`` + ``backfill_dir`` set, mega-docs skip
-    the scalar kernel and land raw in the backfill topic (their own
-    checkpoint under ``<checkpoint_dir>_mega``); drain with
-    :func:`backfill_extract`.
     """
-    from pyspark.sql import functions as F
-
     reader = spark.readStream.schema(DOCS_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir)
-    if mega_span_threshold is not None:
-        if backfill_dir is None:
-            raise ValueError("mega_span_threshold requires backfill_dir")
-        mega_q = (
-            docs.filter(F.size("spans") >= mega_span_threshold)
-            .writeStream.format("parquet")
-            .option("path", backfill_dir)
-            .option("checkpointLocation", checkpoint_dir + "_mega")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        docs = docs.filter(F.size("spans") < mega_span_threshold)
-    else:
-        mega_q = None
-    flat = docs.mapInPandas(_flat_batches(merge_strategy), schema=FLAT_SCHEMA)
+    flat = extract_elements(reader.parquet(input_dir), merge_strategy)
     query = (
         flat.writeStream.format("parquet")
         .option("path", output_dir)
@@ -81,89 +49,13 @@ def stream_extract(
         .start()
     )
     query.awaitTermination()
-    if mega_q is not None:
-        mega_q.awaitTermination()
     return query
 
 
-def backfill_extract(
-    spark: SparkSession,
-    backfill_dir: str,
-    output_dir: str,
-    merge_strategy: str = "default",
-    mega_span_threshold: int = 5_000,
-) -> int:
-    """Drain :func:`stream_extract`'s backfill topic through the BATCH
-    skew path (explode → shuffle by doc_id → ``applyInPandas``) and
-    append the flat rows to ``<output_dir>_backfill`` (a sibling of the
-    streaming sink — the sink's _spark_metadata log owns ``output_dir``
-    itself; :func:`read_stream_output` unions the two). Returns docs
-    drained. Consumed raw files are deleted after the append commits; a
-    crash between the two replays the backfill (at-least-once append —
-    the keyed store via :func:`backfill_merge` is the exactly-once
-    face).
-    """
-    import os
-
-    from .operators.extract import extract_elements
-
-    # the mega topic is a streaming parquet SINK, so its directory
-    # carries a _spark_metadata transaction log; a directory read would
-    # list files from that log — including files a previous drain
-    # already consumed and deleted, wedging every later drain with
-    # FILE_NOT_EXIST. Read the pending part files EXPLICITLY (a
-    # file-list read never consults the sink log), so drained+deleted
-    # files simply stop appearing.
-    pending = _backfill_files(backfill_dir)
-    if not pending:
-        return 0
-    raw = spark.read.schema(DOCS_SCHEMA).parquet(*pending)
-    n_docs = raw.count()
-    if n_docs == 0:
-        return 0
-    flat = extract_elements(
-        raw.select("doc_id", "spans"),
-        merge_strategy=merge_strategy,
-        mega_span_threshold=mega_span_threshold,
-    )
-    flat.write.mode("append").parquet(output_dir + "_backfill")
-    for path in pending:
-        if os.path.exists(path):
-            os.remove(path)
-    return n_docs
-
-
-def _backfill_files(path: str) -> list[str]:
-    import os
-
-    if not os.path.isdir(path):
-        return []
-    return sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-
-
-def _has_parquet(path: str) -> bool:
-    import os
-
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    )
-
-
 def read_stream_output(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Unified view of the streaming sink plus any batch-backfilled
-    flat rows. The two live in separate directories because a
-    streaming parquet sink owns its directory via the _spark_metadata
-    transaction log — batch files appended there would be invisible to
-    (batch and streaming) readers of the sink."""
-    out = spark.read.schema(FLAT_SCHEMA).parquet(output_dir)
-    side = output_dir + "_backfill"
-    if _has_parquet(side):
-        out = out.unionByName(spark.read.schema(FLAT_SCHEMA).parquet(side))
-    return out
+    """Batch view of :func:`stream_extract`'s sink (the reader follows
+    the sink's _spark_metadata log, so only committed files show)."""
+    return spark.read.schema(FLAT_SCHEMA).parquet(output_dir)
 
 
 def stream_windowed_event_counts(
@@ -365,8 +257,6 @@ def stream_extract_merge(
     store_dir: str,
     checkpoint_dir: str,
     merge_strategy: str = "default",
-    mega_span_threshold: int | None = None,
-    backfill_dir: str | None = None,
 ):
     """CDC-style incremental extraction: new/updated document files are
     extracted and MERGED into an existing lineage store by
@@ -391,13 +281,6 @@ def stream_extract_merge(
     extraction, keeping the newest source file (modification time,
     path as tie-break); extraction runs on the deduped batch inside
     ``foreachBatch`` as a plain batch job.
-
-    With ``mega_span_threshold`` + ``backfill_dir`` set, mega-docs in
-    the stream bypass the scalar kernel: their newest version is
-    appended raw to the backfill topic, to be drained by
-    :func:`backfill_merge` through the batch skew path. Run
-    backfill_merge before the next wave re-delivers those docs —
-    the store applies merges in arrival order (last merge wins).
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -419,35 +302,22 @@ def stream_extract_merge(
         w = Window.partitionBy("doc_id").orderBy(
             F.desc("_mtime"), F.desc("_fpath")
         )
-        # persist the deduped batch: the mega split probes it twice and
-        # _merge_flat_into_store pulls it again — without the cache the
-        # row_number shuffle re-runs up to ~5× per micro-batch
+        # persist the deduped batch: extraction reads it and
+        # _merge_flat_into_store pulls it again for the stale keys —
+        # without the cache the row_number shuffle re-runs per use
         latest = (
             batch_df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select("doc_id", "spans", "_mtime", "_fpath")
+            .select("doc_id", "spans")
         ).persist()
-        cached = latest  # the persisted frame (latest is re-bound below)
         try:
-            if mega_span_threshold is not None:
-                if backfill_dir is None:
-                    raise ValueError("mega_span_threshold requires backfill_dir")
-                n_spans = F.size("spans")
-                mega = latest.filter(n_spans >= mega_span_threshold)
-                if not mega.isEmpty():
-                    mega.write.mode("append").parquet(backfill_dir)
-                latest = latest.filter(n_spans < mega_span_threshold)
-                if latest.isEmpty():
-                    return
-            flat = latest.select("doc_id", "spans").mapInPandas(
-                _flat_batches(merge_strategy), schema=FLAT_SCHEMA
-            ).persist()
+            flat = extract_elements(latest, merge_strategy).persist()
             try:
                 _merge_flat_into_store(sess, store_dir, latest, flat)
             finally:
                 flat.unpersist()
         finally:
-            cached.unpersist()
+            latest.unpersist()
 
     query = (
         docs.writeStream.foreachBatch(merge_batch)
@@ -457,65 +327,6 @@ def stream_extract_merge(
     )
     query.awaitTermination()
     return query
-
-
-def backfill_merge(
-    spark: SparkSession,
-    backfill_dir: str,
-    store_dir: str,
-    merge_strategy: str = "default",
-    mega_span_threshold: int = 5_000,
-) -> int:
-    """Drain :func:`stream_extract_merge`'s mega-doc backfill topic into
-    the keyed store through the BATCH skew path, leaving the store in
-    exactly the state batch extraction of those docs would produce.
-
-    Dedups newest-per-doc across every pending backfill row (same
-    (_mtime, _fpath) order as the stream), extracts via
-    ``extract_elements`` (explode → shuffle → ``applyInPandas`` for the
-    mega tail, so no single Arrow batch owns a mega-doc), then lands
-    one atomic MERGE commit (upsert + stale-tail delete). Consumed raw
-    files are deleted only after the merge commits; a crash in between
-    replays the backfill — the keyed merge is idempotent, so the replay
-    converges. Returns number of docs merged.
-    """
-    import os
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    if not _has_parquet(backfill_dir):
-        return 0
-    raw = spark.read.parquet(backfill_dir)
-    consumed = raw.inputFiles()
-    w = Window.partitionBy("doc_id").orderBy(F.desc("_mtime"), F.desc("_fpath"))
-    latest = (
-        raw.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "spans")
-        .persist()
-    )
-    try:
-        n_docs = latest.count()
-        if n_docs > 0:
-            from .operators.extract import extract_elements
-
-            flat = extract_elements(
-                latest,
-                merge_strategy=merge_strategy,
-                mega_span_threshold=mega_span_threshold,
-            ).persist()
-            try:
-                _merge_flat_into_store(spark, store_dir, latest, flat)
-            finally:
-                flat.unpersist()
-    finally:
-        latest.unpersist()
-    for f in consumed:
-        path = f.removeprefix("file:")
-        if os.path.exists(path):
-            os.remove(path)
-    return n_docs
 
 
 def stream_dedup_exact(
@@ -868,8 +679,6 @@ def stream_convert_progress(
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-
-    from .operators.extract import extract_elements
 
     docs = spark.readStream.schema(DOCS_SCHEMA).parquet(input_dir)
 

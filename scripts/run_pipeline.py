@@ -33,7 +33,6 @@ def main() -> int:
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--merge-strategy", default="default",
                     choices=["default", "conservative", "aggressive", "none"])
-    ap.add_argument("--mega-span-threshold", type=int, default=5000)
     ap.add_argument("--run-id", default=None)
     args = ap.parse_args()
 
@@ -71,7 +70,6 @@ def main() -> int:
         n_buckets=args.buckets,
         run_id=run_id,
         merge_strategy=args.merge_strategy,
-        mega_span_threshold=args.mega_span_threshold,
     )
     wall = time.time() - t0
     from pdf_extractor_spark.lineage import META_KEY

@@ -135,7 +135,7 @@ def main() -> int:
     rss_start = rss_mb()
 
     # --- 1. headline extraction at 48x ---------------------------------
-    flat = extract_elements(docs, mega_span_threshold=2000)
+    flat = extract_elements(docs)
     flat.count()  # warm pass: python-worker spinup priced out (long-running-cluster steady state)
     n_elements = phase("extract_elements", flat.count)
     report["docs_per_sec_extract"] = round(

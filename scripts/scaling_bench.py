@@ -48,9 +48,8 @@ effects). Spark's plan adds roughly 10% relative loss on that ceiling.
 
 The scalar extraction path is **map-only**: scan → Arrow batch →
 extraction kernel → flat rows; no exchange, no driver-side loop, no
-global synchronization (docs/PLANS.md §1, tests/test_plan_audit.py).
-Only mega-documents (≥5k spans) shuffle, and they enter the exchange
-pre-exploded so no task owns a hot key. On a real 1000-executor
+global synchronization (docs/PLANS.md §1, tests/test_plan_audit.py),
+for mega-documents too. On a real 1000-executor
 cluster — where N vs 4N means more *machines*, not more contention
 for one socket's memory bus — partition-parallel throughput scales
 with executors by construction.

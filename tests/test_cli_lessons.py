@@ -65,6 +65,25 @@ def test_lessons_add_auto_key_and_validation(spark, tmp_path, capsys):
     )
 
 
+def test_lessons_add_existing_key_leaves_first_lesson(spark, tmp_path, capsys):
+    """A second add with the same --key is refused (exit 1) and the
+    stored lesson is still the first one: add never overwrites."""
+    from pdf_extractor_spark.__main__ import main
+
+    store = str(tmp_path / "lessons")
+    assert _add(main, store, "lesson_dup", "first problem") == 0
+    capsys.readouterr()
+    rc = _add(main, store, "lesson_dup", "second problem", project="proj-b")
+    assert rc == 1
+    assert "already exists" in capsys.readouterr().out
+
+    assert main(["lessons", "get", "lesson_dup", "--store", store]) == 0
+    doc = json.loads(capsys.readouterr().out)
+    assert doc["problem"] == "first problem"
+    assert doc["solution"] == "solution for first problem"
+    assert doc["project"] == "proj-a"
+
+
 def test_lessons_list_filters(spark, tmp_path, capsys):
     from pdf_extractor_spark.__main__ import main
 

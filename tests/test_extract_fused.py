@@ -28,25 +28,23 @@ def test_fused_equals_unfused_full_rows(spark):
     )
     from pdf_extractor_spark.operators.extract import extract_elements
 
-    fused = fused_extracted_flat(spark, SF, mega_span_threshold=2000)
-    unfused = extract_elements(
-        spans_corpus_from_documents(spark, SF), mega_span_threshold=2000
-    )
+    fused = fused_extracted_flat(spark, SF)
+    unfused = extract_elements(spans_corpus_from_documents(spark, SF))
     a, b = _rows(fused), _rows(unfused)
     assert len(a) == len(b) > 0
     assert a == b
 
 
-def test_fused_mega_slice_routes_through_skew_path(spark):
-    """The mega-id slice must still reach extract_elements (its
-    explode→shuffle guard), and fused output covers those docs."""
+def test_fused_covers_mega_id_slice(spark):
+    """The mega-id docs extract inline in the fused pass like every
+    other doc: the fused output covers them."""
     from pyspark.sql import functions as F
 
     from pdf_extractor_spark.analytics.extraction_queries import (
         fused_extracted_flat,
     )
 
-    flat = fused_extracted_flat(spark, SF, mega_span_threshold=2000)
+    flat = fused_extracted_flat(spark, SF)
     mega_ids = {
         r["doc_id"]
         for r in flat.select("doc_id")

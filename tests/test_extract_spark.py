@@ -25,9 +25,9 @@ def small_corpus(spark):
 
 def test_span_sequence_equality(spark, small_corpus):
     """North rule: exact (kind, text, media_ref, order) equality per doc,
-    across both the scalar path and the mega-doc skew path."""
+    ordinary and mega-docs alike."""
     rows, df = small_corpus
-    ext = extract_spans(df, mega_span_threshold=120)
+    ext = extract_spans(df)
     got = {r["doc_id"]: r for r in ext.collect()}
     assert len(got) == len(rows)
     for row in rows:
@@ -40,7 +40,7 @@ def test_span_sequence_equality(spark, small_corpus):
 
 def test_flat_view_order_and_metadata(spark, small_corpus):
     rows, df = small_corpus
-    flat = extracted_flat(extract_spans(df, mega_span_threshold=120))
+    flat = extracted_flat(extract_spans(df))
     one = (
         flat.filter(F.col("doc_id") == rows[0]["doc_id"])
         .orderBy("offset")
@@ -54,7 +54,7 @@ def test_flat_view_order_and_metadata(spark, small_corpus):
 
 def test_plan_is_arrow_only(spark, small_corpus):
     """Zero per-row Python: the plan must use Arrow-vectorized eval
-    (ArrowEvalPython / FlatMapGroupsInPandas), never BatchEvalPython."""
+    (ArrowEvalPython), never BatchEvalPython."""
     _, df = small_corpus
     plan = extract_spans(df)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
@@ -62,24 +62,18 @@ def test_plan_is_arrow_only(spark, small_corpus):
 
 
 def test_scalar_path_has_no_shuffle(spark, small_corpus):
-    """The non-skew path must be map-only: no Exchange in the plan."""
+    """The nested path must be map-only: no Exchange in the plan."""
     _, df = small_corpus
-    small_only = df.filter(F.size("spans") < 10_000_000)
-    from pdf_extractor_spark.operators.extract import make_extract_udf
-
-    out = small_only.select(
-        "doc_id", make_extract_udf()(F.col("spans")).alias("out_spans")
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = extract_spans(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
 
 def test_flat_path_matches_oracle(spark, small_corpus):
     """The direct-to-flat performance path produces the identical
     (kind, text, media_ref, order) sequences as the pure-Python oracle,
-    across both the map-only and the mega-doc skew path."""
+    ordinary and mega-docs alike."""
     rows, df = small_corpus
-    flat = extract_elements(df, mega_span_threshold=120)
+    flat = extract_elements(df)
     got: dict = {}
     for r in flat.collect():
         got.setdefault(r["doc_id"], []).append(r)
@@ -95,30 +89,44 @@ def test_flat_path_matches_oracle(spark, small_corpus):
 
 def test_flat_path_matches_nested_path(spark, small_corpus):
     _, df = small_corpus
-    a = extract_elements(df, mega_span_threshold=120)
-    b = extracted_flat(extract_spans(df, mega_span_threshold=120))
+    a = extract_elements(df)
+    b = extracted_flat(extract_spans(df))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_flat_plan_is_map_only_and_arrow(spark, small_corpus):
-    """Scalar flat path: no Exchange (map-only), no BatchEvalPython."""
+    """Flat path, mega-docs included: no Exchange (map-only), no
+    BatchEvalPython."""
     _, df = small_corpus
-    small_only = df.filter(F.size("spans") < 10_000_000)
-    out = extract_elements(small_only, mega_span_threshold=10_000_000)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = extract_elements(df)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
-    # the union includes the (empty) mega branch whose groupBy shuffles;
-    # the small branch itself must stay exchange-free: check its side
-    small_branch = small_only.select("doc_id", "spans").mapInPandas(
-        __import__(
-            "pdf_extractor_spark.operators.extract", fromlist=["_flat_batches"]
-        )._flat_batches("default"),
-        schema=__import__(
-            "pdf_extractor_spark.schema", fromlist=["FLAT_SCHEMA"]
-        ).FLAT_SCHEMA,
-    )
-    plan2 = small_branch._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan2
+    assert "Exchange" not in plan
+
+
+def test_mega_doc_tied_and_null_offsets_match_oracle(spark):
+    """One doc of 20k+ spans of every input kind, shuffled, with runs of
+    tied offsets and some null ones — the one place order is easy to
+    lose. Ties keep their input order and null sorts as 0 (docmodel's
+    stable sort); the flat and the nested path both match the oracle."""
+    import random
+
+    from pdf_extractor_spark.corpus import make_doc_spans
+
+    spans = make_doc_spans(3, mega_every=1, mega_factor=1000)
+    random.Random(7).shuffle(spans)
+    spans = [
+        {**sp, "offset": None if i % 97 == 0 else sp["offset"] // 4}
+        for i, sp in enumerate(spans)
+    ]
+    assert len(spans) >= 20_000
+    assert len({sp["kind"] for sp in spans}) >= 6
+    df = spark.createDataFrame([{"doc_id": "mega", "spans": spans}], schema=DOCS_SCHEMA)
+    expect = tuples(extract_document(spans))
+
+    flat = extract_elements(df).orderBy("offset").collect()
+    assert [(r["kind"], r["text"], r["media_ref"], r["offset"]) for r in flat] == expect
+    (nested,) = extract_spans(df).collect()
+    assert tuples([e.asDict() for e in nested["out_spans"]]) == expect
 
 
 def test_deterministic_across_runs(spark, small_corpus):

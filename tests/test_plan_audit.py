@@ -547,3 +547,29 @@ def test_convert_write_is_one_scan_one_python_pass(spark, tmp_path):
     assert python_nodes == ["MapInArrow"], names
     assert names.count("Scan binaryFile") == 1, names
     assert not any(n.startswith("Exchange") for n in names), names
+
+
+def test_extract_elements_is_one_python_pass(spark, tmp_path):
+    """Every document, mega-docs included, takes one map-only pass: the
+    executed plan of an extract_elements write has Python nodes exactly
+    [MapInArrow] and no Exchange."""
+    from pdf_extractor_spark.corpus import corpus_rows
+    from pdf_extractor_spark.operators.extract import extract_elements
+    from pdf_extractor_spark.schema import DOCS_SCHEMA
+
+    src = str(tmp_path / "docs")
+    rows = corpus_rows(24, mega_every=6, mega_factor=40)
+    spark.createDataFrame(rows, schema=DOCS_SCHEMA).write.parquet(src)
+    store = spark._jsparkSession.sharedState().statusStore()
+    ex = store.executionsList()
+    before = max((ex.apply(i).executionId() for i in range(ex.size())), default=-1)
+    extract_elements(spark.read.parquet(src)).write.parquet(str(tmp_path / "out"))
+    writes = [n for n in _executed_node_names(spark, before)
+              if "Execute InsertIntoHadoopFsRelationCommand" in n]
+    assert len(writes) == 1, writes
+    names = writes[0]
+    python_nodes = [n for n in names if n.startswith(
+        ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+         "FlatMapGroupsInPandas", "BatchEvalPython"))]
+    assert python_nodes == ["MapInArrow"], names
+    assert not any(n.startswith("Exchange") for n in names), names

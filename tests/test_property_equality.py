@@ -78,7 +78,7 @@ def test_spark_pipeline_matches_oracle(spark, docs):
     ]
     df = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
     got: dict = {}
-    for r in extract_elements(df, mega_span_threshold=15).collect():
+    for r in extract_elements(df).collect():
         got.setdefault(r["doc_id"], []).append(
             (r["kind"], r["text"], r["media_ref"], r["offset"])
         )

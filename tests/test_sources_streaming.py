@@ -394,119 +394,49 @@ def test_stream_merge_empty_redelivery_removes_all_elements(spark, tmp_path):
     assert after.count() == n_before - n_doc
 
 
-def test_stream_merge_mega_doc_routes_to_backfill(spark, tmp_path):
-    """A mega-doc in the CDC stream must NOT go through the scalar
-    Arrow kernel: it lands raw in the backfill topic while small docs
-    merge normally; backfill_merge then drains it through the batch
-    skew path, leaving the store identical to batch extraction."""
+def test_stream_extract_and_merge_take_large_doc_inline(spark, tmp_path):
+    """A wave holding a doc of thousands of spans runs through the same
+    map-only kernel as every other doc, in both streaming faces: the
+    append sink (stream_extract) and the keyed-store CDC merge
+    (stream_extract_merge). Each result equals the oracle per doc."""
     from pyspark.sql import functions as F
 
-    from pdf_extractor_spark.corpus import corpus_rows
-    from pdf_extractor_spark.docmodel import extract_document
+    from pdf_extractor_spark.corpus import make_doc_spans
     from pdf_extractor_spark.lineage import read_output, run_with_lineage
-    from pdf_extractor_spark.schema import DOCS_SCHEMA
-    from pdf_extractor_spark.streaming import backfill_merge, stream_extract_merge
+    from pdf_extractor_spark.streaming import stream_extract_merge
 
-    store = str(tmp_path / "store")
+    rows = corpus_rows(4)
+    big = make_doc_spans(5, mega_every=1, mega_factor=100)
+    assert len(big) >= 2000
+    wave = rows[1:] + [{"doc_id": rows[0]["doc_id"], "spans": big}]
+
+    def elements(df, doc_id):
+        got = df.filter(F.col("doc_id") == doc_id).orderBy("offset").collect()
+        return [(r["kind"], r["text"], r["media_ref"], r["offset"]) for r in got]
+
+    def check(df):
+        for row in wave:
+            want = extract_document(row["spans"])
+            assert elements(df, row["doc_id"]) == [
+                (e["kind"], e["text"], e["media_ref"], e["offset"]) for e in want
+            ], row["doc_id"]
+
     inbox = str(tmp_path / "inbox")
-    ckpt = str(tmp_path / "ckpt")
-    backfill = str(tmp_path / "backfill")
-    rows = corpus_rows(8)
+    spark.createDataFrame(wave, schema=DOCS_SCHEMA).coalesce(1).write.parquet(inbox)
+
+    out = str(tmp_path / "out")
+    stream_extract(spark, inbox, out, str(tmp_path / "ckpt"))
+    flat = read_stream_output(spark, out)
+    check(flat)
+    assert flat.count() == sum(len(extract_document(r["spans"])) for r in wave)
+
+    # the store starts from the small version of the big doc; the wave
+    # replaces it
+    store = str(tmp_path / "store")
     base = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
     run_with_lineage(spark, base, store, n_buckets=2, run_id="seed")
-    mega_doc, small_doc = rows[0]["doc_id"], rows[1]["doc_id"]
-    n_mega_before = (
-        read_output(spark, store).filter(F.col("doc_id") == mega_doc).count()
-    )
-
-    mega_spans = [
-        {"kind": "text", "text": f"mega paragraph {i}", "media_ref": "", "offset": i}
-        for i in range(60)
-    ]
-    wave = [
-        {"doc_id": mega_doc, "spans": mega_spans},
-        {"doc_id": small_doc, "spans": [
-            {"kind": "text", "text": "small edit", "media_ref": "", "offset": 0}]},
-    ]
-    spark.createDataFrame(wave, schema=DOCS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(inbox)
-    stream_extract_merge(
-        spark, inbox, store, ckpt,
-        mega_span_threshold=50, backfill_dir=backfill,
-    )
-
-    mid = read_output(spark, store)
-    # small doc merged in-stream; mega doc untouched (old version served)
-    assert mid.filter(F.col("doc_id") == small_doc).count() == 1
-    assert mid.filter(F.col("doc_id") == mega_doc).count() == n_mega_before
-    raw = spark.read.parquet(backfill)
-    assert raw.filter(F.col("doc_id") == mega_doc).count() == 1
-    assert raw.count() == 1  # small doc did NOT leak into the topic
-
-    n = backfill_merge(spark, backfill, store, mega_span_threshold=50)
-    assert n == 1
-    got = (
-        read_output(spark, store)
-        .filter(F.col("doc_id") == mega_doc)
-        .orderBy("offset")
-        .collect()
-    )
-    # store state == batch extraction of the mega doc (span equality)
-    want = extract_document(mega_spans)
-    assert [(r["kind"], r["text"], r["offset"]) for r in got] == [
-        (e["kind"], e["text"], e["offset"]) for e in want
-    ]
-    # topic drained; a second drain is a no-op
-    assert backfill_merge(spark, backfill, store, mega_span_threshold=50) == 0
-
-
-def test_stream_extract_mega_doc_side_path_and_backfill(spark, tmp_path):
-    """Plain streaming extraction (append sink): mega-docs divert to
-    the backfill topic, backfill_extract appends them via the batch
-    skew path; union equals batch extraction of the whole wave."""
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.corpus import corpus_rows
-    from pdf_extractor_spark.docmodel import extract_document
-    from pdf_extractor_spark.schema import DOCS_SCHEMA
-    from pdf_extractor_spark.streaming import (
-        backfill_extract,
-        read_stream_output,
-        stream_extract,
-    )
-
-    inbox = str(tmp_path / "inbox")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    backfill = str(tmp_path / "backfill")
-    rows = corpus_rows(6)
-    mega_spans = [
-        {"kind": "text", "text": f"mega p{i}", "media_ref": "", "offset": i}
-        for i in range(120)
-    ]
-    rows.append({"doc_id": "mega-doc-1", "spans": mega_spans})
-    spark.createDataFrame(rows, schema=DOCS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(inbox)
-
-    stream_extract(
-        spark, inbox, out, ckpt,
-        mega_span_threshold=100, backfill_dir=backfill,
-    )
-    flat = read_stream_output(spark, out)
-    assert flat.filter(F.col("doc_id") == "mega-doc-1").count() == 0
-    n = backfill_extract(spark, backfill, out, mega_span_threshold=100)
-    assert n == 1
-    flat2 = read_stream_output(spark, out)
-    got = flat2.filter(F.col("doc_id") == "mega-doc-1").orderBy("offset").collect()
-    want = extract_document(mega_spans)
-    assert [(r["kind"], r["text"]) for r in got] == [
-        (e["kind"], e["text"]) for e in want
-    ]
-    total_want = sum(len(extract_document(r["spans"])) for r in rows)
-    assert flat2.count() == total_want
-    assert backfill_extract(spark, backfill, out, mega_span_threshold=100) == 0
+    stream_extract_merge(spark, inbox, store, str(tmp_path / "ckpt_merge"))
+    check(read_output(spark, store))
 
 
 def test_stream_dedup_exact_drops_content_duplicates(spark, tmp_path):
