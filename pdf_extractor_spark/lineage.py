@@ -27,7 +27,7 @@ import re
 import shutil
 import time
 from contextlib import contextmanager
-from typing import Optional
+from typing import Callable, Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -321,25 +321,14 @@ def run_with_lineage(
     n_buckets: int = 16,
     run_id: str = "run-0",
     merge_strategy: str = "default",
-    fail_after_buckets: Optional[int] = None,
-    commit_mode: str = "per_bucket",
 ) -> dict[str, dict]:
     """Extract ``docs`` bucket-by-bucket with resumable lineage.
 
     Re-invoking with the same ``output_dir`` skips completed buckets
-    (anti-join against the lineage manifest). ``fail_after_buckets``
-    exists for crash-injection tests.
-
-    ``commit_mode``:
-    * ``per_bucket`` — one write + lineage commit per bucket, finest
-      resume granularity (a crash loses at most one bucket's work);
-      costs one Spark job per bucket.
-    * ``batch`` — ONE Spark job writes every pending bucket via
-      dynamic partition overwrite (``partitionBy(bucket)``), then all
-      lineage rows commit together. The scale mode: no driver-side
-      job-per-bucket loop; a crash before the commit point redoes the
-      whole pending wave (still idempotent — dynamic overwrite
-      replaces only pending partitions).
+    (anti-join against the lineage manifest). Each bucket is one write
+    followed by its own lineage commit, so a crash loses at most the
+    bucket in flight: a bucket written but not committed is redone
+    (overwritten) by the next run.
 
     Returns the lineage manifest {bucket: {status, row_count, bytes,
     wall_ms, run_id}}.
@@ -368,44 +357,9 @@ def run_with_lineage(
         extracted = extract_elements(
             pending.drop("bucket"), merge_strategy=merge_strategy
         ).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-        if commit_mode == "batch":
-            extracted = extracted.persist()
-            try:
-                t0 = time.time()
-                (
-                    _clustered(extracted).write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("bucket")
-                    .parquet(output_dir)
-                )
-                wall_ms = int((time.time() - t0) * 1000)
-                counts = {
-                    r["bucket"]: r["count"]
-                    for r in extracted.groupBy("bucket").count().collect()
-                }
-            finally:
-                extracted.unpersist()
-            delta: dict[str, dict] = {META_KEY: dict(meta_entry)}
-            for b in todo:
-                part_dir = os.path.join(output_dir, f"bucket={b}")
-                # empty buckets produce no partition dir under dynamic
-                # overwrite; record row_count 0 (read_output skips them)
-                delta[str(b)] = {
-                    "status": "done",
-                    "row_count": int(counts.get(b, 0)),
-                    "bytes": _dir_bytes(part_dir) if b in counts else 0,
-                    "wall_ms": wall_ms,  # shared job wall
-                    "run_id": run_id,
-                }
-            lineage.update({k: v for k, v in delta.items() if k != META_KEY})
-            _commit_lineage(output_dir, delta)
-            return lineage
-
         extracted = extracted.persist()
         try:
-            for i, b in enumerate(todo):
-                if fail_after_buckets is not None and i >= fail_after_buckets:
-                    raise RuntimeError(f"injected failure before bucket {b}")
+            for b in todo:
                 t0 = time.time()
                 part_dir = os.path.join(output_dir, f"bucket={b}")
                 part_df = extracted.filter(F.col("bucket") == int(b)).drop("bucket")
@@ -432,8 +386,10 @@ def run_with_lineage(
 
 
 def _bucket_dir(output_dir: str, b: str | int, entry: dict) -> str:
-    """Resolve a bucket's current data directory: versioned path if a
-    MERGE rewrote it (see :func:`upsert_elements`), base path otherwise."""
+    """Resolve a bucket's current data directory: the manifest ``path``
+    when a generation writer produced it (``merge_v{gen}/bucket=N``, or
+    ``bucket=N__vK``, a layout older stores may hold), the
+    run_with_lineage base path otherwise."""
     if entry.get("path"):
         return os.path.join(output_dir, entry["path"])
     return os.path.join(output_dir, f"bucket={b}")
@@ -541,48 +497,25 @@ def init_store(
 
     Refuses to overwrite an existing store: mutations go through
     merge_elements, exactly as ArangoDB creation vs CRUD are distinct.
-    One Spark wave (the ``batch`` shape of run_with_lineage): dynamic
-    partition overwrite + one groupBy(bucket).count() for the manifest.
+    One Spark wave: the rows are written as the store's first
+    generation (:func:`_write_generation`), then one manifest commit.
     """
     for k in MERGE_KEYS:
         if k not in rows.columns:
             raise ValueError(f"init_store rows need column {k!r}")
     os.makedirs(output_dir, exist_ok=True)
-    if read_lineage(output_dir).get(META_KEY):
+    lineage = read_lineage(output_dir)
+    if lineage.get(META_KEY):
         raise FileExistsError(
             f"{output_dir} already holds a committed store — use "
             "merge_elements to mutate it"
         )
-    bucketed = rows.withColumn(
-        "bucket", bucket_of(F.col("doc_id"), n_buckets)
-    ).persist()
-    try:
-        t0 = time.time()
-        (
-            _clustered(bucketed).write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(output_dir)
-        )
-        wall_ms = int((time.time() - t0) * 1000)
-        counts = {
-            r["bucket"]: r["count"]
-            for r in bucketed.groupBy("bucket").count().collect()
-        }
-    finally:
-        bucketed.unpersist()
-    delta: dict[str, dict] = {
-        META_KEY: {"n_buckets": n_buckets, "key_type": _key_type_meta(rows)}
-    }
-    for b in range(n_buckets):
-        part_dir = os.path.join(output_dir, f"bucket={b}")
-        delta[str(b)] = {
-            "status": "done",
-            "row_count": int(counts.get(b, 0)),
-            "bytes": _dir_bytes(part_dir) if b in counts else 0,
-            "wall_ms": wall_ms,
-            "run_id": run_id,
-        }
+    delta = _write_generation(
+        spark, output_dir, lineage, n_buckets,
+        dict.fromkeys(range(n_buckets), run_id),
+        lambda _: rows.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets)),
+    )
+    delta[META_KEY] = {"n_buckets": n_buckets, "key_type": _key_type_meta(rows)}
     _commit_lineage(output_dir, delta)
     return read_lineage(output_dir)
 
@@ -597,6 +530,101 @@ def _clustered(df: DataFrame) -> DataFrame:
     (and whole files) that cannot contain its keys. A task-local sort,
     no exchange."""
     return df.sortWithinPartitions("bucket", *MERGE_KEYS)
+
+
+def _write_generation(
+    spark: SparkSession,
+    output_dir: str,
+    lineage: dict,
+    n_buckets: int,
+    run_ids: dict[int, str],
+    build: Callable[[Optional[DataFrame]], Optional[DataFrame]],
+    sources: Iterable[int] = (),
+) -> dict[str, dict]:
+    """Write one store generation; return its manifest entries,
+    uncommitted. Every generation writer (init_store, MERGE,
+    compaction, rebucket) goes through here:
+
+    1. allocate the next ``merge_v{gen}`` root, clearing the orphan a
+       crashed attempt may have left there;
+    2. read the committed ``sources`` buckets through the manifest
+       schema, so evolved columns survive the rewrite (files predating
+       them NULL-fill), with ``bucket`` recomputed at ``n_buckets``;
+    3. write ``build(current)`` with one clustered
+       ``partitionBy(bucket)`` dynamic-overwrite write (``current`` is
+       None when no source bucket holds rows; a None result writes
+       nothing);
+    4. count rows per bucket from the written files and build one
+       entry per bucket in ``run_ids`` (bucket → run_id).
+
+    The caller commits. Until it does, the manifest still references
+    the old versions, so a crash leaves only an orphan that the retry's
+    allocation overwrites and vacuum reclaims.
+    """
+    t0 = time.time()
+    # gen comes from COMMITTED versions only, so a retry after a crash
+    # reuses (and overwrites) the same orphaned generation directory —
+    # idempotent. The max ranges over ALL buckets, not just the ones
+    # rewritten: a committed merge_v{N} directory can hold live data
+    # for buckets this write does not touch, and a gen derived from a
+    # subset could reuse (and rmtree) that referenced directory.
+    gen = 1 + max(
+        (e.get("version", 0) for _, e in _bucket_items(lineage)), default=0
+    )
+    rel_root = f"merge_v{gen}"
+    staging = os.path.join(output_dir, rel_root)
+    if os.path.isdir(staging):
+        shutil.rmtree(staging)  # orphan from a crashed attempt
+    src_dirs = [
+        _bucket_dir(output_dir, b, lineage[str(b)])
+        for b in sources
+        if lineage[str(b)]["status"] == "done"
+        and lineage[str(b)].get("row_count", 0) > 0
+    ]
+    current = None
+    if src_dirs:
+        schema = _store_schema(lineage)
+        reader = spark.read.schema(schema) if schema is not None else spark.read
+        # bucket is a pure function of doc_id, so the partition column
+        # is recomputed rather than threaded through the store files
+        current = reader.parquet(*src_dirs).withColumn(
+            "bucket", bucket_of(F.col("doc_id"), n_buckets)
+        )
+    rows = build(current)
+    counts: dict = {}
+    if rows is not None:
+        (
+            _clustered(rows).write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(staging)
+        )
+        # an empty frame writes no bucket=N dirs (and nothing to read)
+        if os.path.isdir(staging) and any(
+            name.startswith("bucket=") for name in os.listdir(staging)
+        ):
+            counts = {
+                r["bucket"]: r["count"]
+                for r in spark.read.parquet(staging)
+                .groupBy("bucket")
+                .count()
+                .collect()
+            }
+    wall_ms = int((time.time() - t0) * 1000)  # shared wave wall
+    entries: dict[str, dict] = {}
+    for b, run_id in run_ids.items():
+        rc = int(counts.get(b, 0))
+        rel_path = f"{rel_root}/bucket={b}"
+        entries[str(b)] = {
+            "status": "done",
+            "row_count": rc,
+            "bytes": _dir_bytes(os.path.join(output_dir, rel_path)) if rc > 0 else 0,
+            "wall_ms": wall_ms,
+            "run_id": run_id,
+            "version": gen,
+            "path": rel_path if rc > 0 else None,
+        }
+    return entries
 
 
 def point_lookup(
@@ -650,7 +678,6 @@ def merge_elements(
     output_dir: str,
     updates: Optional[DataFrame] = None,
     delete_keys: Optional[DataFrame] = None,
-    commit_mode: str = "batch",
     retain_snapshots: int = 0,
 ) -> dict[str, dict]:
     """Keyed MERGE on the extracted store: one copy-on-write commit that
@@ -660,23 +687,17 @@ def merge_elements(
     re-inserted), matching delete-then-upsert CRUD order
     (reference arangodb/crud.py update/replace/delete semantics).
 
-    ``commit_mode``:
+    ONE Spark wave for any number of affected buckets: union-read every
+    affected bucket's current version, one global anti-join on the
+    touched keys, one ``partitionBy(bucket)`` write into a fresh
+    ``merge_v{gen}`` generation directory, per-bucket counts from one
+    ``groupBy(bucket).count()`` over the written files, then a single
+    manifest commit flips every affected bucket to the new generation
+    atomically. No per-bucket driver loop — 10⁴ affected buckets cost
+    the same number of Spark jobs as 1.
 
-    * ``batch`` (default, the 100 TB shape) — ONE Spark wave for any
-      number of affected buckets: union-read every affected bucket's
-      current version, one global anti-join on the touched keys, one
-      ``partitionBy(bucket)`` write into a fresh ``merge_v{gen}``
-      generation directory, per-bucket counts from one
-      ``groupBy(bucket).count()`` over the written files, then a single
-      manifest commit flips every affected bucket to the new generation
-      atomically. No per-bucket driver loop — 10⁴ affected buckets cost
-      the same number of Spark jobs as 1.
-    * ``per_bucket`` — one read+anti-join+write+commit per affected
-      bucket; finest commit granularity (a crash loses at most one
-      bucket's rewrite) for fine-grain CDC touching a few buckets.
-
-    Either way a crash between write and manifest commit leaves the old
-    versions referenced (the new generation directory is orphaned, and
+    A crash between write and manifest commit leaves the old versions
+    referenced (the new generation directory is orphaned, and
     reclaimed by the post-commit vacuum of the next successful merge),
     so retries converge — the Iceberg copy-on-write MERGE protocol.
     """
@@ -692,8 +713,7 @@ def merge_elements(
     # serializes, which is the same end state.
     with _manifest_lock(output_dir, wait_s=MERGE_LOCK_WAIT_S):
         return _merge_elements_locked(
-            spark, output_dir, updates, delete_keys, commit_mode,
-            retain_snapshots,
+            spark, output_dir, updates, delete_keys, retain_snapshots
         )
 
 
@@ -702,7 +722,6 @@ def _merge_elements_locked(
     output_dir: str,
     updates: Optional[DataFrame],
     delete_keys: Optional[DataFrame],
-    commit_mode: str,
     retain_snapshots: int,
 ) -> dict[str, dict]:
     lineage = read_lineage(output_dir)
@@ -758,159 +777,26 @@ def _merge_elements_locked(
                     f"bucket {b} has no committed data — MERGE targets an "
                     "extracted store, run the pipeline first"
                 )
-        if commit_mode == "batch":
-            lineage = _merge_batch(
-                spark, output_dir, lineage, affected, ups, dels, all_keys,
-                n_buckets=n_buckets,
-            )
-        else:
-            lineage = _merge_per_bucket(
-                spark, output_dir, lineage, affected, ups, all_keys
-            )
+        touched = all_keys.select(*MERGE_KEYS).distinct()
+
+        def rewrite(current: Optional[DataFrame]) -> Optional[DataFrame]:
+            if current is None:
+                return ups
+            kept = current.join(touched, list(MERGE_KEYS), "left_anti")
+            return kept.unionByName(ups) if ups is not None else kept
+
+        delta = _write_generation(
+            spark, output_dir, lineage, n_buckets,
+            {b: lineage[str(b)].get("run_id", "merge") for b in affected},
+            rewrite, sources=affected,
+        )
+        _commit_lineage(output_dir, delta, locked=True)
+        lineage.update(delta)
     finally:
         for df in (ups, dels):
             if df is not None:
                 df.unpersist()
     vacuum_store(output_dir, retain_snapshots=retain_snapshots, locked=True)
-    return lineage
-
-
-def _merge_batch(
-    spark: SparkSession,
-    output_dir: str,
-    lineage: dict,
-    affected: list,
-    ups: Optional[DataFrame],
-    dels: Optional[DataFrame],
-    all_keys: DataFrame,
-    *,
-    n_buckets: int,
-) -> dict:
-    t0 = time.time()
-    # one generation per merge commit; computed from COMMITTED versions
-    # only, so a retry after a crash reuses (and overwrites) the same
-    # orphaned generation directory — idempotent. The max ranges over
-    # ALL buckets, not just affected ones: a committed merge_v{N}
-    # directory can hold live data for buckets this merge does not
-    # touch, and a gen derived from affected-only versions would reuse
-    # (and rmtree) that referenced directory — permanent data loss.
-    gen = 1 + max(e.get("version", 0) for _, e in _bucket_items(lineage))
-    rel_root = f"merge_v{gen}"
-    staging = os.path.join(output_dir, rel_root)
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)  # orphan from a crashed attempt
-    src_dirs = [
-        _bucket_dir(output_dir, b, lineage[str(b)])
-        for b in affected
-        if lineage[str(b)].get("row_count", 0) > 0
-    ]
-    schema = _store_schema(lineage)
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    if src_dirs:
-        # bucket is a pure function of doc_id, so the partition column
-        # is recomputed rather than threaded through the store files;
-        # the manifest schema (when evolved) NULL-fills columns the
-        # older generation files do not carry, so the union below
-        # always sees one shape
-        current = reader.parquet(*src_dirs).withColumn(
-            "bucket", bucket_of(F.col("doc_id"), n_buckets)
-        )
-        kept = current.join(
-            all_keys.select(*MERGE_KEYS).distinct(), list(MERGE_KEYS), "left_anti"
-        )
-        new_rows = kept.unionByName(ups) if ups is not None else kept
-    else:
-        new_rows = ups
-    counts: dict = {}
-    if new_rows is not None:
-        (
-            _clustered(new_rows).write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(staging)
-        )
-        has_parts = os.path.isdir(staging) and any(
-            name.startswith("bucket=") for name in os.listdir(staging)
-        )
-        if has_parts:
-            counts = {
-                r["bucket"]: r["count"]
-                for r in spark.read.parquet(staging)
-                .groupBy("bucket")
-                .count()
-                .collect()
-            }
-    wall_ms = int((time.time() - t0) * 1000)
-    delta: dict[str, dict] = {}
-    for b in affected:
-        old = lineage[str(b)]
-        rc = int(counts.get(b, 0))
-        rel_path = f"{rel_root}/bucket={b}"
-        entry = {
-            "status": "done",
-            "row_count": rc,
-            "bytes": _dir_bytes(os.path.join(output_dir, rel_path)) if rc > 0 else 0,
-            "wall_ms": wall_ms,  # shared wave wall
-            "run_id": old.get("run_id", "merge"),
-            "version": gen,
-            "path": rel_path if rc > 0 else None,
-        }
-        delta[str(b)] = entry
-        lineage[str(b)] = entry
-    _commit_lineage(output_dir, delta, locked=True)
-    return lineage
-
-
-def _merge_per_bucket(
-    spark: SparkSession,
-    output_dir: str,
-    lineage: dict,
-    affected: list,
-    ups: Optional[DataFrame],
-    all_keys: DataFrame,
-) -> dict:
-    for b in affected:
-        entry = lineage[str(b)]
-        t0 = time.time()
-        keys_b = all_keys.filter(F.col("bucket") == int(b)).select(*MERGE_KEYS)
-        ups_b = (
-            ups.filter(F.col("bucket") == int(b)).drop("bucket")
-            if ups is not None
-            else None
-        )
-        schema = _store_schema(lineage)
-        reader = (
-            spark.read.schema(schema) if schema is not None else spark.read
-        )
-        if entry.get("row_count", 0) > 0:
-            current = reader.parquet(_bucket_dir(output_dir, b, entry))
-            kept = current.join(keys_b.distinct(), list(MERGE_KEYS), "left_anti")
-            new_rows = kept.unionByName(ups_b) if ups_b is not None else kept
-        else:
-            new_rows = ups_b
-        version = entry.get("version", 0) + 1
-        rel_path = f"bucket={b}__v{version}"
-        new_dir = os.path.join(output_dir, rel_path)
-        if new_rows is not None:
-            # write once, then count from the written files — a count()
-            # before the write would execute the whole plan a second time
-            new_rows.sortWithinPartitions(*MERGE_KEYS).write.mode(
-                "overwrite"
-            ).parquet(new_dir)
-            row_count = spark.read.parquet(new_dir).count()
-        else:
-            row_count = 0
-        new_entry = {
-            "status": "done",
-            "row_count": row_count,
-            "bytes": _dir_bytes(new_dir) if row_count > 0 else 0,
-            "wall_ms": int((time.time() - t0) * 1000),
-            "run_id": entry.get("run_id", "merge"),
-            "version": version,
-            "path": rel_path if row_count > 0 else None,
-        }
-        lineage[str(b)] = new_entry
-        _commit_lineage(output_dir, {str(b): new_entry}, locked=True)
     return lineage
 
 
@@ -1009,14 +895,12 @@ def upsert_elements(
     spark: SparkSession,
     output_dir: str,
     updates: DataFrame,
-    commit_mode: str = "batch",
     retain_snapshots: int = 0,
 ) -> dict[str, dict]:
     """MERGE: rows matching (doc_id, offset) are replaced, new keys are
     inserted. ``updates`` must carry the extracted-element schema."""
     return merge_elements(
-        spark, output_dir, updates=updates, commit_mode=commit_mode,
-        retain_snapshots=retain_snapshots,
+        spark, output_dir, updates=updates, retain_snapshots=retain_snapshots
     )
 
 
@@ -1024,13 +908,11 @@ def delete_elements(
     spark: SparkSession,
     output_dir: str,
     keys: DataFrame,
-    commit_mode: str = "batch",
     retain_snapshots: int = 0,
 ) -> dict[str, dict]:
     """Keyed delete: rows matching (doc_id, offset) are removed."""
     return merge_elements(
-        spark, output_dir, delete_keys=keys, commit_mode=commit_mode,
-        retain_snapshots=retain_snapshots,
+        spark, output_dir, delete_keys=keys, retain_snapshots=retain_snapshots
     )
 
 
@@ -1038,7 +920,6 @@ def delete_where(
     spark: SparkSession,
     output_dir: str,
     condition,
-    commit_mode: str = "batch",
     retain_snapshots: int = 0,
 ) -> dict[str, dict]:
     """Predicate-driven delete — the Iceberg ``DELETE WHERE`` analog
@@ -1054,8 +935,7 @@ def delete_where(
     """
     keys = read_output(spark, output_dir).filter(condition).select(*MERGE_KEYS)
     return merge_elements(
-        spark, output_dir, delete_keys=keys, commit_mode=commit_mode,
-        retain_snapshots=retain_snapshots,
+        spark, output_dir, delete_keys=keys, retain_snapshots=retain_snapshots
     )
 
 
@@ -1064,7 +944,6 @@ def patch_elements(
     output_dir: str,
     patches: DataFrame,
     keep_null: bool = False,
-    commit_mode: str = "batch",
     retain_snapshots: int = 0,
 ) -> dict[str, dict]:
     """Partial-field UPDATE by key — the reference's
@@ -1149,8 +1028,7 @@ def patch_elements(
                 )
         merged = c.join(p, on=list(MERGE_KEYS), how="inner").select(*patched_cols)
         return merge_elements(
-            spark, output_dir, updates=merged, commit_mode=commit_mode,
-            retain_snapshots=retain_snapshots,
+            spark, output_dir, updates=merged, retain_snapshots=retain_snapshots
         )
     finally:
         current.unpersist()
@@ -1195,59 +1073,28 @@ def _compact_store_locked(
     meta = lineage.get(META_KEY)
     if meta is None:
         raise FileNotFoundError(f"no lineage manifest under {output_dir}")
-    n_buckets = meta["n_buckets"]
-    loaded = [
-        (int(b), e)
+    loaded = {
+        int(b): e.get("run_id", "compact")
         for b, e in _bucket_items(lineage)
         if e.get("status") == "done" and e.get("row_count", 0) > 0
-    ]
+    }
     if not loaded:
         return lineage
-    # gen over ALL buckets (same collision rule as _merge_batch)
-    gen = 1 + max(e.get("version", 0) for _, e in _bucket_items(lineage))
-    rel_root = f"merge_v{gen}"
-    staging = os.path.join(output_dir, rel_root)
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    t0 = time.time()
-    current = spark.read.parquet(
-        *[_bucket_dir(output_dir, b, e) for b, e in loaded]
-    ).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
     n_tasks = max(1, len(loaded) * files_per_bucket)
-    (
-        _clustered(current.repartition(n_tasks, "bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(staging)
+    delta = _write_generation(
+        spark, output_dir, lineage, meta["n_buckets"], loaded,
+        lambda current: current.repartition(n_tasks, "bucket"),
+        sources=loaded,
     )
-    counts = {
-        r["bucket"]: r["count"]
-        for r in spark.read.parquet(staging).groupBy("bucket").count().collect()
-    }
-    wall_ms = int((time.time() - t0) * 1000)
-    delta: dict[str, dict] = {}
-    for b, old in loaded:
-        rc = int(counts.get(b, 0))
-        if rc != old.get("row_count"):
+    for b, entry in delta.items():
+        if entry["row_count"] != lineage[b]["row_count"]:
             raise RuntimeError(
                 f"compaction row-count drift in bucket {b}: "
-                f"{old.get('row_count')} -> {rc} — staging left for "
-                "inspection, manifest NOT committed"
+                f"{lineage[b]['row_count']} -> {entry['row_count']} — "
+                "staging left for inspection, manifest NOT committed"
             )
-        rel_path = f"{rel_root}/bucket={b}"
-        entry = {
-            "status": "done",
-            "row_count": rc,
-            "bytes": _dir_bytes(os.path.join(output_dir, rel_path)),
-            "wall_ms": wall_ms,
-            "run_id": old.get("run_id", "compact"),
-            "version": gen,
-            "path": rel_path,
-        }
-        delta[str(b)] = entry
-        lineage[str(b)] = entry
     _commit_lineage(output_dir, delta, locked=True)
+    lineage.update(delta)
     vacuum_store(output_dir, retain_snapshots=retain_snapshots, locked=True)
     return lineage
 
@@ -1267,13 +1114,12 @@ def rebucket_store(
     cluster write parallelism ≈ per-partition file sizes); a store that
     grew 100× needs more buckets, and "mixing bucketings would
     silently drop documents" (the resume guard above) means the count
-    can only change through a full, committed re-hash. Protocol is the
-    batch-MERGE's: allocate the next ``merge_v{gen}`` generation root
-    (the dir class vacuum already reclaims), write every row re-hashed
-    with ``partitionBy(bucket)``, take per-bucket counts from one
-    ``groupBy(bucket).count()``, then swap the manifest — new META
-    ``n_buckets``, every new bucket entry pointing into the
-    generation, and (on shrink) tombstones for the dropped bucket ids.
+    can only change through a full, committed re-hash. Protocol is
+    every generation writer's (:func:`_write_generation`): write every
+    row re-hashed into the next ``merge_v{gen}`` generation root, then
+    swap the manifest — new META ``n_buckets``, every new bucket entry
+    pointing into the generation, and (on shrink) tombstones for the
+    dropped bucket ids.
     The pre-swap snapshot keeps the old layout time-travel-readable
     (``read_output(as_of=...)``) until ``vacuum_store`` expires it;
     a crash before the swap leaves an orphaned generation dir that the
@@ -1296,69 +1142,25 @@ def rebucket_store(
                 f"store already uses n_buckets={old_n}; rebucket is a "
                 "full re-hash — refuse the no-op rather than burn a wave"
             )
-        gen = 1 + max(e.get("version", 0) for _, e in _bucket_items(lineage))
-        rel_root = f"merge_v{gen}"
-        staging = os.path.join(output_dir, rel_root)
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)  # orphan from a crashed attempt
-        src_dirs = [
-            _bucket_dir(output_dir, b, e)
-            for b, e in _bucket_items(lineage)
-            if e["status"] == "done" and e.get("row_count", 0) > 0
-        ]
-        t0 = time.time()
-        counts: dict = {}
-        if src_dirs:
-            schema = _store_schema(lineage)
-            reader = spark.read.schema(schema) if schema else spark.read
-            rows = reader.parquet(*src_dirs).withColumn(
-                "bucket", bucket_of(F.col("doc_id"), new_n_buckets)
-            )
-            (
-                _clustered(rows).write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(staging)
-            )
-            counts = {
-                r["bucket"]: r["count"]
-                for r in spark.read.parquet(staging)
-                .groupBy("bucket")
-                .count()
-                .collect()
-            }
-        wall_ms = int((time.time() - t0) * 1000)
-        delta: dict[str, dict] = {
-            META_KEY: {**meta, "n_buckets": new_n_buckets}
-        }
-        for b in range(new_n_buckets):
-            rc = int(counts.get(b, 0))
-            rel_path = f"{rel_root}/bucket={b}"
-            delta[str(b)] = {
-                "status": "done",
-                "row_count": rc,
-                "bytes": _dir_bytes(os.path.join(output_dir, rel_path))
-                if rc > 0
-                else 0,
-                "wall_ms": wall_ms,
-                "run_id": run_id,
-                "version": gen,
-                "path": rel_path if rc > 0 else None,
-            }
+        delta = _write_generation(
+            spark, output_dir, lineage, new_n_buckets,
+            dict.fromkeys(range(new_n_buckets), run_id),
+            lambda current: current,
+            sources=[int(b) for b, _e in _bucket_items(lineage)],
+        )
         for b, _e in _bucket_items(lineage):
             if int(b) >= new_n_buckets:
                 # shrink: tombstone dropped ids (rc=0 keeps them out of
                 # reads and out of vacuum's reference set; the pre-swap
                 # snapshot still resolves their old dirs for as_of)
-                delta[str(b)] = {
+                delta[b] = {
+                    **delta["0"],
                     "status": "superseded",
                     "row_count": 0,
                     "bytes": 0,
-                    "wall_ms": wall_ms,
-                    "run_id": run_id,
-                    "version": gen,
                     "path": None,
                 }
+        delta[META_KEY] = {**meta, "n_buckets": new_n_buckets}
         _commit_lineage(output_dir, delta, locked=True)
         vacuum_store(output_dir, retain_snapshots, locked=True)
         return read_lineage(output_dir)

@@ -214,7 +214,6 @@ def _merge_flat_into_store(
     store_dir: str,
     delivered: DataFrame,
     flat: DataFrame,
-    commit_mode: str = "batch",
 ) -> None:
     """Land one deduped wave into the keyed store as ONE atomic MERGE
     commit: upsert the extracted ``flat`` elements AND delete each
@@ -246,9 +245,7 @@ def _merge_flat_into_store(
         .filter(F.col("offset") > F.col("mx"))
         .select("doc_id", "offset")
     )
-    merge_elements(
-        sess, store_dir, updates=flat, delete_keys=stale, commit_mode=commit_mode
-    )
+    merge_elements(sess, store_dir, updates=flat, delete_keys=stale)
 
 
 def stream_extract_merge(

@@ -29,14 +29,62 @@ def expected_total_rows():
     return sum(len(extract_document(r["spans"])) for r in corpus_rows(N_DOCS))
 
 
-def test_crash_resume_produces_complete_output(spark, docs_df, tmp_path):
+def dirs_on_disk_and_referenced(out):
+    """(bucket data dirs on disk, dirs the manifest references); equal
+    once vacuum has reclaimed every superseded or orphaned version."""
+    import os
+
+    referenced = {
+        e["path"] if e.get("path") else f"bucket={b}"
+        for b, e in buckets(read_lineage(out)).items()
+        if e.get("row_count", 0) > 0
+    }
+    on_disk = set()
+    for name in os.listdir(out):
+        full = os.path.join(out, name)
+        if not os.path.isdir(full):
+            continue
+        if name.startswith("merge_v"):
+            on_disk.update(
+                f"{name}/{s}"
+                for s in os.listdir(full)
+                if os.path.isdir(os.path.join(full, s))
+            )
+        else:
+            on_disk.add(name)
+    return on_disk, referenced
+
+
+def test_crash_resume_produces_complete_output(
+    spark, docs_df, tmp_path, monkeypatch
+):
+    """A crash on the third bucket's lineage commit leaves two buckets
+    committed and the third written but uncommitted; the resume
+    overwrites that bucket and the store holds every row exactly once."""
+    import os
+
+    from pdf_extractor_spark import lineage as L
+
     out = str(tmp_path / "out")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_with_lineage(
-            spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r1", fail_after_buckets=2
-        )
+    real_commit = L._commit_lineage
+    calls = {"n": 0}
+
+    def crashing_commit(output_dir, delta, locked=False):
+        # an unlocked commit re-enters itself once it holds the lock;
+        # count each bucket commit once
+        calls["n"] += not locked
+        if calls["n"] == 3:
+            raise RuntimeError("injected crash before lineage commit")
+        return real_commit(output_dir, delta, locked=locked)
+
+    monkeypatch.setattr(L, "_commit_lineage", crashing_commit)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_with_lineage(spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r1")
+    monkeypatch.setattr(L, "_commit_lineage", real_commit)
     partial = buckets(read_lineage(out))
     assert sum(e["status"] == "done" for e in partial.values()) == 2
+    assert "2" not in partial
+    assert os.listdir(os.path.join(out, "bucket=2"))  # written, not committed
 
     lineage = buckets(
         run_with_lineage(spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r2")
@@ -69,37 +117,6 @@ def test_metrics_recorded(spark, docs_df, tmp_path):
     )
 
 
-def test_batch_commit_mode_equivalent(spark, docs_df, tmp_path):
-    """Batch mode (one partitioned write, no per-bucket job loop)
-    produces the same output and manifest totals as per-bucket mode,
-    and resumes the same way."""
-    out_b = str(tmp_path / "batch")
-    lineage = buckets(
-        run_with_lineage(
-            spark, docs_df, out_b, n_buckets=N_BUCKETS, run_id="rb",
-            commit_mode="batch",
-        )
-    )
-    assert len(lineage) == N_BUCKETS
-    assert sum(e["row_count"] for e in lineage.values()) == expected_total_rows()
-    assert read_output(spark, out_b).count() == expected_total_rows()
-    # partial manifest → batch resume completes only the missing buckets
-    out_p = str(tmp_path / "resume")
-    with pytest.raises(RuntimeError):
-        run_with_lineage(
-            spark, docs_df, out_p, n_buckets=N_BUCKETS, run_id="r1",
-            fail_after_buckets=2,
-        )
-    resumed = buckets(
-        run_with_lineage(
-            spark, docs_df, out_p, n_buckets=N_BUCKETS, run_id="r2",
-            commit_mode="batch",
-        )
-    )
-    assert {e["run_id"] for e in resumed.values()} == {"r1", "r2"}
-    assert read_output(spark, out_p).count() == expected_total_rows()
-
-
 def test_empty_buckets_and_nbucket_guard(spark, tmp_path):
     """Empty buckets are committed with row_count 0 (not crashed on);
     resuming with a different n_buckets raises instead of silently
@@ -113,11 +130,6 @@ def test_empty_buckets_and_nbucket_guard(spark, tmp_path):
     assert read_output(spark, out).count() == total
     with pytest.raises(ValueError, match="n_buckets"):
         run_with_lineage(spark, few, out, n_buckets=4)
-
-    # batch mode with empty buckets
-    out_b = str(tmp_path / "few_batch")
-    run_with_lineage(spark, few, out_b, n_buckets=8, commit_mode="batch")
-    assert read_output(spark, out_b).count() == total
 
 
 # ---------------------------------------------------------------------------
@@ -187,16 +199,7 @@ def test_upsert_inserts_new_key_and_versions_bucket(spark, docs_df, tmp_path):
     upsert_elements(spark, out, donor.withColumn("offset", F.lit(999_998)))
     lineage2 = buckets(read_lineage(out))
     assert max(e.get("version", 0) for e in lineage2.values()) == 2
-
-    # per-bucket fine-grain mode uses the bucket=N__vK layout
-    upsert_elements(
-        spark, out, donor.withColumn("offset", F.lit(999_997)),
-        commit_mode="per_bucket",
-    )
-    lineage3 = buckets(read_lineage(out))
-    v3 = [e for e in lineage3.values() if e.get("version") == 3]
-    assert len(v3) == 1 and v3[0]["path"].endswith("__v3")
-    assert read_output(spark, out).count() == n_before + 3
+    assert read_output(spark, out).count() == n_before + 2
 
 
 def test_delete_removes_key_and_resume_stays_noop(spark, docs_df, tmp_path):
@@ -231,8 +234,7 @@ def test_delete_removes_key_and_resume_stays_noop(spark, docs_df, tmp_path):
     assert read_output(spark, out).count() == n_before - 1
 
 
-@pytest.mark.parametrize("commit_mode", ["batch", "per_bucket"])
-def test_merge_algebra_roundtrip(spark, docs_df, tmp_path, commit_mode):
+def test_merge_algebra_roundtrip(spark, docs_df, tmp_path):
     r"""MERGE invariants over a randomized batch of updates: after
     upsert, store = (old \ matched-keys) ∪ updates; deleting the
     inserted new keys restores exactly old-with-replacements."""
@@ -261,7 +263,6 @@ def test_merge_algebra_roundtrip(spark, docs_df, tmp_path, commit_mode):
     upsert_elements(
         spark, out,
         spark.createDataFrame(updates, read_output(spark, out).schema),
-        commit_mode=commit_mode,
     )
 
     got = {(r["doc_id"], r["offset"]): r["text"] for r in read_output(spark, out).collect()}
@@ -276,7 +277,6 @@ def test_merge_algebra_roundtrip(spark, docs_df, tmp_path, commit_mode):
     delete_elements(
         spark, out,
         spark.createDataFrame([{"doc_id": d, "offset": o} for d, o in new_keys]),
-        commit_mode=commit_mode,
     )
     got2 = {(r["doc_id"], r["offset"]): r["text"] for r in read_output(spark, out).collect()}
     for d, o in new_keys:
@@ -336,6 +336,59 @@ def test_merge_crash_between_write_and_commit_is_idempotent(
         (F.col("doc_id") == t["doc_id"]) & (F.col("offset") == t["offset"])
     ).collect()
     assert len(hits) == 1 and hits[0]["text"] == "CRASHED-EDIT"
+
+
+@pytest.mark.parametrize("writer", ["compact", "rebucket"])
+def test_generation_crash_between_write_and_commit_is_idempotent(
+    spark, docs_df, tmp_path, monkeypatch, writer
+):
+    """compact_store and rebucket_store share MERGE's copy-on-write
+    protocol: a crash after the new generation is written but before
+    the manifest commit leaves manifest and content unchanged; the
+    retry converges, and after vacuum the directories on disk are
+    exactly the manifest's references."""
+    import os
+
+    from pdf_extractor_spark import lineage as L
+
+    out = str(tmp_path / "out")
+    run_with_lineage(spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r1")
+
+    def content():
+        return sorted(repr(r) for r in read_output(spark, out).collect())
+
+    before_manifest = read_lineage(out)
+    before_rows = content()
+    run = {
+        "compact": lambda: L.compact_store(spark, out),
+        "rebucket": lambda: L.rebucket_store(spark, out, 2 * N_BUCKETS),
+    }[writer]
+
+    def exploding_commit(output_dir, delta, locked=False):
+        raise RuntimeError("injected crash before manifest commit")
+
+    real_commit = L._commit_lineage
+    monkeypatch.setattr(L, "_commit_lineage", exploding_commit)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run()
+    monkeypatch.setattr(L, "_commit_lineage", real_commit)
+
+    assert os.listdir(os.path.join(out, "merge_v1"))  # written, orphaned
+    assert read_lineage(out) == before_manifest
+    assert content() == before_rows
+
+    run()
+    after = read_lineage(out)
+    assert (
+        after[META_KEY]["manifest_version"]
+        == before_manifest[META_KEY]["manifest_version"] + 1
+    )
+    want_n = 2 * N_BUCKETS if writer == "rebucket" else N_BUCKETS
+    assert after[META_KEY]["n_buckets"] == want_n
+    assert content() == before_rows
+    L.vacuum_store(out)
+    on_disk, referenced = dirs_on_disk_and_referenced(out)
+    assert on_disk == referenced
 
 
 def test_batch_merge_job_count_constant_in_bucket_count(spark, tmp_path):
@@ -427,13 +480,10 @@ def test_merge_elements_combined_upsert_delete_single_commit(
     }
 
 
-@pytest.mark.parametrize("commit_mode", ["batch", "per_bucket"])
-def test_vacuum_reclaims_superseded_versions(spark, docs_df, tmp_path, commit_mode):
+def test_vacuum_reclaims_superseded_versions(spark, docs_df, tmp_path):
     """Copy-on-write retention: after a merge commits, the superseded
     version dirs are reclaimed automatically; only manifest-referenced
     dirs remain, and the store content is unaffected."""
-    import os
-
     from pyspark.sql import functions as F
 
     from pdf_extractor_spark.lineage import upsert_elements
@@ -443,36 +493,54 @@ def test_vacuum_reclaims_superseded_versions(spark, docs_df, tmp_path, commit_mo
     before = read_output(spark, out)
     n = before.count()
     edit = spark.createDataFrame(before.limit(1).collect(), before.schema)
-    upsert_elements(
-        spark, out, edit.withColumn("text", F.lit("E1")), commit_mode=commit_mode
-    )
-    upsert_elements(
-        spark, out, edit.withColumn("text", F.lit("E2")), commit_mode=commit_mode
-    )
+    upsert_elements(spark, out, edit.withColumn("text", F.lit("E1")))
+    upsert_elements(spark, out, edit.withColumn("text", F.lit("E2")))
 
-    lineage = buckets(read_lineage(out))
-    referenced = {
-        e["path"] if e.get("path") else f"bucket={b}"
-        for b, e in lineage.items()
-        if e.get("row_count", 0) > 0
-    }
-    on_disk = set()
-    for name in os.listdir(out):
-        full = os.path.join(out, name)
-        if not os.path.isdir(full):
-            continue
-        if name.startswith("merge_v"):
-            on_disk.update(
-                f"{name}/{s}"
-                for s in os.listdir(full)
-                if os.path.isdir(os.path.join(full, s))
-            )
-        else:
-            on_disk.add(name)
+    on_disk, referenced = dirs_on_disk_and_referenced(out)
     assert on_disk == referenced, f"unreclaimed dirs: {on_disk - referenced}"
     after = read_output(spark, out)
     assert after.count() == n
     assert after.filter(F.col("text") == "E2").count() == 1
+
+
+def test_legacy_versioned_bucket_dir_is_read_merged_and_vacuumed(
+    spark, docs_df, tmp_path
+):
+    """Older stores may reference per-bucket rewrite dirs
+    (``bucket=N__vK``): they read back, a MERGE allocates its generation
+    past their version, and the post-commit vacuum reclaims them."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from pdf_extractor_spark import lineage as L
+
+    out = str(tmp_path / "out")
+    run_with_lineage(spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r1")
+    n = read_output(spark, out).count()
+    entry = read_lineage(out)["0"]
+    assert entry["row_count"] > 0
+    os.rename(os.path.join(out, "bucket=0"), os.path.join(out, "bucket=0__v1"))
+    L._commit_lineage(
+        out, {"0": {**entry, "version": 1, "path": "bucket=0__v1"}}
+    )
+    assert read_output(spark, out).count() == n
+
+    row = (
+        read_output(spark, out)
+        .filter(L.bucket_of(F.col("doc_id"), N_BUCKETS) == 0)
+        .limit(1)
+        .collect()
+    )
+    edit = spark.createDataFrame(row, read_output(spark, out).schema)
+    L.upsert_elements(spark, out, edit.withColumn("text", F.lit("EDIT")))
+
+    assert read_lineage(out)["0"]["path"] == "merge_v2/bucket=0"
+    on_disk, referenced = dirs_on_disk_and_referenced(out)
+    assert on_disk == referenced and "bucket=0__v1" not in on_disk
+    after = read_output(spark, out)
+    assert after.count() == n
+    assert after.filter(F.col("text") == "EDIT").count() == 1
 
 
 def test_concurrent_manifest_commits_lose_no_update(tmp_path):
@@ -612,23 +680,7 @@ def test_compact_store_collapses_small_files(spark, docs_df, tmp_path):
     assert len(gens) == 1
     assert gens.pop() > max(e.get("version", 0) for e in lineage.values())
     # superseded dirs reclaimed: disk == manifest references
-    referenced = {
-        e["path"] if e.get("path") else f"bucket={b}"
-        for b, e in lineage2.items()
-        if e.get("row_count", 0) > 0
-    }
-    on_disk = set()
-    for name in os.listdir(out):
-        full = os.path.join(out, name)
-        if not os.path.isdir(full):
-            continue
-        if name.startswith("merge_v"):
-            on_disk.update(
-                f"{name}/{s}" for s in os.listdir(full)
-                if os.path.isdir(os.path.join(full, s))
-            )
-        else:
-            on_disk.add(name)
+    on_disk, referenced = dirs_on_disk_and_referenced(out)
     assert on_disk == referenced
 
 
@@ -1302,6 +1354,7 @@ def test_store_stats_report(spark, tmp_path):
     total = got.pop("__total__")
     assert total["row_count"] == 50
     assert sum(r["row_count"] for r in got.values()) == 50
-    assert any(r["version"] > 0 for r in got.values())  # merge generation
+    # init_store writes generation 1; the merge adds generation 2
+    assert {r["version"] for r in got.values()} == {1, 2}
     assert all(r["status"] == "done" for r in got.values())
     assert "n_buckets=4" in total["status"]

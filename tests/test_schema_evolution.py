@@ -89,6 +89,50 @@ def test_merge_after_evolution_mixes_generations(spark, store):
     assert len(have) == base_count
 
 
+def test_compaction_keeps_evolved_columns(spark, store):
+    """Compaction reads the store through the manifest schema: values
+    an upsert wrote into an evolved column survive the rewrite (files
+    predating the column still NULL-fill), and the store collapses to
+    one file per non-empty bucket."""
+    from pdf_extractor_spark.lineage import bucket_of, compact_store
+
+    evolve_store_schema(spark, store, {"quality": "double"})
+    base = read_output(spark, store)
+    base_count = base.count()
+    upd_rows = (
+        base.filter(bucket_of(F.col("doc_id"), N_BUCKETS) == 3)
+        .orderBy("doc_id", "offset")
+        .limit(3)
+        .collect()
+    )
+    assert len(upd_rows) == 3
+    upsert_elements(
+        spark, store,
+        spark.createDataFrame(upd_rows, schema=base.schema).withColumn(
+            "quality", F.lit(0.75)
+        ),
+    )
+
+    compact_store(spark, store)
+
+    have = {
+        (r["doc_id"], r["offset"]): r["quality"]
+        for r in read_output(spark, store)
+        .select("doc_id", "offset", "quality")
+        .collect()
+    }
+    assert len(have) == base_count
+    touched = {(r["doc_id"], r["offset"]) for r in upd_rows}
+    assert {have[k] for k in touched} == {0.75}
+    assert {v for k, v in have.items() if k not in touched} == {None}
+    n_loaded = sum(
+        1
+        for b, e in read_lineage(store).items()
+        if b != META_KEY and e.get("row_count", 0) > 0
+    )
+    assert len(_data_files(store)) == n_loaded
+
+
 def test_writer_omitting_evolved_column_null_fills(spark, store):
     evolve_store_schema(spark, store, {"quality": "double"})
     base = read_output(spark, store)
