@@ -72,29 +72,24 @@ GROUP BY 1
 # ---------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _candidate_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every same-language banded candidate pair with both shingle sets,
+    ``(a_id, b_id, a_sh, b_sh, ...)`` with ``a_id < b_id``: the shared
+    prefix of the pair-emitting Jaccard and containment queries."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     dups = docs.filter(F.col("doc_id") < N_INJECTED_DUPS).select(
         (F.col("doc_id") + DUP_ID_OFFSET).alias("doc_id"), "lang", "text"
     )
     pool = docs.unionByName(dups)
-    # build bands from _docs_with_injected_dups (not pool.select(...)):
-    # the logical plan is then IDENTICAL to the one the LSH-pairs /
-    # survivors / connected-components queries cache, so one session
-    # computes the signature table once for the whole dedup suite
-    bands = _with_bands(_docs_with_injected_dups(spark, sf_dir))
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band_id") == F.col("bb.band_id"))
-            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(F.col("ba.doc_id").alias("a_id"), F.col("bb.doc_id").alias("b_id"))
-        .distinct()
-    )
-    # persist: consumed twice (a and b sides of the candidate join)
+    # candidates from the band table of _docs_with_injected_dups (not
+    # pool.select(...)): its logical plan is then IDENTICAL to the one
+    # the LSH-pairs / survivors / connected-components queries cache,
+    # so one session computes the signature table once for the whole
+    # dedup suite
+    cand = minhash_lsh_pairs(spark, sf_dir)
+    # persist: consumed twice (a and b sides of the candidate join), and
+    # every banded-shingle query builds this same plan, so a session
+    # shingles the pool once for all of them
     sh = pool.select(
         "doc_id", "lang", "text", _tokens().alias("toks")
     ).select(
@@ -112,21 +107,30 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("b_lang"),
         F.col("shset").alias("b_sh"),
     )
+    return (
+        cand.join(sa, "a_id")
+        .join(sb, "b_id")
+        .filter(F.col("a_lang") == F.col("b_lang"))
+    )
+
+
+def _jaccard_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ngram_jaccard_pairs WITHOUT the report threshold: every banded
+    candidate pair with its exact floored Jaccard (shared kernel)."""
     inter = F.size(F.array_intersect(F.col("a_sh"), F.col("b_sh")))
     # |A∪B| = |A|+|B|−|A∩B| for sets (shsets are array_distinct'd):
     # integer-exact, and skips building a second per-pair hash set
     union = F.size("a_sh") + F.size("b_sh") - inter
     jac = (F.floor(inter.cast("double") / union * 10000 + 1e-6) / 10000).cast("double")
-    return (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .filter(F.col("a_lang") == F.col("b_lang"))
-        .select("a_id", "b_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    return _candidate_shingle_sets(spark, sf_dir).select(
+        "a_id", "b_id", jac.alias("jaccard")
     )
 
 
-# NGRAM_JACCARD_SQL is assigned at module end (needs _minhash_sql, defined below).
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _jaccard_scored_pairs(spark, sf_dir).filter(
+        F.col("jaccard") >= JACCARD_THRESHOLD
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -269,12 +273,17 @@ SELECT doc_id + {DUP_ID_OFFSET} AS doc_id, text
 FROM documents WHERE doc_id < {N_INJECTED_DUPS}
 """
 
-MINHASH_LSH_PAIRS_SQL = f"""
-WITH bands AS ({_minhash_sql(_DUP_SOURCE_SQL)})
+# every distinct (a_id < b_id) pair sharing >= 1 band of ``bands``
+_BAND_PAIRS_SQL = """
 SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
 FROM bands a JOIN bands b
   ON a.band_id = b.band_id AND a.band_hash = b.band_hash
  AND a.doc_id < b.doc_id
+"""
+
+MINHASH_LSH_PAIRS_SQL = f"""
+WITH bands AS ({_minhash_sql(_DUP_SOURCE_SQL)})
+{_BAND_PAIRS_SQL}
 """
 
 
@@ -557,15 +566,11 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a parenthesized derived table — so wrap _minhash_sql once and let the
 # pairs CTE self-join the materialized bands instead of recomputing the
 # signature pipeline per join side.
-DEDUP_CC_SQL = f"""
-WITH RECURSIVE
-bands AS (SELECT * FROM ({_minhash_sql(_DUP_SOURCE_SQL)}) t),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+# The component-closure CTEs the recursive-CTE oracles share: band
+# pairs → undirected edges → ``reach(node, r)``, every node paired with
+# each doc it reaches (itself included); min(r) is its component label.
+_CC_REACH_SQL = f"""bands AS (SELECT * FROM ({_minhash_sql(_DUP_SOURCE_SQL)}) t),
+pairs AS ({_BAND_PAIRS_SQL}),
 edges AS (
   SELECT a_id AS src, b_id AS dst FROM pairs
   UNION
@@ -575,19 +580,20 @@ reach(node, r) AS (
   SELECT doc_id, doc_id FROM ({_DUP_SOURCE_SQL})
   UNION
   SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.node
-)
+)"""
+
+DEDUP_CC_SQL = f"""
+WITH RECURSIVE
+{_CC_REACH_SQL}
 SELECT node AS doc_id, min(r) AS survivor FROM reach GROUP BY 1
 """
 
 
-NGRAM_JACCARD_SQL = rf"""
-WITH bands AS MATERIALIZED ({_minhash_sql(_DUP_SOURCE_SQL)}),
-cand AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+# The banded-candidate CTEs the pair-emitting shingle oracles share:
+# ``cand`` holds the LSH candidate pairs, ``sh`` every pool doc's
+# distinct shingle set.
+_BANDED_SHINGLES_SQL = rf"""bands AS MATERIALIZED ({_minhash_sql(_DUP_SOURCE_SQL)}),
+cand AS MATERIALIZED ({_BAND_PAIRS_SQL}),
 sh AS MATERIALIZED (
   SELECT doc_id, lang, list_distinct({_SHINGLES_SQL}) AS shset
   FROM (
@@ -599,7 +605,10 @@ sh AS MATERIALIZED (
       FROM documents WHERE doc_id < {N_INJECTED_DUPS}
     )
   )
-)
+)"""
+
+NGRAM_JACCARD_SQL = rf"""
+WITH {_BANDED_SHINGLES_SQL}
 SELECT a_id, b_id, jaccard FROM (
   SELECT c.a_id, c.b_id,
          CAST(floor(CAST(len(list_intersect(a.shset, b.shset)) AS DOUBLE)
@@ -1345,9 +1354,10 @@ LEFT JOIN rebuilt r ON r.doc_id = k.doc_id
 # containment ≈ 1 — which is exactly the template/boilerplate
 # relationship a crawl dedup pass needs to see).
 #
-# Same scale shape as ngram_jaccard_pairs: candidates from the shared
-# MinHash band table (equi-join, plan-audited), exact shingle-set
-# arithmetic on candidates only; both directions reported plus the
+# Same scale shape as ngram_jaccard_pairs, over the same banded
+# candidates (:func:`_candidate_shingle_sets` — the shared MinHash band
+# table, equi-join, plan-audited): exact shingle-set arithmetic on
+# candidates only; both directions reported plus the
 # dominant direction ('mutual' on the floored-value tie, so the
 # label is engine-stable by construction).
 # ---------------------------------------------------------------------------
@@ -1356,55 +1366,13 @@ CONTAIN_THRESHOLD = 0.8
 
 
 def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    dups = docs.filter(F.col("doc_id") < N_INJECTED_DUPS).select(
-        (F.col("doc_id") + DUP_ID_OFFSET).alias("doc_id"), "lang", "text"
-    )
-    pool = docs.unionByName(dups)
-    bands = _with_bands(_docs_with_injected_dups(spark, sf_dir))
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band_id") == F.col("bb.band_id"))
-            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(F.col("ba.doc_id").alias("a_id"), F.col("bb.doc_id").alias("b_id"))
-        .distinct()
-    )
-    sh = pool.select(
-        "doc_id", "lang", "text", _tokens().alias("toks")
-    ).select(
-        "doc_id",
-        "lang",
-        F.array_distinct(_shingles(F.col("toks"), F.col("text"))).alias("shset"),
-    )
-    sa = sh.select(
-        F.col("doc_id").alias("a_id"),
-        F.col("lang").alias("a_lang"),
-        F.col("shset").alias("a_sh"),
-    )
-    sb = sh.select(
-        F.col("doc_id").alias("b_id"),
-        F.col("lang").alias("b_lang"),
-        F.col("shset").alias("b_sh"),
-    )
     inter = F.size(F.array_intersect(F.col("a_sh"), F.col("b_sh"))).cast(
         "double"
     )
     c_a = floor_round(inter / F.size("a_sh"), 4)
     c_b = floor_round(inter / F.size("b_sh"), 4)
-    scored = (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .filter(F.col("a_lang") == F.col("b_lang"))
-        .select(
-            "a_id",
-            "b_id",
-            c_a.alias("containment_a"),
-            c_b.alias("containment_b"),
-        )
+    scored = _candidate_shingle_sets(spark, sf_dir).select(
+        "a_id", "b_id", c_a.alias("containment_a"), c_b.alias("containment_b")
     )
     direction = (
         F.when(F.col("containment_a") > F.col("containment_b"), F.lit("a_in_b"))
@@ -1423,25 +1391,7 @@ def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CONTAINMENT_SQL = rf"""
-WITH bands AS ({_minhash_sql(_DUP_SOURCE_SQL)}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
-sh AS (
-  SELECT doc_id, lang, list_distinct({_SHINGLES_SQL}) AS shset
-  FROM (
-    SELECT doc_id, lang, text, string_split_regex(text, '\s+') AS toks
-    FROM (
-      SELECT doc_id, lang, text FROM documents
-      UNION ALL
-      SELECT doc_id + {DUP_ID_OFFSET} AS doc_id, lang, text
-      FROM documents WHERE doc_id < {N_INJECTED_DUPS}
-    )
-  )
-),
+WITH {_BANDED_SHINGLES_SQL},
 scored AS (
   SELECT c.a_id, c.b_id,
          CAST(floor(CAST(len(list_intersect(a.shset, b.shset)) AS DOUBLE)
@@ -1515,23 +1465,7 @@ def dedup_survivors_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_SURVIVORS_QUALITY_SQL = f"""
 WITH RECURSIVE
-bands AS (SELECT * FROM ({_minhash_sql(_DUP_SOURCE_SQL)}) t),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
-edges AS (
-  SELECT a_id AS src, b_id AS dst FROM pairs
-  UNION
-  SELECT b_id AS src, a_id AS dst FROM pairs
-),
-reach(node, r) AS (
-  SELECT doc_id, doc_id FROM ({_DUP_SOURCE_SQL})
-  UNION
-  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.node
-),
+{_CC_REACH_SQL},
 labels AS (SELECT node AS doc_id, min(r) AS component FROM reach GROUP BY 1),
 staged AS (
   SELECT l.component, l.doc_id, length(p.text) AS len
@@ -1583,23 +1517,7 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_CLUSTER_HISTOGRAM_SQL = f"""
 WITH RECURSIVE
-bands AS (SELECT * FROM ({_minhash_sql(_DUP_SOURCE_SQL)}) t),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
-edges AS (
-  SELECT a_id AS src, b_id AS dst FROM pairs
-  UNION
-  SELECT b_id AS src, a_id AS dst FROM pairs
-),
-reach(node, r) AS (
-  SELECT doc_id, doc_id FROM ({_DUP_SOURCE_SQL})
-  UNION
-  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.node
-),
+{_CC_REACH_SQL},
 labels AS (SELECT node AS doc_id, min(r) AS survivor FROM reach GROUP BY 1),
 sizes AS (SELECT survivor, count(*) AS cluster_size FROM labels GROUP BY 1)
 SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
@@ -1853,12 +1771,7 @@ def _rouge_grams_sql(n: int) -> str:
 ROUGE_PAIRS_SQL = rf"""
 WITH src AS ({_DUP_SOURCE_SQL}),
 bands AS ({_minhash_sql('SELECT doc_id, text FROM src')}),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+pairs AS ({_BAND_PAIRS_SQL}),
 toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS t
@@ -1967,12 +1880,7 @@ def tfidf_pair_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 TFIDF_PAIR_COSINE_SQL = rf"""
 WITH src AS ({_DUP_SOURCE_SQL}),
 bands AS ({_minhash_sql('SELECT doc_id, text FROM src')}),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+pairs AS ({_BAND_PAIRS_SQL}),
 terms AS (
   SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS term FROM src
 ),
@@ -2058,12 +1966,7 @@ def levenshtein_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 LEVENSHTEIN_PAIRS_SQL = f"""
 WITH src AS ({_DUP_SOURCE_SQL}),
 bands AS ({_minhash_sql('SELECT doc_id, text FROM src')}),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-)
+pairs AS ({_BAND_PAIRS_SQL})
 SELECT p.a_id, p.b_id,
        CAST(levenshtein(sa.text, sb.text) AS BIGINT) AS lev_dist,
        CAST(length(sa.text) AS BIGINT) AS len_a,
@@ -2113,20 +2016,7 @@ def minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in range(MINHASH_K)
         ]
     ).persist()
-    bands = _with_bands(pool)
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band_id") == F.col("bb.band_id"))
-            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("a_id"), F.col("bb.doc_id").alias("b_id")
-        )
-        .distinct()
-    )
+    cand = minhash_lsh_pairs(spark, sf_dir)
     sh = pool.select(
         "doc_id", "text", _tokens().alias("toks")
     ).select(
@@ -2194,12 +2084,7 @@ sigs AS MATERIALIZED (
   SELECT doc_id, {_SIG_SQL} FROM shing
 ),
 bands AS ({_BANDS_SQL}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+cand AS ({_BAND_PAIRS_SQL}),
 shset AS MATERIALIZED (
   SELECT doc_id, list_distinct(sh) AS shset FROM shing
 ),
@@ -2565,79 +2450,11 @@ def lex_sem_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _jaccard_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ngram_jaccard_pairs WITHOUT the report threshold: every banded
-    candidate pair with its exact floored Jaccard (shared kernel)."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    dups = docs.filter(F.col("doc_id") < N_INJECTED_DUPS).select(
-        (F.col("doc_id") + DUP_ID_OFFSET).alias("doc_id"), "lang", "text"
-    )
-    pool = docs.unionByName(dups)
-    bands = _with_bands(_docs_with_injected_dups(spark, sf_dir))
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band_id") == F.col("bb.band_id"))
-            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(F.col("ba.doc_id").alias("a_id"), F.col("bb.doc_id").alias("b_id"))
-        .distinct()
-    )
-    sh = pool.select(
-        "doc_id", "lang", "text", _tokens().alias("toks")
-    ).select(
-        "doc_id",
-        "lang",
-        F.array_distinct(_shingles(F.col("toks"), F.col("text"))).alias("shset"),
-    )
-    sa = sh.select(
-        F.col("doc_id").alias("a_id"),
-        F.col("lang").alias("a_lang"),
-        F.col("shset").alias("a_sh"),
-    )
-    sb = sh.select(
-        F.col("doc_id").alias("b_id"),
-        F.col("lang").alias("b_lang"),
-        F.col("shset").alias("b_sh"),
-    )
-    inter = F.size(F.array_intersect(F.col("a_sh"), F.col("b_sh")))
-    # |A∪B| = |A|+|B|−|A∩B| for sets (shsets are array_distinct'd):
-    # integer-exact, and skips building a second per-pair hash set
-    union = F.size("a_sh") + F.size("b_sh") - inter
-    jac = (F.floor(inter.cast("double") / union * 10000 + 1e-6) / 10000).cast("double")
-    return (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .filter(F.col("a_lang") == F.col("b_lang"))
-        .select("a_id", "b_id", jac.alias("jaccard"))
-    )
-
-
 def _lex_sem_sql() -> str:
     from .similarity import _cosine_sql
 
     return rf"""
-WITH bands AS MATERIALIZED ({_minhash_sql(_DUP_SOURCE_SQL)}),
-cand AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
-sh AS MATERIALIZED (
-  SELECT doc_id, lang, list_distinct({_SHINGLES_SQL}) AS shset
-  FROM (
-    SELECT doc_id, lang, text, string_split_regex(text, '\s+') AS toks
-    FROM (
-      SELECT doc_id, lang, text FROM documents
-      UNION ALL
-      SELECT doc_id + {DUP_ID_OFFSET} AS doc_id, lang, text
-      FROM documents WHERE doc_id < {N_INJECTED_DUPS}
-    )
-  )
-),
+WITH {_BANDED_SHINGLES_SQL},
 scored AS (
   SELECT c.a_id % {DUP_ID_OFFSET} AS oa,
          c.b_id % {DUP_ID_OFFSET} AS ob,
@@ -2747,25 +2564,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CROSS_SOURCE_DUP_SQL = rf"""
-WITH bands AS MATERIALIZED ({_minhash_sql(_DUP_SOURCE_SQL)}),
-cand AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
-sh AS MATERIALIZED (
-  SELECT doc_id, lang, list_distinct({_SHINGLES_SQL}) AS shset
-  FROM (
-    SELECT doc_id, lang, text, string_split_regex(text, '\s+') AS toks
-    FROM (
-      SELECT doc_id, lang, text FROM documents
-      UNION ALL
-      SELECT doc_id + {DUP_ID_OFFSET} AS doc_id, lang, text
-      FROM documents WHERE doc_id < {N_INJECTED_DUPS}
-    )
-  )
-),
+WITH {_BANDED_SHINGLES_SQL},
 scored AS (
   SELECT c.a_id % {DUP_ID_OFFSET} AS oa,
          c.b_id % {DUP_ID_OFFSET} AS ob
@@ -2921,12 +2720,7 @@ def dup_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DUP_DEGREE_SQL = rf"""
 WITH bands AS ({_minhash_sql(_DUP_SOURCE_SQL)}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+cand AS ({_BAND_PAIRS_SQL}),
 ends AS (
   SELECT a_id AS doc_id FROM cand
   UNION ALL

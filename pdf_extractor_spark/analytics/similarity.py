@@ -1705,20 +1705,24 @@ ORDER BY vec_id
 RECALL_MAX_PROBE = 4
 
 
-def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ivf_probe(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The IVF-probe scaffolding the four ANN audits share.
+
+    Returns ``(truth, topk)``: ``truth`` is the brute-force top-K
+    ``(vec_id, truth_rank)`` for the query vector; ``topk`` holds, for
+    each probe depth ``n_probe`` in 1..RECALL_MAX_PROBE, the top-K
+    ``(vec_id, n_probe, rk)`` over the ``n_probe`` clusters whose
+    centroids rank closest to the query (ties on the 1e-4 grid broken
+    by label)."""
     from pyspark.sql import Window
 
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.posexplode(F.col("embedding")).alias("i", "qx")
-    ).select("i", F.col("qx").cast("double").alias("qx"))
     # per-(label, dim) centroid components — long form, one hash agg
-    comp = (
-        emb.select(
-            "label", F.posexplode(F.col("embedding")).alias("i", "x")
-        )
-        .groupBy("label", "i")
-        .agg(F.avg(F.col("x").cast("double")).alias("cx"))
+    comp = emb.select(
+        "label", F.posexplode(_as_double(F.col("embedding"))).alias("i", "cx")
+    ).groupBy("label", "i").agg(F.avg("cx").alias("cx"))
+    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.posexplode(_as_double(F.col("embedding"))).alias("i", "qx")
     )
     aff = (
         comp.join(F.broadcast(q), "i")
@@ -1730,9 +1734,8 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "label",
-            floor_round(
-                F.col("dot") / (F.col("cn") * F.col("qn")), 4
-            ).alias("aff"),
+            floor_round(F.col("dot") / (F.col("cn") * F.col("qn")), 4)
+            .alias("aff"),
         )
         .withColumn(
             "label_rank",
@@ -1755,12 +1758,18 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # truth via orderBy+limit → TakeOrderedAndProject (a row_number
     # over an unpartitioned window would funnel the corpus through one
-    # task; the label_rank window above is fine — it runs over the
-    # K-row label table, the bounded-aggregate exception)
+    # task); the rank windows here run over K-row tables — the label
+    # table and the top-K — the bounded-aggregate exception
     truth = (
         scored.orderBy(F.desc("cos"), F.asc("vec_id"))
         .limit(TOP_K)
-        .select("vec_id")
+        .withColumn(
+            "truth_rank",
+            F.row_number().over(
+                Window.orderBy(F.desc("cos"), F.asc("vec_id"))
+            ),
+        )
+        .select("vec_id", "truth_rank")
     )
     probes = spark.range(1, RECALL_MAX_PROBE + 1).select(
         F.col("id").cast("int").alias("n_probe")
@@ -1778,27 +1787,14 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     ).where(F.col("rk") <= TOP_K)
-    return (
-        topk.join(truth.withColumn("hit", F.lit(1)), "vec_id", "left")
-        .groupBy("n_probe")
-        .agg(
-            F.count("*").cast("long").alias("n_returned"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "n_probe",
-            "n_returned",
-            "n_hits",
-            floor_round(F.col("n_hits") / F.lit(float(TOP_K)), 4).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("n_probe")
-    )
+    return truth, topk
 
 
-ANN_RECALL_SQL = f"""
-WITH q AS (
+def _ivf_probe_sql(truth_cols: str) -> str:
+    """The oracle CTEs ``q`` … ``topk`` the four ANN-audit oracles
+    share; ``truth`` projects ``truth_cols`` from the exact top-K
+    (``vec_id``, ``t_rank``)."""
+    return f"""q AS (
   SELECT i, CAST(x AS DOUBLE) AS qx
   FROM (SELECT unnest(embedding) AS x,
                generate_subscripts(embedding, 1) AS i
@@ -1825,14 +1821,14 @@ ranked_labels AS (
 ),
 qv AS (SELECT embedding AS q_embedding FROM embeddings
        WHERE vec_id = {QUERY_VEC_ID}),
-scored AS (
+scored AS MATERIALIZED (
   SELECT vec_id, label,
          CAST(floor(({_cosine_sql('embedding', 'q_embedding')}) * 10000
                     + 1e-6) / 10000 AS DOUBLE) AS cos
   FROM embeddings, qv WHERE vec_id != {QUERY_VEC_ID}
 ),
 truth AS (
-  SELECT vec_id FROM (
+  SELECT {truth_cols} FROM (
     SELECT vec_id,
            row_number() OVER (ORDER BY cos DESC, vec_id ASC) AS t_rank
     FROM scored
@@ -1852,7 +1848,32 @@ topk AS (
                               ORDER BY cos DESC, vec_id ASC) AS rk
     FROM cand
   ) WHERE rk <= {TOP_K}
-)
+)"""
+
+
+def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    truth, topk = _ivf_probe(spark, sf_dir)
+    return (
+        topk.join(truth.select("vec_id", F.lit(1).alias("hit")), "vec_id", "left")
+        .groupBy("n_probe")
+        .agg(
+            F.count("*").cast("long").alias("n_returned"),
+            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias("n_hits"),
+        )
+        .select(
+            "n_probe",
+            "n_returned",
+            "n_hits",
+            floor_round(F.col("n_hits") / F.lit(float(TOP_K)), 4).alias(
+                "recall_at_k"
+            ),
+        )
+        .orderBy("n_probe")
+    )
+
+
+ANN_RECALL_SQL = f"""
+WITH {_ivf_probe_sql("vec_id")}
 SELECT CAST(n_probe AS INT) AS n_probe,
        count(*) AS n_returned,
        CAST(sum(CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -2438,9 +2459,9 @@ ORDER BY margin DESC, x_id, y_id
 # DCG is a pure function of K, computed once in Python and interpolated
 # into BOTH engines as the same literal.
 #
-# Scale shape: identical to ann_recall_audit (centroid affinities over
-# the K-row label table, TakeOrdered truth, per-probe bounded top-k
-# windows); the only addition is a K-row rank join.
+# Scale shape: the shared IVF-probe scaffolding (:func:`_ivf_probe` —
+# centroid affinities over the K-row label table, TakeOrdered truth,
+# per-probe bounded top-k windows) plus a K-row rank join.
 # ---------------------------------------------------------------------------
 
 _IDCG_AT_K = sum(
@@ -2449,78 +2470,12 @@ _IDCG_AT_K = sum(
 
 
 def ann_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = load(spark, sf_dir, "embeddings")
-    comp = emb.select(
-        "label", F.posexplode(_as_double(F.col("embedding"))).alias("i", "cx")
-    ).groupBy("label", "i").agg(F.avg("cx").alias("cx"))
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.posexplode(_as_double(F.col("embedding"))).alias("i", "qx")
-    )
-    aff = (
-        comp.join(F.broadcast(q), "i")
-        .groupBy("label")
-        .agg(
-            F.sum(F.col("cx") * F.col("qx")).alias("dot"),
-            F.sqrt(F.sum(F.col("cx") * F.col("cx"))).alias("cn"),
-            F.sqrt(F.sum(F.col("qx") * F.col("qx"))).alias("qn"),
-        )
-        .select(
-            "label",
-            floor_round(F.col("dot") / (F.col("cn") * F.col("qn")), 4)
-            .alias("aff"),
-        )
-        .withColumn(
-            "label_rank",
-            F.row_number().over(Window.orderBy(F.desc("aff"), F.asc("label"))),
-        )
-    )
-    qvec = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("q_embedding"),
-        _norm_col(F.col("embedding")).alias("q_n"),
-    )
-    cos = _cosine_pre(
-        F.col("embedding"), F.col("q_embedding"), F.col("_n"), F.col("q_n")
-    )
-    scored = (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "label", "embedding",
-                _norm_col(F.col("embedding")).alias("_n"))
-        .crossJoin(F.broadcast(qvec))
-        .select("vec_id", "label", _floor4(cos).alias("cos"))
-    )
-    truth_ranked = (
-        scored.orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
-        # K-row bounded window (the label_rank exception)
-        .withColumn(
-            "truth_rank",
-            F.row_number().over(
-                Window.orderBy(F.desc("cos"), F.asc("vec_id"))
-            ),
-        )
-        .select("vec_id", "truth_rank")
-    )
-    probes = spark.range(1, RECALL_MAX_PROBE + 1).select(
-        F.col("id").cast("int").alias("n_probe")
-    )
-    cand = (
-        scored.join(F.broadcast(aff), "label")
-        .crossJoin(F.broadcast(probes))
-        .where(F.col("label_rank") <= F.col("n_probe"))
-    )
-    topk = cand.withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("n_probe").orderBy(F.desc("cos"), F.asc("vec_id"))
-        ),
-    ).where(F.col("rk") <= TOP_K)
+    truth, topk = _ivf_probe(spark, sf_dir)
     rel = F.coalesce(
         F.lit(TOP_K) - F.col("truth_rank") + 1, F.lit(0)
     ).cast("double")
     return (
-        topk.join(F.broadcast(truth_ranked), "vec_id", "left")
+        topk.join(F.broadcast(truth), "vec_id", "left")
         .groupBy("n_probe")
         .agg(
             F.sum(rel / F.log2(F.col("rk") + 1.0)).alias("dcg"),
@@ -2535,61 +2490,7 @@ def ann_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_NDCG_SQL = f"""
-WITH q AS (
-  SELECT i, CAST(x AS DOUBLE) AS qx
-  FROM (SELECT unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-),
-comp AS (
-  SELECT label, i, avg(CAST(x AS DOUBLE)) AS cx
-  FROM (SELECT label, unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings)
-  GROUP BY 1, 2
-),
-aff AS (
-  SELECT label,
-         floor(sum(cx * qx) / (sqrt(sum(cx * cx)) * sqrt(sum(qx * qx)))
-               * 10000 + 1e-6) / 10000 AS aff
-  FROM comp JOIN q USING (i)
-  GROUP BY label
-),
-ranked_labels AS (
-  SELECT label,
-         row_number() OVER (ORDER BY aff DESC, label ASC) AS label_rank
-  FROM aff
-),
-qv AS (SELECT embedding AS q_embedding FROM embeddings
-       WHERE vec_id = {QUERY_VEC_ID}),
-scored AS MATERIALIZED (
-  SELECT vec_id, label,
-         CAST(floor(({_cosine_sql('embedding', 'q_embedding')}) * 10000
-                    + 1e-6) / 10000 AS DOUBLE) AS cos
-  FROM embeddings, qv WHERE vec_id != {QUERY_VEC_ID}
-),
-truth AS (
-  SELECT vec_id, t_rank AS truth_rank FROM (
-    SELECT vec_id,
-           row_number() OVER (ORDER BY cos DESC, vec_id ASC) AS t_rank
-    FROM scored
-  ) WHERE t_rank <= {TOP_K}
-),
-cand AS (
-  SELECT s.vec_id, s.cos, p.n_probe
-  FROM scored s
-  JOIN ranked_labels r ON r.label = s.label
-  JOIN (SELECT unnest([{", ".join(str(i) for i in range(1, RECALL_MAX_PROBE + 1))}]) AS n_probe) p
-    ON r.label_rank <= p.n_probe
-),
-topk AS (
-  SELECT * FROM (
-    SELECT vec_id, n_probe,
-           row_number() OVER (PARTITION BY n_probe
-                              ORDER BY cos DESC, vec_id ASC) AS rk
-    FROM cand
-  ) WHERE rk <= {TOP_K}
-)
+WITH {_ivf_probe_sql("vec_id, t_rank AS truth_rank")}
 SELECT CAST(n_probe AS INT) AS n_probe,
        CAST(floor(sum(coalesce({TOP_K} - t.truth_rank + 1, 0)
                       / log2(k.rk + 1.0)) * 10000 + 1e-6) / 10000 AS DOUBLE)
@@ -2846,71 +2747,15 @@ ORDER BY label
 # 1e-8 integer grid and summed as exact BIGINTs — never an
 # order-dependent float sum. The cumulative-hit window runs over the
 # <= K rows per probe depth (the K-row bounded window exception).
-# Scale shape: identical to ann_recall_audit / ann_ndcg_audit.
+# Scale shape: the shared IVF-probe scaffolding (:func:`_ivf_probe`).
 # ---------------------------------------------------------------------------
 
 
 def ann_map_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    emb = load(spark, sf_dir, "embeddings")
-    comp = emb.select(
-        "label", F.posexplode(_as_double(F.col("embedding"))).alias("i", "cx")
-    ).groupBy("label", "i").agg(F.avg("cx").alias("cx"))
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.posexplode(_as_double(F.col("embedding"))).alias("i", "qx")
-    )
-    aff = (
-        comp.join(F.broadcast(q), "i")
-        .groupBy("label")
-        .agg(
-            F.sum(F.col("cx") * F.col("qx")).alias("dot"),
-            F.sqrt(F.sum(F.col("cx") * F.col("cx"))).alias("cn"),
-            F.sqrt(F.sum(F.col("qx") * F.col("qx"))).alias("qn"),
-        )
-        .select(
-            "label",
-            floor_round(F.col("dot") / (F.col("cn") * F.col("qn")), 4)
-            .alias("aff"),
-        )
-        .withColumn(
-            "label_rank",
-            F.row_number().over(Window.orderBy(F.desc("aff"), F.asc("label"))),
-        )
-    )
-    qvec = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("q_embedding"),
-        _norm_col(F.col("embedding")).alias("q_n"),
-    )
-    cos = _cosine_pre(
-        F.col("embedding"), F.col("q_embedding"), F.col("_n"), F.col("q_n")
-    )
-    scored = (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "label", "embedding",
-                _norm_col(F.col("embedding")).alias("_n"))
-        .crossJoin(F.broadcast(qvec))
-        .select("vec_id", "label", _floor4(cos).alias("cos"))
-    )
-    truth = (
-        scored.orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id", F.lit(1).alias("is_rel"))
-    )
-    probes = spark.range(1, RECALL_MAX_PROBE + 1).select(
-        F.col("id").cast("int").alias("n_probe")
-    )
-    cand = (
-        scored.join(F.broadcast(aff), "label")
-        .crossJoin(F.broadcast(probes))
-        .where(F.col("label_rank") <= F.col("n_probe"))
-    )
-    topk = cand.withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("n_probe").orderBy(F.desc("cos"), F.asc("vec_id"))
-        ),
-    ).where(F.col("rk") <= TOP_K)
+    truth, topk = _ivf_probe(spark, sf_dir)
+    truth = truth.select("vec_id", F.lit(1).alias("is_rel"))
     hit = topk.join(F.broadcast(truth), "vec_id", "left").select(
         "n_probe", "rk", F.coalesce(F.col("is_rel"), F.lit(0)).alias("rel")
     )
@@ -2955,61 +2800,7 @@ def ann_map_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_MAP_SQL = f"""
-WITH q AS (
-  SELECT i, CAST(x AS DOUBLE) AS qx
-  FROM (SELECT unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-),
-comp AS (
-  SELECT label, i, avg(CAST(x AS DOUBLE)) AS cx
-  FROM (SELECT label, unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings)
-  GROUP BY 1, 2
-),
-aff AS (
-  SELECT label,
-         floor(sum(cx * qx) / (sqrt(sum(cx * cx)) * sqrt(sum(qx * qx)))
-               * 10000 + 1e-6) / 10000 AS aff
-  FROM comp JOIN q USING (i)
-  GROUP BY label
-),
-ranked_labels AS (
-  SELECT label,
-         row_number() OVER (ORDER BY aff DESC, label ASC) AS label_rank
-  FROM aff
-),
-qv AS (SELECT embedding AS q_embedding FROM embeddings
-       WHERE vec_id = {QUERY_VEC_ID}),
-scored AS MATERIALIZED (
-  SELECT vec_id, label,
-         CAST(floor(({_cosine_sql('embedding', 'q_embedding')}) * 10000
-                    + 1e-6) / 10000 AS DOUBLE) AS cos
-  FROM embeddings, qv WHERE vec_id != {QUERY_VEC_ID}
-),
-truth AS (
-  SELECT vec_id, 1 AS is_rel FROM (
-    SELECT vec_id,
-           row_number() OVER (ORDER BY cos DESC, vec_id ASC) AS t_rank
-    FROM scored
-  ) WHERE t_rank <= {TOP_K}
-),
-cand AS (
-  SELECT s.vec_id, s.cos, p.n_probe
-  FROM scored s
-  JOIN ranked_labels r ON r.label = s.label
-  JOIN (SELECT unnest([{", ".join(str(i) for i in range(1, RECALL_MAX_PROBE + 1))}]) AS n_probe) p
-    ON r.label_rank <= p.n_probe
-),
-topk AS (
-  SELECT * FROM (
-    SELECT vec_id, n_probe,
-           row_number() OVER (PARTITION BY n_probe
-                              ORDER BY cos DESC, vec_id ASC) AS rk
-    FROM cand
-  ) WHERE rk <= {TOP_K}
-),
+WITH {_ivf_probe_sql("vec_id, 1 AS is_rel")},
 hit AS (
   SELECT k.n_probe, k.rk, coalesce(t.is_rel, 0) AS rel
   FROM topk k LEFT JOIN truth t ON t.vec_id = k.vec_id
@@ -3225,7 +3016,14 @@ ORDER BY label
 # ---------------------------------------------------------------------------
 
 
-def embedding_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dim_moments(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, Column, Column]:
+    """Per-dimension moments of the embedding components, each floored
+    onto the 1e-6 grid (``xq``): ``(agg, mu, var)`` where ``agg`` is
+    ``(i, n, s, ss)`` with exact integer sums, ``mu`` the mean in grid
+    units and ``var`` the variance in component units, as columns over
+    ``agg``."""
     emb = load(spark, sf_dir, "embeddings")
     comp = emb.select(
         F.posexplode(_as_double(F.col("embedding"))).alias("i", "x")
@@ -3245,6 +3043,11 @@ def embedding_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     var = (
         F.col("ss").cast("double") / F.col("n").cast("double") - mu * mu
     ) / 1.0e12
+    return agg, mu, var
+
+
+def embedding_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    agg, mu, var = _dim_moments(spark, sf_dir)
     scored = agg.select(
         F.col("i").cast("long").alias("dim"),
         floor_round(mu / 1000000.0, 6).alias("mean_c"),
@@ -3325,85 +3128,17 @@ ORDER BY dim
 # the identical op sequence, so the doubles agree bit-for-bit before
 # the final floor6. MRR is a single exact rational (1/first-hit-rank).
 #
-# Scale shape: identical to ann_map_audit — the only state beyond the
-# shared scaffolding is the K-column pivot per probe depth (a bounded
+# Scale shape: the shared IVF-probe scaffolding (:func:`_ivf_probe`);
+# the only state beyond it is the K-column pivot per probe depth (a bounded
 # RECALL_MAX_PROBE × K grid).
 # ---------------------------------------------------------------------------
 
 
 def ann_err_mrr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = load(spark, sf_dir, "embeddings")
-    comp = emb.select(
-        "label", F.posexplode(_as_double(F.col("embedding"))).alias("i", "cx")
-    ).groupBy("label", "i").agg(F.avg("cx").alias("cx"))
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.posexplode(_as_double(F.col("embedding"))).alias("i", "qx")
-    )
-    aff = (
-        comp.join(F.broadcast(q), "i")
-        .groupBy("label")
-        .agg(
-            F.sum(F.col("cx") * F.col("qx")).alias("dot"),
-            F.sqrt(F.sum(F.col("cx") * F.col("cx"))).alias("cn"),
-            F.sqrt(F.sum(F.col("qx") * F.col("qx"))).alias("qn"),
-        )
-        .select(
-            "label",
-            floor_round(F.col("dot") / (F.col("cn") * F.col("qn")), 4)
-            .alias("aff"),
-        )
-        .withColumn(
-            "label_rank",
-            F.row_number().over(Window.orderBy(F.desc("aff"), F.asc("label"))),
-        )
-    )
-    qvec = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("q_embedding"),
-        _norm_col(F.col("embedding")).alias("q_n"),
-    )
-    cos = _cosine_pre(
-        F.col("embedding"), F.col("q_embedding"), F.col("_n"), F.col("q_n")
-    )
-    scored = (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "label", "embedding",
-                _norm_col(F.col("embedding")).alias("_n"))
-        .crossJoin(F.broadcast(qvec))
-        .select("vec_id", "label", _floor4(cos).alias("cos"))
-    )
-    truth_ranked = (
-        scored.orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
-        # K-row bounded window (the label_rank exception)
-        .withColumn(
-            "truth_rank",
-            F.row_number().over(
-                Window.orderBy(F.desc("cos"), F.asc("vec_id"))
-            ),
-        )
-        .select("vec_id", "truth_rank")
-    )
-    probes = spark.range(1, RECALL_MAX_PROBE + 1).select(
-        F.col("id").cast("int").alias("n_probe")
-    )
-    cand = (
-        scored.join(F.broadcast(aff), "label")
-        .crossJoin(F.broadcast(probes))
-        .where(F.col("label_rank") <= F.col("n_probe"))
-    )
-    topk = cand.withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("n_probe").orderBy(
-                F.desc("cos"), F.asc("vec_id")
-            )
-        ),
-    ).where(F.col("rk") <= TOP_K)
+    truth, topk = _ivf_probe(spark, sf_dir)
     g = F.coalesce(F.lit(TOP_K) - F.col("truth_rank") + 1, F.lit(0))
     pivoted = (
-        topk.join(F.broadcast(truth_ranked), "vec_id", "left")
+        topk.join(F.broadcast(truth), "vec_id", "left")
         .groupBy("n_probe")
         .agg(
             F.min(F.when(g > 0, F.col("rk"))).alias("first_hit"),
@@ -3447,61 +3182,7 @@ def _err_sql_chain() -> str:
 
 
 ANN_ERR_MRR_SQL = f"""
-WITH q AS (
-  SELECT i, CAST(x AS DOUBLE) AS qx
-  FROM (SELECT unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-),
-comp AS (
-  SELECT label, i, avg(CAST(x AS DOUBLE)) AS cx
-  FROM (SELECT label, unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings)
-  GROUP BY 1, 2
-),
-aff AS (
-  SELECT label,
-         floor(sum(cx * qx) / (sqrt(sum(cx * cx)) * sqrt(sum(qx * qx)))
-               * 10000 + 1e-6) / 10000 AS aff
-  FROM comp JOIN q USING (i)
-  GROUP BY label
-),
-ranked_labels AS (
-  SELECT label,
-         row_number() OVER (ORDER BY aff DESC, label ASC) AS label_rank
-  FROM aff
-),
-qv AS (SELECT embedding AS q_embedding FROM embeddings
-       WHERE vec_id = {QUERY_VEC_ID}),
-scored AS MATERIALIZED (
-  SELECT vec_id, label,
-         CAST(floor(({_cosine_sql('embedding', 'q_embedding')}) * 10000
-                    + 1e-6) / 10000 AS DOUBLE) AS cos
-  FROM embeddings, qv WHERE vec_id != {QUERY_VEC_ID}
-),
-truth AS (
-  SELECT vec_id, t_rank AS truth_rank FROM (
-    SELECT vec_id,
-           row_number() OVER (ORDER BY cos DESC, vec_id ASC) AS t_rank
-    FROM scored
-  ) WHERE t_rank <= {TOP_K}
-),
-cand AS (
-  SELECT s.vec_id, s.cos, p.n_probe
-  FROM scored s
-  JOIN ranked_labels r ON r.label = s.label
-  JOIN (SELECT unnest([{", ".join(str(i) for i in range(1, RECALL_MAX_PROBE + 1))}]) AS n_probe) p
-    ON r.label_rank <= p.n_probe
-),
-topk AS (
-  SELECT * FROM (
-    SELECT vec_id, n_probe,
-           row_number() OVER (PARTITION BY n_probe
-                              ORDER BY cos DESC, vec_id ASC) AS rk
-    FROM cand
-  ) WHERE rk <= {TOP_K}
-),
+WITH {_ivf_probe_sql("vec_id, t_rank AS truth_rank")},
 graded AS (
   SELECT k.n_probe, k.rk,
          coalesce({TOP_K} - t.truth_rank + 1, 0) AS g
@@ -3547,25 +3228,7 @@ ORDER BY n_probe
 
 
 def embedding_effective_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings")
-    comp = emb.select(
-        F.posexplode(_as_double(F.col("embedding"))).alias("i", "x")
-    ).select(
-        "i",
-        F.floor(_prof_clamp(F.col("x")) * 1000000 + 1e-6)
-        .cast("long")
-        .alias("xq"),
-    )
-    agg = comp.groupBy("i").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("xq").cast("long").alias("s"),
-        F.sum((F.col("xq") * F.col("xq")).cast("decimal(38,0)"))
-        .alias("ss"),
-    )
-    mu = F.col("s").cast("double") / F.col("n").cast("double")
-    var = (
-        F.col("ss").cast("double") / F.col("n").cast("double") - mu * mu
-    ) / 1.0e12
+    agg, _, var = _dim_moments(spark, sf_dir)
     scored = agg.select(
         F.floor(var * 100000000 + 1e-6).cast("long").alias("vq")
     )
@@ -3659,21 +3322,41 @@ LSH_CURVE_BITS = (4, 6, 8)
 
 def lsh_bits_width_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("embedding")
+    return _width_curve(
+        [
+            (
+                bits,
+                emb.select(
+                    F.element_at(
+                        _hp_band_structs(
+                            F.col("embedding"), n_bands=1, n_bits=bits
+                        ),
+                        1,
+                    )["band_key"].alias("band_key")
+                ),
+            )
+            for bits in LSH_CURVE_BITS
+        ],
+        "n_bits",
+        "n_buckets",
+    )
+
+
+def _width_curve(
+    keyed: list[tuple[int, DataFrame]], setting_col: str, count_col: str
+) -> DataFrame:
+    """One curve row per ``(setting, keys)``: the distinct-key count
+    (``count_col``), max/mean width and the pair mass Σ w·(w−1)/2 of
+    the groups ``keys`` (a one-column frame) falls into."""
     curves = []
-    for bits in LSH_CURVE_BITS:
-        keys = emb.select(
-            F.element_at(
-                _hp_band_structs(F.col("embedding"), n_bands=1, n_bits=bits),
-                1,
-            )["band_key"].alias("band_key")
-        )
-        widths = keys.groupBy("band_key").agg(
+    for setting, keys in keyed:
+        widths = keys.groupBy(*keys.columns).agg(
             F.count("*").cast("long").alias("w")
         )
         curves.append(
             widths.agg(
-                F.lit(bits).alias("n_bits"),
-                F.count("*").cast("long").alias("n_buckets"),
+                F.lit(setting).alias(setting_col),
+                F.count("*").cast("long").alias(count_col),
                 F.max("w").cast("long").alias("max_width"),
                 F.sum("w").cast("long").alias("n_vecs"),
                 F.sum(F.col("w") * (F.col("w") - 1) / 2)
@@ -3685,15 +3368,15 @@ def lsh_bits_width_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for c in curves[1:]:
         out = out.unionByName(c)
     return out.select(
-        "n_bits",
-        "n_buckets",
+        setting_col,
+        count_col,
         "max_width",
         floor_round(
-            F.col("n_vecs").cast("double") / F.col("n_buckets").cast("double"),
+            F.col("n_vecs").cast("double") / F.col(count_col).cast("double"),
             4,
         ).alias("mean_width"),
         "pair_mass",
-    ).orderBy("n_bits")
+    ).orderBy(setting_col)
 
 
 def _lsh_curve_sql_one(bits: int) -> str:
@@ -3750,7 +3433,7 @@ def semdedup_k_width_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding",
                 _norm_col(F.col("embedding")).alias("_n"))
     )
-    curves = []
+    keyed = []
     for k in SEMDEDUP_CURVE_K:
         seeds = F.broadcast(
             emb.filter(F.col("vec_id") < k).select(
@@ -3782,34 +3465,8 @@ def semdedup_k_width_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select((-F.col("w")["nid"]).cast("int").alias("cluster"))
         )
-        widths = assigned.groupBy("cluster").agg(
-            F.count("*").cast("long").alias("w")
-        )
-        curves.append(
-            widths.agg(
-                F.lit(k).alias("k_seeds"),
-                F.count("*").cast("long").alias("n_clusters"),
-                F.max("w").cast("long").alias("max_width"),
-                F.sum("w").cast("long").alias("n_vecs"),
-                F.sum(F.col("w") * (F.col("w") - 1) / 2)
-                .cast("long")
-                .alias("pair_mass"),
-            )
-        )
-    out = curves[0]
-    for c in curves[1:]:
-        out = out.unionByName(c)
-    return out.select(
-        "k_seeds",
-        "n_clusters",
-        "max_width",
-        floor_round(
-            F.col("n_vecs").cast("double")
-            / F.col("n_clusters").cast("double"),
-            4,
-        ).alias("mean_width"),
-        "pair_mass",
-    ).orderBy("k_seeds")
+        keyed.append((k, assigned))
+    return _width_curve(keyed, "k_seeds", "n_clusters")
 
 
 def _semdedup_curve_sql_one(k: int) -> str:

@@ -16,9 +16,32 @@ needed), for every document whatever its span count.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from .operators.extract import extract_elements
 from .schema import DOCS_SCHEMA, FLAT_SCHEMA
+
+
+def _drain(
+    writer: DataStreamWriter, checkpoint_dir: str, output_dir: str | None = None
+) -> StreamingQuery:
+    """Run ``writer`` under ``trigger(availableNow=True)``: process
+    everything new since ``checkpoint_dir``'s last commit, then stop.
+    With ``output_dir`` the sink is an append-only parquet directory.
+    Returns the finished StreamingQuery."""
+    if output_dir is not None:
+        writer = (
+            writer.format("parquet")
+            .option("path", output_dir)
+            .outputMode("append")
+        )
+    query = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return query
 
 
 def stream_extract(
@@ -40,16 +63,7 @@ def stream_extract(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     flat = extract_elements(reader.parquet(input_dir), merge_strategy)
-    query = (
-        flat.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(flat.writeStream, checkpoint_dir, output_dir)
 
 
 def read_stream_output(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -108,16 +122,7 @@ def stream_windowed_event_counts(
             "sum_value",
         )
     )
-    query = (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(agg.writeStream, checkpoint_dir, output_dir)
 
 
 def stream_sessionize_stateful(
@@ -197,16 +202,7 @@ def stream_sessionize_stateful(
     sessions = ev.groupBy("user_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-    query = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(sessions.writeStream, checkpoint_dir, output_dir)
 
 
 def _merge_flat_into_store(
@@ -316,14 +312,7 @@ def stream_extract_merge(
         finally:
             latest.unpersist()
 
-    query = (
-        docs.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(docs.writeStream.foreachBatch(merge_batch), checkpoint_dir)
 
 
 def stream_dedup_exact(
@@ -363,16 +352,7 @@ def stream_dedup_exact(
         .dropDuplicatesWithinWatermark(["fp"])
         .select("doc_id", "spans")
     )
-    query = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(deduped.writeStream, checkpoint_dir, output_dir)
 
 
 def stream_neardup_ingest(
@@ -411,14 +391,7 @@ def stream_neardup_ingest(
             )
         # else: the store commit inside neardup_ingest already executed
 
-    query = (
-        docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(docs.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def stream_vector_ingest(
@@ -447,14 +420,7 @@ def stream_vector_ingest(
                 f"{statuses_dir}/batch=b{epoch_id}"
             )
 
-    query = (
-        vecs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(vecs.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -544,17 +510,9 @@ def stream_quality_gate(
         .otherwise(F.lit("pass"))
         .alias("verdict"),
     )
-    query = (
-        routed.writeStream.format("parquet")
-        .partitionBy("verdict")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        routed.writeStream.partitionBy("verdict"), checkpoint_dir, output_dir
     )
-    query.awaitTermination()
-    return query
 
 
 # ---------------------------------------------------------------------------
@@ -622,16 +580,7 @@ def stream_corrections_join(
         & (F.col("corr_ts") <= F.col("el_ts") + F.expr(f"INTERVAL {join_window_s} SECONDS")),
         "inner",
     ).select("doc_id", "offset", "text", "corrected_text", "el_ts", "corr_ts")
-    query = (
-        joined.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(joined.writeStream, checkpoint_dir, output_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -743,14 +692,7 @@ def stream_convert_progress(
             )
             raise
 
-    query = (
-        docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(docs.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def read_progress_events(spark: SparkSession, events_dir: str) -> DataFrame:
