@@ -463,13 +463,13 @@ def build_parser() -> argparse.ArgumentParser:
     la.add_argument("--key", default=None, help="custom key (optional)")
     la.add_argument("--date", default=None,
                     help="created_date override (YYYY-MM-DD)")
-    la.add_argument("--pretty", action="store_true", default=True)
+    la.add_argument("--pretty", action=argparse.BooleanOptionalAction, default=True)
     la.set_defaults(fn=_cmd_lessons)
 
     lg = lsub.add_parser("get", help="retrieve a lesson by key")
     lg.add_argument("key")
     lg.add_argument("--store", required=True)
-    lg.add_argument("--pretty", action="store_true", default=True)
+    lg.add_argument("--pretty", action=argparse.BooleanOptionalAction, default=True)
     lg.set_defaults(fn=_cmd_lessons)
 
     ll = lsub.add_parser("list", help="list lessons with filters")
@@ -477,7 +477,7 @@ def build_parser() -> argparse.ArgumentParser:
     ll.add_argument("--tags", default=None, help="comma-separated filter")
     ll.add_argument("--project", default=None)
     ll.add_argument("--limit", type=int, default=20)
-    ll.add_argument("--pretty", action="store_true", default=True)
+    ll.add_argument("--pretty", action=argparse.BooleanOptionalAction, default=True)
     ll.set_defaults(fn=_cmd_lessons)
 
     lu = lsub.add_parser("update", help="update a lesson")
@@ -491,7 +491,7 @@ def build_parser() -> argparse.ArgumentParser:
     lu.add_argument("--item-description", default=None)
     lu.add_argument("--item-details", default=None)
     lu.add_argument("--item-benefit", default=None)
-    lu.add_argument("--pretty", action="store_true", default=True)
+    lu.add_argument("--pretty", action=argparse.BooleanOptionalAction, default=True)
     lu.set_defaults(fn=_cmd_lessons)
 
     ld = lsub.add_parser("delete", help="delete a lesson")

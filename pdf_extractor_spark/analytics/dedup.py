@@ -689,6 +689,28 @@ def _collapse_batch(batch: DataFrame):
     return groups, rep_bands
 
 
+def _rep_status(
+    groups: DataFrame, vs_store: DataFrame, in_batch: DataFrame
+) -> DataFrame:
+    """(fp, rep, rep_status) per fingerprint group: ``dup_of_corpus``
+    when the rep hits the store (``vs_store.store_hit``), else
+    ``dup_in_batch`` when it has a smaller batch collider
+    (``in_batch.batch_hit``), else ``kept``. Shared by the text and the
+    vector ingest."""
+    return (
+        groups.join(vs_store, "rep", "left")
+        .join(in_batch, "rep", "left")
+        .select(
+            "fp",
+            "rep",
+            F.when(F.col("store_hit"), F.lit("dup_of_corpus"))
+            .when(F.col("batch_hit"), F.lit("dup_in_batch"))
+            .otherwise(F.lit("kept"))
+            .alias("rep_status"),
+        )
+    )
+
+
 def _statuses_from_reps(
     store_bands: DataFrame,
     batch: DataFrame,
@@ -719,18 +741,7 @@ def _statuses_from_reps(
         .distinct()
         .withColumn("batch_hit", F.lit(True))
     )
-    rep_status = (
-        groups.join(vs_store, "rep", "left")
-        .join(in_batch, "rep", "left")
-        .select(
-            "fp",
-            "rep",
-            F.when(F.col("store_hit"), F.lit("dup_of_corpus"))
-            .when(F.col("batch_hit"), F.lit("dup_in_batch"))
-            .otherwise(F.lit("kept"))
-            .alias("rep_status"),
-        )
-    )
+    rep_status = _rep_status(groups, vs_store, in_batch)
     return batch.join(rep_status, "fp").select(
         "doc_id",
         F.when(F.col("doc_id") == F.col("rep"), F.col("rep_status"))

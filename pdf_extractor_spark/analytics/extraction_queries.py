@@ -87,6 +87,7 @@ def fused_extracted_flat(
         from ..operators.extract import (
             _arrow_flat_schema,
             _flat_record_batch,
+            _pylist,
             _span_cols,
         )
 
@@ -96,7 +97,7 @@ def fused_extracted_flat(
                 _span_cols(
                     f"doc-{i:07d}", make_doc_spans(i, mega_every=50, mega_factor=20)
                 )
-                for i in batch.column(0).to_pylist()
+                for i in _pylist(batch.column(0))
             )
             yield _flat_record_batch(docs, merge_strategy, schema)
 

@@ -817,6 +817,8 @@ def _vec_statuses_from_reps(
     groups: DataFrame,
     rep_bands: DataFrame,
 ) -> DataFrame:
+    from .dedup import _rep_status
+
     batch = batch.select(
         "vec_id", "embedding", F.md5(F.to_json(F.struct("embedding"))).alias("fp")
     )
@@ -875,18 +877,7 @@ def _vec_statuses_from_reps(
         .distinct()
         .withColumn("batch_hit", F.lit(True))
     )
-    rep_status = (
-        groups.join(vs_store, "rep", "left")
-        .join(in_batch, "rep", "left")
-        .select(
-            "fp",
-            "rep",
-            F.when(F.col("store_hit"), F.lit("dup_of_corpus"))
-            .when(F.col("batch_hit"), F.lit("dup_in_batch"))
-            .otherwise(F.lit("kept"))
-            .alias("rep_status"),
-        )
-    )
+    rep_status = _rep_status(groups, vs_store, in_batch)
     # members inherit through their rep; a zero-norm member cannot dup
     # against its own (identical) rep — cosine NULL — so it stays kept
     self_sim = (

@@ -73,27 +73,55 @@ def _flat_record_batch(docs, merge_strategy: str, schema):
     )
 
 
+def _pylist(arr) -> list:
+    """Arrow array → Python list through Arrow's C conversion
+    (``to_numpy(zero_copy_only=False).tolist()``), without boxing every
+    element through a pyarrow scalar first.
+
+    Strings come back as ``str``/``None`` and null-free integers as
+    ``int``. ``to_numpy`` would turn an integer array with nulls into
+    floats and NaN, so that one case takes the per-scalar conversion
+    and its ``None`` reaches ``docmodel``, which owns the null-offset
+    → 0 rule.
+    """
+    import pyarrow as pa
+
+    if arr.null_count and pa.types.is_integer(arr.type):
+        return arr.to_pylist()
+    return arr.to_numpy(zero_copy_only=False).tolist()
+
+
 def _flat_arrow_batches(merge_strategy: str):
     """mapInArrow kernel over (doc_id, spans) batches: columnar span
-    access — no per-span dicts, no pandas round trip."""
+    access — no per-span dicts, no pandas round trip.
+
+    Ingest contract: each span field is converted once per batch with
+    :func:`_pylist` over the whole ``spans.values`` child, and each doc
+    takes the ``[offsets[i], offsets[i+1])`` slice of those lists. The
+    list offsets are absolute into ``.values`` even when the batch is a
+    slice of a larger array, so a sliced batch needs no re-basing. A
+    null ``spans`` has equal offsets and reads as no spans. Null
+    ``offset`` values stay ``None`` (the integer-null rule of
+    :func:`_pylist`) for ``extract_document_cols`` to treat as 0.
+    """
 
     def gen(batches):
         import pyarrow as pa
 
         schema = _arrow_flat_schema()
         for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
+            doc_ids = _pylist(batch.column(0))
             spans = batch.column(1)
             if isinstance(spans, pa.ChunkedArray):
                 spans = spans.combine_chunks()
             # .values + absolute .offsets stay consistent even if the
             # batch array is a slice (flatten() would re-base values)
             flat = spans.values
-            kinds = flat.field("kind").to_pylist()
-            texts = flat.field("text").to_pylist()
-            refs = flat.field("media_ref").to_pylist()
-            offs = flat.field("offset").to_pylist()
-            lo = spans.offsets.to_pylist()
+            kinds = _pylist(flat.field("kind"))
+            texts = _pylist(flat.field("text"))
+            refs = _pylist(flat.field("media_ref"))
+            offs = _pylist(flat.field("offset"))
+            lo = spans.offsets.to_numpy().tolist()
             docs = (
                 (did, kinds[s:e], texts[s:e], refs[s:e], offs[s:e])
                 for did, s, e in zip(doc_ids, lo, lo[1:])
@@ -147,7 +175,7 @@ def _file_arrow_batches(root: str, to_spans: SpansFn, merge_strategy: str):
     def gen(batches):
         schema = _arrow_flat_schema()
         for batch in batches:
-            paths = batch.column(0).to_pylist()
+            paths = _pylist(batch.column(0))
             contents = batch.column(1)
             # one file's bytes in Python at a time, not the whole batch's
             docs = (

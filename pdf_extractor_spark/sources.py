@@ -123,8 +123,10 @@ def file_doc_ids(
     def gen(batches):
         import pyarrow as pa
 
+        from .operators.extract import _pylist
+
         for batch in batches:
-            ids = [doc_id_from(p, root) for p in batch.column(0).to_pylist()]
+            ids = [doc_id_from(p, root) for p in _pylist(batch.column(0))]
             yield pa.RecordBatch.from_arrays([pa.array(ids, pa.string())], ["doc_id"])
 
     return binary_files(spark, path, glob, recursive).select("path").mapInArrow(

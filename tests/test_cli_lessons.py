@@ -195,3 +195,22 @@ def test_lessons_delete_confirm_semantics(spark, tmp_path, capsys):
     # deleting a missing key is the reference's error path
     rc = main(["lessons", "delete", "lesson_d", "--store", store, "--yes"])
     assert rc == 1
+
+
+def test_lessons_get_pretty_toggle(spark, tmp_path, capsys):
+    """--pretty is the default (indented JSON); --no-pretty prints the
+    same document on one line."""
+    from pdf_extractor_spark.__main__ import main
+
+    store = str(tmp_path / "lessons")
+    assert _add(main, store, "lesson_p1", "pretty toggle") == 0
+    capsys.readouterr()
+
+    assert main(["lessons", "get", "lesson_p1", "--store", store]) == 0
+    pretty = capsys.readouterr().out
+    assert pretty.startswith("{\n  ")
+
+    assert main(["lessons", "get", "lesson_p1", "--store", store, "--no-pretty"]) == 0
+    compact = capsys.readouterr().out
+    assert compact.count("\n") == 1
+    assert json.loads(compact) == json.loads(pretty)

@@ -7,8 +7,9 @@ non-comment lines. A line is duplicated when it sits in a kept window
 whose exact text occurs more than once anywhere in the package. The
 ceilings below are the counts reached once the repeated query families
 of ``similarity.py``/``dedup.py`` and the availableNow tails of
-``streaming.py`` were folded into shared builders; a change that copies
-those blocks back fails here.
+``streaming.py`` were folded into shared builders, and the rep-status
+join of the text and vector ingest became one helper; a change that
+copies those blocks back fails here.
 """
 
 from collections import defaultdict
@@ -19,8 +20,8 @@ WINDOW = 8
 MIN_CODE_LINES = 6
 
 CEILINGS = {
-    "analytics/similarity.py": 67,
-    "analytics/dedup.py": 33,
+    "analytics/similarity.py": 52,
+    "analytics/dedup.py": 18,
     "streaming.py": 0,
 }
 

@@ -129,6 +129,67 @@ def test_mega_doc_tied_and_null_offsets_match_oracle(spark):
     assert tuples([e.asDict() for e in nested["out_spans"]]) == expect
 
 
+def _ingest_edge_docs():
+    """Docs for the generator's ingest edge cases: null and empty
+    ``spans``, null kind/text/media_ref, null and tied offsets, and
+    non-ASCII and astral-plane text."""
+    from pdf_extractor_spark.corpus import make_doc_spans
+
+    def sp(kind, text, ref, off):
+        return {"kind": kind, "text": text, "media_ref": ref, "offset": off}
+
+    odd = [
+        sp("heading", "# Größe — 𝔘𝔫𝔦𝔠𝔬𝔡𝔢", "", 4),
+        sp("text", "naïve café 😀 text", None, 2),
+        sp(None, "kindless", "", 2),
+        sp("text", None, "", None),
+        sp("image", "", "img/ü.png", 2),
+        sp("table", "| a | 😀 |", None, 7),
+        sp("table", "|---|---|", "", None),
+        sp("table", "| 1 | 𝔘 |", "", 7),
+        sp("text", "line after ties", "", 1),
+    ]
+    return [
+        {"doc_id": "plain", "spans": make_doc_spans(1, mega_every=0, mega_factor=1)},
+        {"doc_id": "null-spans", "spans": None},
+        {"doc_id": "odd", "spans": odd},
+        {"doc_id": "empty", "spans": []},
+        {"doc_id": "all-null-offsets", "spans": [{**s, "offset": None} for s in odd]},
+        {"doc_id": "ünï-😀", "spans": make_doc_spans(2, mega_every=0, mega_factor=1)},
+        {"doc_id": "tail", "spans": [sp("text", "last", "", 0)]},
+    ]
+
+
+@pytest.mark.parametrize("chunk", [None, 2])
+def test_flat_generator_ingest_matches_oracle(chunk):
+    """_flat_arrow_batches on a fresh batch and on sliced batches
+    (Table.to_batches(max_chunksize=...): each batch's ``spans`` is a
+    slice, so ``.values`` is the whole child buffer and the list
+    offsets are absolute). Every doc's rows equal extract_document."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pdf_extractor_spark.operators.extract import _flat_arrow_batches
+    from pdf_extractor_spark.schema import ELEMENT_COLUMNS
+
+    docs = _ingest_edge_docs()
+    table = pa.Table.from_pylist(docs, schema=to_arrow_schema(DOCS_SCHEMA))
+    if chunk is None:
+        batches = [table.combine_chunks().to_batches()[0]]
+    else:
+        batches = table.to_batches(max_chunksize=chunk)
+        assert any(b.column(1).offset > 0 for b in batches)
+    got: dict = {}
+    for out in _flat_arrow_batches("default")(iter(batches)):
+        for row in out.to_pylist():
+            got.setdefault(row.pop("doc_id"), []).append(row)
+    for doc in docs:
+        expect = extract_document(doc["spans"] or [])
+        expect = [{c: el[c] for c in ELEMENT_COLUMNS} for el in expect]
+        assert got.get(doc["doc_id"], []) == expect, doc["doc_id"]
+        assert all(type(r["offset"]) is int for r in got.get(doc["doc_id"], []))
+
+
 def test_deterministic_across_runs(spark, small_corpus):
     rows, df = small_corpus
     a = extract_spans(df).orderBy("doc_id").collect()
