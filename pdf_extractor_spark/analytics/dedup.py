@@ -154,8 +154,9 @@ def _shingles(toks: Column, text_col: Column) -> Column:
     return F.when(F.size(toks) >= SHINGLE, windows).otherwise(F.array(text_col))
 
 
-def _with_bands(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, band_id, band_hash), one row per band.
+def _minhash_sigs(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, sig0 … sig{MINHASH_K-1}): the MinHash
+    signature table every band and estimate consumer reads.
 
     Signature computation is explode → hash-aggregate, NOT a per-row
     higher-order-function chain: Spark evaluates HOF lambdas
@@ -170,12 +171,16 @@ def _with_bands(docs: DataFrame) -> DataFrame:
     ).select(
         "doc_id", F.explode(_shingles(F.col("toks"), F.col("text"))).alias("s")
     )
-    sigs = per_sh.groupBy("doc_id").agg(
+    return per_sh.groupBy("doc_id").agg(
         *[
             F.min(F.md5(F.concat(F.col("s"), F.lit(f"#{k}")))).alias(f"sig{k}")
             for k in range(MINHASH_K)
         ]
     )
+
+
+def _sig_bands(sigs: DataFrame) -> DataFrame:
+    """Signature table → (doc_id, band_id, band_hash), one row per band."""
     bands = F.array(
         *[
             F.struct(
@@ -189,16 +194,21 @@ def _with_bands(docs: DataFrame) -> DataFrame:
             for b in range(LSH_BANDS)
         ]
     )
-    out = sigs.select("doc_id", F.explode(bands).alias("bb")).select(
+    return sigs.select("doc_id", F.explode(bands).alias("bb")).select(
         "doc_id",
         F.col("bb.band_id").alias("band_id"),
         F.col("bb.band_hash").alias("band_hash"),
     )
-    # Persist: every consumer self-joins bands (a × b); the cached
-    # output is tiny — 4 rows of (id, int, 32-char hash) per doc —
-    # exactly the signature table a 100 TB run would materialize
-    # before LSH joining.
-    return out.persist()
+
+
+def _with_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, band_id, band_hash), one row per band.
+
+    Persist: every consumer self-joins bands (a × b); the cached
+    output is tiny — 4 rows of (id, int, 32-char hash) per doc —
+    exactly the signature table a 100 TB run would materialize
+    before LSH joining."""
+    return _sig_bands(_minhash_sigs(docs)).persist()
 
 
 def minhash_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,9 +260,8 @@ def _docs_with_injected_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(dups)
 
 
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs sharing ≥1 LSH band (tested with injected exact dups)."""
-    bands = _with_bands(_docs_with_injected_dups(spark, sf_dir))
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Every distinct (a_id < b_id) pair sharing ≥1 band of ``bands``."""
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -264,6 +273,11 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .distinct()
     )
+
+
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Docs sharing ≥1 LSH band (tested with injected exact dups)."""
+    return _band_pairs(_with_bands(_docs_with_injected_dups(spark, sf_dir)))
 
 
 _DUP_SOURCE_SQL = f"""
@@ -2008,26 +2022,16 @@ ORDER BY p.a_id, p.b_id
 # error is their difference pre-floor, floor4 on all three outputs.
 # Candidates ride the SAME injected-dup band self-join as
 # minhash_lsh_pairs (the injected exact dups anchor est = exact = 1,
-# err = 0); signatures are the same explode → min-md5 hash aggregate
-# the band table is built from — a second bounded read of the
-# signature table a 100 TB run would have materialized anyway.
+# err = 0), banded from the audit's one persisted signature table, so
+# the signatures are computed once and read twice: by the bands and by
+# the per-pair match count.
 # ---------------------------------------------------------------------------
 
 
 def minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool = _docs_with_injected_dups(spark, sf_dir)
-    per_sh = pool.select(
-        "doc_id", "text", _tokens().alias("toks")
-    ).select(
-        "doc_id", F.explode(_shingles(F.col("toks"), F.col("text"))).alias("s")
-    )
-    sigs = per_sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.col("s"), F.lit(f"#{k}")))).alias(f"sig{k}")
-            for k in range(MINHASH_K)
-        ]
-    ).persist()
-    cand = minhash_lsh_pairs(spark, sf_dir)
+    sigs = _minhash_sigs(pool).persist()
+    cand = _band_pairs(_sig_bands(sigs))
     sh = pool.select(
         "doc_id", "text", _tokens().alias("toks")
     ).select(

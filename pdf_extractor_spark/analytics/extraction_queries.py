@@ -66,7 +66,7 @@ def fused_extracted_flat(
 
     Every doc, mega-ids included, goes through the shared emitter
     ``operators.extract._flat_record_batch`` (so through
-    ``docmodel.extract_document_cols``, the single semantic source) —
+    ``docmodel.extract_document_rows``, the single semantic source) —
     pinned by tests/test_extract_fused.py full-row equality vs the
     unfused pipeline."""
     from ..schema import FLAT_SCHEMA

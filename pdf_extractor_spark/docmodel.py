@@ -1,18 +1,21 @@
 """Per-document extraction state machine (pure Python, Arrow-batch friendly).
 
 This module is the single source of truth for the engine's extraction
-semantics. It is executed on executors inside Arrow-vectorized pandas
-UDFs (see ``operators/extract.py``) and doubles as the golden-fixture
-oracle in the test suite — the same function, so pipeline and oracle
-cannot drift.
+semantics. :func:`extract_document_rows` runs on executors inside the
+``mapInArrow`` generators of ``operators/extract.py``, which transpose
+its element rows straight into Arrow columns. The dict views over it
+(:func:`extract_document_cols`, :func:`extract_document`) are the
+golden-fixture oracle in the test suite — the same state machine, so
+pipeline and oracle cannot drift.
 
 Input: one document = ordered list of span dicts
     {kind, text, media_ref, offset}
 with kind ∈ {heading, text, table_row, image, code, html, page_marker}
 (the north-rule input shape, BASELINE.json ``input_hint``).
 
-Output: ordered list of extracted element dicts with kind ∈
-{heading, text, table, image, code}; equality tuple is
+Output: ordered extracted elements, as rows in
+``schema.ELEMENT_COLUMNS`` order or as dicts keyed by those names, with
+kind ∈ {heading, text, table, image, code}; equality tuple is
 (kind, text, media_ref, offset-order) per the north rule.
 
 Reference semantics re-implemented here (citations into the read-only
@@ -38,9 +41,18 @@ import re
 from typing import Any, Dict, List, Optional
 
 from .codemeta import extract_code_metadata
+from .schema import ELEMENT_COLUMNS
 from .textproc import clean_title, html_to_text, md5_hex, ocr_normalize, token_count
 
 Span = Dict[str, Any]
+# one extracted element: a list in ELEMENT_COLUMNS order
+Row = List[Any]
+
+_COL = {c: i for i, c in enumerate(ELEMENT_COLUMNS)}
+_KIND, _TEXT, _OFFSET = _COL["kind"], _COL["text"], _COL["offset"]
+_TOKENS, _SECTION_ID = _COL["token_count"], _COL["section_id"]
+_HEADERS, _ROWS = _COL["table_headers"], _COL["table_rows"]
+_MULTI_PAGE, _PAGE_RANGE = _COL["is_multi_page"], _COL["page_range"]
 
 HEADING_RE = re.compile(r"^(#{1,6})\s*(.*)$", re.DOTALL)
 PAGE_RE = re.compile(r"<!--\s*page:\s*(\d+)\s*-->")
@@ -223,33 +235,41 @@ def _make_element(
     section_path: List[str],
     table: Optional[Dict[str, Any]] = None,
     code: Optional[Dict[str, Any]] = None,
-) -> Dict[str, Any]:
-    # section_path is stored by reference, not copied: the state machine
-    # never mutates the current path list in place (the heading branch
-    # rebinds a freshly built list), so sharing is safe and saves one
-    # list copy per element on the hot path.
-    return {
-        "kind": kind,
-        "text": text,
-        "media_ref": media_ref,
-        "offset": -1,  # assigned after the merge pass
-        "page": page,
-        "level": level,
-        "token_count": token_count(text),
-        "section_path": section_path,
-        "section_id": md5_hex(text),
-        "table_headers": (table or {}).get("headers"),
-        "table_rows": (table or {}).get("rows"),
-        "is_multi_page": False,
-        "page_range": None,
-        # code_metadata contract (markdown_extractor.py:627-636; the
-        # {language, length, functions} shape is pinned by the
-        # reference's own fixture, context7 markdown_extractor.py:719).
-        # length = len(text) by construction, so only language and the
-        # function structs need columns.
-        "code_language": (code or {}).get("language"),
-        "code_functions": (code or {}).get("functions"),
-    }
+) -> Row:
+    """One element row in ``schema.ELEMENT_COLUMNS`` order.
+
+    ``offset``, ``token_count`` and ``section_id`` are placeholders: the
+    final pass of :func:`extract_document_rows` fills them once per
+    element that survives the table merge.
+
+    ``section_path`` is stored by reference, not copied: the state
+    machine never mutates the current path list in place (the heading
+    branch rebinds a freshly built list), so sharing is safe and saves
+    one list copy per element on the hot path.
+
+    code_metadata contract (markdown_extractor.py:627-636; the
+    {language, length, functions} shape is pinned by the reference's
+    own fixture, context7 markdown_extractor.py:719). length = len(text)
+    by construction, so only language and the function structs need
+    columns.
+    """
+    return [
+        kind,
+        text,
+        media_ref,
+        -1,  # offset
+        page,
+        level,
+        0,  # token_count
+        section_path,
+        "",  # section_id
+        table["headers"] if table else None,
+        table["rows"] if table else None,
+        False,  # is_multi_page
+        None,  # page_range
+        code["language"] if code else None,
+        code["functions"] if code else None,
+    ]
 
 
 def extract_document(
@@ -275,13 +295,33 @@ def extract_document_cols(
     kinds: List[Optional[str]],
     texts: List[Optional[str]],
     media_refs: List[Optional[str]],
-    offsets: List[int],
+    offsets: List[Optional[int]],
     merge_strategy: str = "default",
 ) -> List[Dict[str, Any]]:
-    """Columnar entry point (the Arrow fast path): four parallel lists
-    instead of per-span dicts. Same semantics as :func:`extract_document`
-    — that wrapper delegates here, so there is still exactly ONE
+    """Columnar entry point: four parallel lists instead of per-span
+    dicts, one element dict per extracted element. A dict view over
+    :func:`extract_document_rows`, so there is still exactly ONE
     implementation of the extraction state machine.
+    """
+    return [
+        dict(zip(ELEMENT_COLUMNS, row))
+        for row in extract_document_rows(
+            kinds, texts, media_refs, offsets, merge_strategy
+        )
+    ]
+
+
+def extract_document_rows(
+    kinds: List[Optional[str]],
+    texts: List[Optional[str]],
+    media_refs: List[Optional[str]],
+    offsets: List[Optional[int]],
+    merge_strategy: str = "default",
+) -> List[Row]:
+    """The extraction state machine: four parallel span lists → one row
+    (a list in ``schema.ELEMENT_COLUMNS`` order) per extracted element,
+    in element order. This is the form the Arrow emitter transposes
+    into columns (``operators/extract.py``).
     """
     threshold = STRATEGY_THRESHOLDS[merge_strategy]
     # null offsets are legal (SPAN_STRUCT.offset is nullable; JSON
@@ -290,7 +330,8 @@ def extract_document_cols(
     # skips the rebuild entirely.
     if None in offsets:
         offsets = [o if o is not None else 0 for o in offsets]
-    elements: List[Dict[str, Any]] = []
+    elements: List[Row] = []
+    tables: List[Dict[str, Any]] = []  # merge-pass inputs, page-ascending
     section_path: List[str] = []
     current_page = 1
     text_buf: List[str] = []
@@ -328,6 +369,8 @@ def extract_document_cols(
                     table=parsed,
                 )
                 elements.append(el)
+                data = [parsed["headers"]] + parsed["rows"]
+                tables.append({"el": el, "page": table_page, "data": data})
             table_buf = []
 
     # Input is almost always already offset-ordered (parquet preserves
@@ -476,27 +519,28 @@ def extract_document_cols(
         flush_table()
 
     # multi-page table merge pass (tables only, in document order —
-    # already page-ascending because pages only advance forward).
-    tables = [
-        {"el": e, "page": e["page"], "data": [e["table_headers"]] + e["table_rows"]}
-        for e in elements
-        if e["kind"] == "table"
-    ]
-    merged = merge_multi_page_tables(tables, threshold)
-    surviving = []
-    for t in merged:
-        el = t["el"]
-        el["table_headers"] = t["data"][0]
-        el["table_rows"] = t["data"][1:]
-        el["text"] = render_markdown_table(el["table_headers"], el["table_rows"])
-        el["is_multi_page"] = bool(t.get("is_multi_page"))
-        el["page_range"] = t.get("page_range")
-        if el["is_multi_page"]:
-            el["token_count"] = token_count(el["text"])
-            el["section_id"] = md5_hex(el["text"])
-        surviving.append(id(el))
-    keep = set(surviving)
-    final = [e for e in elements if e["kind"] != "table" or id(e) in keep]
+    # already page-ascending because pages only advance forward). Only a
+    # merged (is_multi_page) table changes; the tables folded into it
+    # are dropped from the output.
+    final = elements
+    if tables:
+        merged = merge_multi_page_tables(tables, threshold)
+        for t in merged:
+            if t.get("is_multi_page"):
+                el = t["el"]
+                el[_HEADERS] = t["data"][0]
+                el[_ROWS] = t["data"][1:]
+                el[_TEXT] = render_markdown_table(el[_HEADERS], el[_ROWS])
+                el[_MULTI_PAGE] = True
+                el[_PAGE_RANGE] = t["page_range"]
+        if len(merged) < len(tables):
+            keep = {id(t["el"]) for t in merged}
+            final = [e for e in elements if e[_KIND] != "table" or id(e) in keep]
+    # the per-element fields that depend on the final text, computed
+    # once per surviving element
     for i, el in enumerate(final):
-        el["offset"] = i
+        text = el[_TEXT]
+        el[_OFFSET] = i
+        el[_TOKENS] = token_count(text)
+        el[_SECTION_ID] = md5_hex(text)
     return final

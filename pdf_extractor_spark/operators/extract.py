@@ -32,6 +32,7 @@ process_pdf → extract_from_markdown token walk
 
 from __future__ import annotations
 
+import gc
 from typing import Iterator
 
 import pandas as pd
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
-from ..docmodel import extract_document, extract_document_cols
+from ..docmodel import extract_document, extract_document_rows
 from ..schema import ELEMENT_COLUMNS, FLAT_SCHEMA, OUT_SPAN_STRUCT
 from ..sources import SpansFn, binary_files, doc_id_from
 
@@ -54,21 +55,44 @@ OUT_SPANS_TYPE = ArrayType(OUT_SPAN_STRUCT)
 def _flat_record_batch(docs, merge_strategy: str, schema):
     """The one Arrow element emitter: ``docs`` yields (doc_id, kinds,
     texts, media_refs, offsets) per document; each runs through
-    ``extract_document_cols`` and the elements land as one
-    FLAT_SCHEMA ``RecordBatch``."""
+    ``extract_document_rows``, and the batch's element rows are
+    transposed once with ``zip(*rows)`` into the FLAT_SCHEMA columns of
+    one ``RecordBatch``.
+
+    The batch is built with the cyclic GC paused. It allocates tens of
+    thousands of short-lived row lists and iterators, each of which
+    counts toward a collection that could free nothing, because the
+    kernel and the span decoders make no reference cycles
+    (tests/test_extract_spark.py pins that). Those objects are all freed
+    when :func:`_element_batch` returns, before the previous GC state
+    is restored, so no collection walks them afterwards either; and
+    the pause ends before this function returns or raises, so it never
+    spans the caller's ``yield``.
+    """
+    gc_was_enabled = gc.isenabled()
+    gc.disable()
+    try:
+        return _element_batch(docs, merge_strategy, schema)
+    finally:
+        if gc_was_enabled:
+            gc.enable()
+
+
+def _element_batch(docs, merge_strategy: str, schema):
     import pyarrow as pa
 
-    all_cols = ("doc_id", *ELEMENT_COLUMNS)
-    out: dict = {c: [] for c in all_cols}
-    id_col = out["doc_id"]
-    el_cols = [(c, out[c]) for c in ELEMENT_COLUMNS]
+    ids: list = []
+    rows: list = []
     for did, kinds, texts, refs, offs in docs:
-        els = extract_document_cols(kinds, texts, refs, offs, merge_strategy)
-        id_col.extend([did] * len(els))
-        for c, col in el_cols:
-            col.extend([el[c] for el in els])
+        els = extract_document_rows(kinds, texts, refs, offs, merge_strategy)
+        ids += [did] * len(els)
+        rows += els
+    cols = zip(*rows) if rows else [()] * len(ELEMENT_COLUMNS)
     return pa.RecordBatch.from_arrays(
-        [pa.array(out[c], type=schema.field(j).type) for j, c in enumerate(all_cols)],
+        [
+            pa.array(col, type=schema.field(j).type)
+            for j, col in enumerate((ids, *cols))
+        ],
         schema=schema,
     )
 
@@ -102,7 +126,7 @@ def _flat_arrow_batches(merge_strategy: str):
     slice of a larger array, so a sliced batch needs no re-basing. A
     null ``spans`` has equal offsets and reads as no spans. Null
     ``offset`` values stay ``None`` (the integer-null rule of
-    :func:`_pylist`) for ``extract_document_cols`` to treat as 0.
+    :func:`_pylist`) for ``extract_document_rows`` to treat as 0.
     """
 
     def gen(batches):
@@ -198,7 +222,7 @@ def extract_files(
     one pass: a single ``binaryFile`` scan feeds a single
     ``mapInArrow`` generator that runs, per file, ``to_spans`` (bytes
     → spans: ``sources.text_to_spans`` or ``sources.pdf_to_spans``)
-    and then ``extract_document_cols``. Each file is read and decoded
+    and then ``extract_document_rows``. Each file is read and decoded
     once, with no exchange and no nested array in between.
     """
     files = binary_files(spark, path, glob).select("path", "content")

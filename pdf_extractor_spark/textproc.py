@@ -70,8 +70,30 @@ def clean_title(title: str, to_ascii: bool = False) -> str:
 
 _TOKEN_RE = re.compile(r"[A-Za-z0-9_]+|[^\sA-Za-z0-9_]")
 
+# ASCII fast path: each ASCII byte translated to its class under
+# _TOKEN_RE — b"a" for a word character, b"." for a character that is a
+# token on its own, b" " for whitespace (no match). A token is then a
+# run of b"a" or one b".", and the count takes C-level passes instead of
+# building one string per token. The table is derived from the regex,
+# so the two paths cannot disagree on a character; its upper half only
+# pads it to the 256 entries ``bytes.translate`` requires.
+_WORD_RE = re.compile(r"[A-Za-z0-9_]")
+
+
+def _ascii_token_class(c: str) -> int:
+    if _WORD_RE.fullmatch(c):
+        return ord("a")
+    return ord(".") if _TOKEN_RE.fullmatch(c) else ord(" ")
+
+
+_ASCII_TOKEN_CLASS = bytes(map(_ascii_token_class, map(chr, range(128)))) + b" " * 128
+
 
 def token_count(text: str) -> int:
+    if text.isascii():
+        cls = text.encode("ascii").translate(_ASCII_TOKEN_CLASS)
+        runs = cls.count(b" a") + cls.count(b".a") + cls.startswith(b"a")
+        return cls.count(b".") + runs
     return len(_TOKEN_RE.findall(text))
 
 

@@ -4,8 +4,16 @@ Cases lifted from the reference's embedded EXPECTED_RESULTS blocks
 (FIXTURES.md §3); citations per case.
 """
 
+import json
+import os
+
+import pytest
+
 from pdf_extractor_spark.docmodel import (
+    STRATEGY_THRESHOLDS,
     extract_document,
+    extract_document_cols,
+    extract_document_rows,
     has_matching_headers,
     merge_multi_page_tables,
     parse_markdown_image,
@@ -19,7 +27,8 @@ from pdf_extractor_spark.parsers import (
     parse_structured_text,
     parse_table_data,
 )
-from pdf_extractor_spark.textproc import clean_title, html_to_text, md5_hex
+from pdf_extractor_spark.schema import ELEMENT_COLUMNS
+from pdf_extractor_spark.textproc import clean_title, html_to_text, md5_hex, token_count
 
 
 def spans(*items):
@@ -387,3 +396,71 @@ def test_ocr_flushes_open_table_before_buffering():
     els = extract_document(spans)
     assert [e["kind"] for e in els] == ["table", "text"]
     assert els[1]["text"] == "after table"
+
+
+# --- row form: the state machine's own output ----------------------------
+
+
+def _three_page_table_chain():
+    def table(row):
+        return [("table_row", ln, "") for ln in
+                ("| Signal | IO |", "|---|---|", f"| {row} | in |")]
+
+    return spans(
+        ("heading", "# Chain", ""),
+        *table("a"),
+        ("page_marker", "<!-- page: 2 -->", ""),
+        *table("b"),
+        ("page_marker", "<!-- page: 3 -->", ""),
+        *table("c"),
+        ("text", "after the chain", ""),
+    )
+
+
+def _golden_and_chain_docs():
+    path = os.path.join(os.path.dirname(__file__), "fixtures", "golden_docs.json")
+    with open(path) as f:
+        golden = json.load(f)
+    return [d["spans"] for d in golden.values()] + [_three_page_table_chain()]
+
+
+@pytest.mark.parametrize("strategy", sorted(STRATEGY_THRESHOLDS))
+def test_row_form_is_the_dict_view(strategy):
+    """extract_document_cols is dict(zip(ELEMENT_COLUMNS, row)) of
+    extract_document_rows, element for element; token_count and
+    section_id describe each element's final text, merged multi-page
+    tables included."""
+    for doc in _golden_and_chain_docs():
+        cols = (
+            [s["kind"] for s in doc],
+            [s["text"] for s in doc],
+            [s["media_ref"] for s in doc],
+            [s["offset"] for s in doc],
+        )
+        rows = extract_document_rows(*cols, strategy)
+        dicts = extract_document_cols(*cols, strategy)
+        assert all(len(r) == len(ELEMENT_COLUMNS) for r in rows)
+        assert dicts == [dict(zip(ELEMENT_COLUMNS, r)) for r in rows]
+        for el in dicts:
+            assert el["token_count"] == token_count(el["text"])
+            assert el["section_id"] == md5_hex(el["text"])
+
+
+def test_three_page_chain_rows():
+    """The page-1 and page-2 tables merge into one multi-page row (the
+    page-2 row is dropped), page 3 stays apart (first-page quirk), and
+    offsets are renumbered over the surviving rows."""
+    doc = _three_page_table_chain()
+    merged = extract_document(doc)
+    assert [e["kind"] for e in merged] == ["heading", "table", "table", "text"]
+    assert [e["offset"] for e in merged] == [0, 1, 2, 3]
+    first, last = merged[1], merged[2]
+    assert first["is_multi_page"] and first["page_range"] == "1-2"
+    assert first["table_rows"] == [["a", "in"], ["b", "in"]]
+    assert first["text"] == render_markdown_table(["Signal", "IO"], first["table_rows"])
+    assert first["token_count"] == token_count(first["text"])
+    assert not last["is_multi_page"] and last["page_range"] is None
+    assert last["page"] == 3 and last["table_rows"] == [["c", "in"]]
+    unmerged = extract_document(doc, "none")
+    assert [e["kind"] for e in unmerged].count("table") == 3
+    assert not any(e["is_multi_page"] for e in unmerged)

@@ -21,7 +21,7 @@ MIN_CODE_LINES = 6
 
 CEILINGS = {
     "analytics/similarity.py": 52,
-    "analytics/dedup.py": 18,
+    "analytics/dedup.py": 0,
     "streaming.py": 0,
 }
 

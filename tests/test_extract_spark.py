@@ -190,6 +190,158 @@ def test_flat_generator_ingest_matches_oracle(chunk):
         assert all(type(r["offset"]) is int for r in got.get(doc["doc_id"], []))
 
 
+def _docs_batch(docs):
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(docs, schema=to_arrow_schema(DOCS_SCHEMA))
+    return table.combine_chunks().to_batches()[0]
+
+
+def _files_batch(files):
+    """(name, bytes) pairs → a binaryFile-shaped (path, content) batch
+    under the root ``/in``."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"file:/in/{name}" for name, _ in files]),
+            pa.array([data for _, data in files], type=pa.binary()),
+        ],
+        names=["path", "content"],
+    )
+
+
+def _gc_probe_batches():
+    """Flat and file generator input batches covering every kernel
+    branch: the golden docs, the ingest edge docs plus html/ocr/code
+    spans, markdown (one latin-1, one blank) and PDF files."""
+    import json
+    import os
+
+    from test_pdf_and_detect import MD_PAGE1, MD_PAGE2, make_pdf
+
+    with open(os.path.join(os.path.dirname(__file__), "fixtures", "golden_docs.json")) as f:
+        golden = [{"doc_id": k, "spans": v["spans"]} for k, v in json.load(f).items()]
+    mixed = [
+        {"kind": k, "text": t, "media_ref": "", "offset": i}
+        for i, (k, t) in enumerate([
+            ("html", "<nav>menu</nav><p>Kept &amp; cleaned.</p>"),
+            ("ocr", "hyphen-\nated ﬁre"),
+            ("ocr", " \n "),
+            ("code", "```python\ndef f(a, b):\n    return a\n```"),
+            ("image", "![alt](img/x.png)"),
+        ])
+    ]
+    docs = golden + _ingest_edge_docs() + [{"doc_id": "mixed", "spans": mixed}]
+    md = "\n".join(["# Title", "para", "| A | B |", "|---|---|", "| 1 | 2 |", "", "tail"])
+    md_files = [("a.md", md.encode()), ("latin.md", "# Café\nnaïve".encode("latin-1")),
+                ("blank.md", b"")]
+    pdf_files = [("p.pdf", make_pdf([MD_PAGE1, MD_PAGE2]))]
+    return _docs_batch(docs), _files_batch(md_files), _files_batch(pdf_files)
+
+
+def _run_generators(docs, md_files, pdf_files):
+    from pdf_extractor_spark.operators.extract import (
+        _file_arrow_batches,
+        _flat_arrow_batches,
+    )
+    from pdf_extractor_spark.sources import pdf_to_spans, text_to_spans
+
+    out = list(_flat_arrow_batches("default")(iter([docs])))
+    out += _file_arrow_batches("/in", text_to_spans, "default")(iter([md_files]))
+    out += _file_arrow_batches("/in", pdf_to_spans, "default")(iter([pdf_files]))
+    return out
+
+
+def test_generators_make_no_reference_cycles():
+    """The emitter pauses the cyclic GC for its batch loop; that is safe
+    only while the kernel, the span decoders and the emitter free every
+    object by reference count. Under DEBUG_SAVEALL any cycle they left
+    would be found by the collection and kept in gc.garbage."""
+    import gc
+
+    inputs = _gc_probe_batches()
+    out = _run_generators(*inputs)  # warm imports and caches first
+    assert sum(b.num_rows for b in out) > 0
+    gc.collect()
+    gc.set_debug(gc.DEBUG_SAVEALL)
+    try:
+        out = _run_generators(*inputs)
+        found = gc.collect()
+        garbage = list(gc.garbage)
+    finally:
+        gc.set_debug(0)
+        gc.garbage.clear()
+    assert sum(b.num_rows for b in out) > 0
+    assert found == 0
+    assert garbage == []
+
+
+@pytest.mark.parametrize("enabled", [True, False])
+def test_gc_pause_restores_previous_state(enabled):
+    """The GC is paused while a batch is built and restored to its
+    previous state after a normal pass, after a ``to_spans`` that raises
+    mid-batch, and when the generator is closed early; the pause is
+    never held across a ``yield``."""
+    import gc
+
+    from pdf_extractor_spark.operators.extract import (
+        _file_arrow_batches,
+        _flat_arrow_batches,
+    )
+    from pdf_extractor_spark.sources import text_to_spans
+
+    docs = _ingest_edge_docs()
+    was = gc.isenabled()
+    (gc.enable if enabled else gc.disable)()
+    try:
+        list(_flat_arrow_batches("default")(iter([_docs_batch(docs)])))
+        assert gc.isenabled() is enabled
+
+        seen = []
+
+        def to_spans(payload):
+            seen.append(gc.isenabled())
+            if payload == b"boom":
+                raise ValueError("undecodable")
+            return text_to_spans(payload)
+
+        files = _files_batch([("a.md", b"# A\ntext"), ("b.md", b"boom"), ("c.md", b"c")])
+        with pytest.raises(ValueError, match="undecodable"):
+            list(_file_arrow_batches("/in", to_spans, "default")(iter([files])))
+        assert seen == [False, False]
+        assert gc.isenabled() is enabled
+
+        gen = _flat_arrow_batches("default")(iter([_docs_batch(docs)] * 2))
+        next(gen)
+        assert gc.isenabled() is enabled
+        gen.close()
+        assert gc.isenabled() is enabled
+    finally:
+        (gc.enable if was else gc.disable)()
+
+
+def test_batch_of_empty_docs_yields_zero_row_batch():
+    """Every doc extracts to nothing: null spans, empty spans and only
+    blank text still give one 0-row FLAT_SCHEMA batch."""
+    from pdf_extractor_spark.operators.extract import (
+        _arrow_flat_schema,
+        _flat_arrow_batches,
+    )
+
+    blank = [{"kind": "text", "text": t, "media_ref": "", "offset": i}
+             for i, t in enumerate(["", "  ", "\n"])]
+    docs = [
+        {"doc_id": "null", "spans": None},
+        {"doc_id": "empty", "spans": []},
+        {"doc_id": "blank", "spans": blank},
+    ]
+    (out,) = _flat_arrow_batches("default")(iter([_docs_batch(docs)]))
+    assert out.num_rows == 0
+    assert out.schema.equals(_arrow_flat_schema())
+
+
 def test_deterministic_across_runs(spark, small_corpus):
     rows, df = small_corpus
     a = extract_spans(df).orderBy("doc_id").collect()

@@ -9,11 +9,13 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pdf_extractor_spark.textproc import (
+    _TOKEN_RE,
     bpe_segments,
     bpe_token_count,
     ocr_normalize,
     porter_stem,
     text_en_tokens,
+    token_count,
 )
 
 words = st.text(alphabet="abcdefghijklmnopqrstuvwxyz", min_size=0, max_size=20)
@@ -121,3 +123,23 @@ def test_unimax_closed_form_equals_sequential(sizes, budget_factor, cap):
     if kstar < n:
         assert math.isclose(sum(closed.values()), budget,
                             rel_tol=1e-12, abs_tol=1e-6)  # budget spent
+
+
+ascii_texts = st.text(alphabet=st.characters(max_codepoint=127), max_size=300)
+
+
+@settings(max_examples=2000, deadline=None, derandomize=True)
+@given(st.one_of(ascii_texts, texts))
+def test_token_count_equals_regex_count(t):
+    """token_count's ASCII fast path (byte classes, C-level counts) and
+    its non-ASCII path both equal the regex's match count."""
+    assert token_count(t) == len(_TOKEN_RE.findall(t))
+
+
+def test_token_count_every_ascii_char_and_run_edge():
+    cases = [chr(i) for i in range(128)] + [
+        "", "a", "a b", "ab,cd", ",a", "a,", "__x9 ", "\x1c\x1fz", "x\x00y", " \t\n\v\f\r",
+    ]
+    cases += [a + b for a in cases[:128] for b in "a ,\x1f"]
+    for t in cases:
+        assert token_count(t) == len(_TOKEN_RE.findall(t)), repr(t)
