@@ -57,6 +57,30 @@ def floor_round(col: Column, k: int) -> Column:
     return (F.floor(col * scale + 1e-6) / scale).cast("double")
 
 
+def _doc_wave() -> Column:
+    """Deterministic 2-way doc_id hash split (0/1): the first 32 bits of
+    md5('wave|' || doc_id) mod 2 — the drift queries' null split."""
+    return (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit("wave|"), F.col("doc_id").cast("string"))),
+                1,
+                8,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % 2
+    )
+
+
+# the oracle side of _doc_wave
+_DOC_WAVE_SQL = (
+    "CAST('0x' || substr(md5('wave|' || CAST(doc_id AS VARCHAR)), 1, 8)"
+    " AS BIGINT) % 2"
+)
+
+
 # shared constants for the injected-duplicate queries (dedup + similarity)
 N_INJECTED_DUPS = 20
 DUP_ID_OFFSET = 1_000_000

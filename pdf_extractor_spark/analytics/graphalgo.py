@@ -98,6 +98,58 @@ def pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+# Oracle edge fragments — one per spelling the oracles use. All build the
+# same deterministic 3-out-link graph as _edges: the unnest form (edges,
+# or directed with self-loops dropped), the UNION form (raw_edges, see
+# TRIANGLE_SQL) with its undirected edge set und and degrees deg, and
+# the degree-ordered orientation with the triangles it enumerates.
+_UNNEST_EDGES_SQL = """
+  SELECT DISTINCT src, dst FROM (
+    SELECT doc_id AS src,
+           unnest([(doc_id * 7 + 1) % (SELECT n FROM nn),
+                   (doc_id * doc_id + 3) % (SELECT n FROM nn),
+                   CAST(floor(doc_id / 2.0) AS BIGINT)]) AS dst
+    FROM documents
+  )
+"""
+
+_RAW_EDGES_SQL = """
+raw_edges AS (
+  SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst FROM documents, nn
+  UNION
+  SELECT doc_id, (doc_id * doc_id + 3) % nn.n FROM documents, nn
+  UNION
+  SELECT doc_id, CAST(floor(doc_id / 2.0) AS BIGINT) FROM documents, nn
+),"""
+
+_UND_SQL = """
+  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+  FROM raw_edges WHERE src <> dst
+"""
+
+_UND_DEG_SQL = """
+  SELECT v, count(*) AS d FROM (
+    SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und
+  ) GROUP BY 1
+"""
+
+_ORIENTED_SQL = """
+  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
+              THEN u.a ELSE u.b END AS u,
+         CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
+              THEN u.b ELSE u.a END AS w
+  FROM und u JOIN deg da ON da.v = u.a JOIN deg db ON db.v = u.b
+"""
+
+_TRIS_SQL = """
+tris AS (
+  SELECT e1.u AS x, e1.w AS y, e2.w AS z
+  FROM oriented e1
+  JOIN oriented e2 ON e2.u = e1.w
+  JOIN oriented e3 ON e3.u = e1.u AND e3.w = e2.w
+)"""
+
+
 def _pr_iter_sql(prev: str, out: str) -> str:
     return f"""{out} AS (
   SELECT d.doc_id AS v,
@@ -114,15 +166,7 @@ def _pr_iter_sql(prev: str, out: str) -> str:
 
 PAGERANK_SQL = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src,
-           unnest([(doc_id * 7 + 1) % (SELECT n FROM nn),
-                   (doc_id * doc_id + 3) % (SELECT n FROM nn),
-                   CAST(floor(doc_id / 2.0) AS BIGINT)]) AS dst
-    FROM documents
-  )
-),
+edges AS ({_UNNEST_EDGES_SQL}),
 deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY 1),
 pr0 AS (SELECT doc_id AS v, 1.0 / (SELECT n FROM nn) AS pr FROM documents),
 {_pr_iter_sql("pr0", "pr1")},
@@ -225,35 +269,11 @@ WITH nn AS (SELECT count(*) AS n FROM documents),
 -- optimizer hits an internal binder assertion when least()/<> reference
 -- an unnest-derived column under stacked DISTINCTs; UNION dedupes and
 -- sidesteps it (semantically identical to pagerank's edges CTE)
-raw_edges AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst FROM documents, nn
-  UNION
-  SELECT doc_id, (doc_id * doc_id + 3) % nn.n FROM documents, nn
-  UNION
-  SELECT doc_id, CAST(floor(doc_id / 2.0) AS BIGINT) FROM documents, nn
-),
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM raw_edges WHERE src <> dst
-),
-deg AS (
-  SELECT v, count(*) AS d FROM (
-    SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und
-  ) GROUP BY 1
-),
-oriented AS (
-  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-              THEN u.a ELSE u.b END AS u,
-         CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-              THEN u.b ELSE u.a END AS w
-  FROM und u JOIN deg da ON da.v = u.a JOIN deg db ON db.v = u.b
-),
-tris AS (
-  SELECT e1.u AS x, e1.w AS y, e2.w AS z
-  FROM oriented e1
-  JOIN oriented e2 ON e2.u = e1.w
-  JOIN oriented e3 ON e3.u = e1.u AND e3.w = e2.w
-)
+{_RAW_EDGES_SQL}
+und AS ({_UND_SQL}),
+deg AS ({_UND_DEG_SQL}),
+oriented AS ({_ORIENTED_SQL}),
+{_TRIS_SQL}
 SELECT v AS doc_id, CAST(count(*) AS BIGINT) AS n_triangles
 FROM (
   SELECT x AS v FROM tris
@@ -374,15 +394,7 @@ def _hits_iter_sql(prev_h: str, out_a: str, out_h: str) -> str:
 
 HITS_SQL = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src,
-           unnest([(doc_id * 7 + 1) % (SELECT n FROM nn),
-                   (doc_id * doc_id + 3) % (SELECT n FROM nn),
-                   CAST(floor(doc_id / 2.0) AS BIGINT)]) AS dst
-    FROM documents
-  )
-),
+edges AS ({_UNNEST_EDGES_SQL}),
 h0 AS (SELECT doc_id AS v, 1.0 AS h FROM documents),
 {_hits_iter_sql("h0", "a1", "h1")},
 {_hits_iter_sql("h1", "a2", "h2")},
@@ -460,15 +472,7 @@ e{out} AS MATERIALIZED (
 
 KCORE_SQL = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
-directed AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src,
-           unnest([(doc_id * 7 + 1) % (SELECT n FROM nn),
-                   (doc_id * doc_id + 3) % (SELECT n FROM nn),
-                   CAST(floor(doc_id / 2.0) AS BIGINT)]) AS dst
-    FROM documents
-  )
-  WHERE src <> dst
+directed AS ({_UNNEST_EDGES_SQL}  WHERE src <> dst
 ),
 e0 AS MATERIALIZED (
   SELECT DISTINCT src, dst FROM (
@@ -536,17 +540,9 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ASSORTATIVITY_SQL = """
+ASSORTATIVITY_SQL = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
-directed AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src,
-           unnest([(doc_id * 7 + 1) % (SELECT n FROM nn),
-                   (doc_id * doc_id + 3) % (SELECT n FROM nn),
-                   CAST(floor(doc_id / 2.0) AS BIGINT)]) AS dst
-    FROM documents
-  )
-  WHERE src <> dst
+directed AS ({_UNNEST_EDGES_SQL}  WHERE src <> dst
 ),
 und AS MATERIALIZED (
   SELECT DISTINCT src, dst FROM (
@@ -633,37 +629,13 @@ def local_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LOCAL_CLUSTERING_SQL = """
+LOCAL_CLUSTERING_SQL = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
-raw_edges AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst FROM documents, nn
-  UNION
-  SELECT doc_id, (doc_id * doc_id + 3) % nn.n FROM documents, nn
-  UNION
-  SELECT doc_id, CAST(floor(doc_id / 2.0) AS BIGINT) FROM documents, nn
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM raw_edges WHERE src <> dst
-),
-deg AS MATERIALIZED (
-  SELECT v, count(*) AS d FROM (
-    SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und
-  ) GROUP BY 1
-),
-oriented AS MATERIALIZED (
-  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-              THEN u.a ELSE u.b END AS u,
-         CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-              THEN u.b ELSE u.a END AS w
-  FROM und u JOIN deg da ON da.v = u.a JOIN deg db ON db.v = u.b
-),
-tris AS (
-  SELECT e1.u AS x, e1.w AS y, e2.w AS z
-  FROM oriented e1
-  JOIN oriented e2 ON e2.u = e1.w
-  JOIN oriented e3 ON e3.u = e1.u AND e3.w = e2.w
-),
+{_RAW_EDGES_SQL}
+und AS MATERIALIZED ({_UND_SQL}),
+deg AS MATERIALIZED ({_UND_DEG_SQL}),
+oriented AS MATERIALIZED ({_ORIENTED_SQL}),
+{_TRIS_SQL},
 pv AS (
   SELECT v, CAST(count(*) AS BIGINT) AS n_triangles
   FROM (
@@ -748,15 +720,7 @@ d{r} AS MATERIALIZED (
 
 BFS_SQL = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
-edges AS MATERIALIZED (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src,
-           unnest([(doc_id * 7 + 1) % (SELECT n FROM nn),
-                   (doc_id * doc_id + 3) % (SELECT n FROM nn),
-                   CAST(floor(doc_id / 2.0) AS BIGINT)]) AS dst
-    FROM documents
-  )
-),
+edges AS MATERIALIZED ({_UNNEST_EDGES_SQL}),
 d0 AS MATERIALIZED (SELECT CAST({BFS_SOURCE} AS BIGINT) AS v, 0 AS dist),
 f0 AS MATERIALIZED (SELECT v FROM d0),
 {",".join(_bfs_round_sql(r) for r in range(1, BFS_ROUNDS + 1))}
@@ -818,22 +782,9 @@ def degree_powerlaw_mle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 POWERLAW_SQL = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
-raw_edges AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst FROM documents, nn
-  UNION
-  SELECT doc_id, (doc_id * doc_id + 3) % nn.n FROM documents, nn
-  UNION
-  SELECT doc_id, CAST(floor(doc_id / 2.0) AS BIGINT) FROM documents, nn
-),
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM raw_edges WHERE src <> dst
-),
-deg AS (
-  SELECT v, count(*) AS d FROM (
-    SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und
-  ) GROUP BY 1
-),
+{_RAW_EDGES_SQL}
+und AS ({_UND_SQL}),
+deg AS ({_UND_DEG_SQL}),
 hist AS (
   SELECT d, CAST(count(*) AS BIGINT) AS n_d
   FROM deg WHERE d >= {PL_DMIN} GROUP BY 1
@@ -950,22 +901,9 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LINK_PREDICTION_SQL = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
-raw_edges AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst FROM documents, nn
-  UNION
-  SELECT doc_id, (doc_id * doc_id + 3) % nn.n FROM documents, nn
-  UNION
-  SELECT doc_id, CAST(floor(doc_id / 2.0) AS BIGINT) FROM documents, nn
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM raw_edges WHERE src <> dst
-),
-deg AS MATERIALIZED (
-  SELECT v, count(*) AS d FROM (
-    SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und
-  ) GROUP BY 1
-),
+{_RAW_EDGES_SQL}
+und AS MATERIALIZED ({_UND_SQL}),
+deg AS MATERIALIZED ({_UND_DEG_SQL}),
 adj AS MATERIALIZED (
   SELECT a AS w, b AS x FROM und UNION ALL SELECT b, a FROM und
 ),
@@ -1116,17 +1054,8 @@ vote_{out} AS (
 
 LABEL_PROPAGATION_SQL = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
-raw_edges AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst FROM documents, nn
-  UNION
-  SELECT doc_id, (doc_id * doc_id + 3) % nn.n FROM documents, nn
-  UNION
-  SELECT doc_id, CAST(floor(doc_id / 2.0) AS BIGINT) FROM documents, nn
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM raw_edges WHERE src <> dst
-),
+{_RAW_EDGES_SQL}
+und AS MATERIALIZED ({_UND_SQL}),
 adj AS MATERIALIZED (
   SELECT a AS v, b AS w FROM und UNION ALL SELECT b, a FROM und
 ),

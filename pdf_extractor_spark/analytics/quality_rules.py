@@ -43,7 +43,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import DUP_ID_OFFSET, N_INJECTED_DUPS, floor_round, load
+from .base import (
+    _DOC_WAVE_SQL,
+    DUP_ID_OFFSET,
+    N_INJECTED_DUPS,
+    _doc_wave,
+    floor_round,
+    load,
+)
 from .base import tokens as _tokens
 
 # ---------------------------------------------------------------------------
@@ -808,9 +815,9 @@ ORDER BY bin
 # ---------------------------------------------------------------------------
 
 
-def classifier_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
+def _score_label_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(s_i, n_pos, n_neg): the classifier score on its 1e-4 integer
+    grid, with Gopher-keep (positive) and reject counts per value."""
     scored = quality_classifier_linear(spark, sf_dir).select(
         "doc_id",
         F.floor(F.col("score") * 10000 + 1e-6).cast("long").alias("s_i"),
@@ -826,6 +833,13 @@ def classifier_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(1 - F.col("pos")).cast("long").alias("n_neg"),
         )
     )
+    return hist
+
+
+def classifier_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    hist = _score_label_hist(spark, sf_dir)
     w = Window.orderBy("s_i").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -857,7 +871,9 @@ def classifier_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CLASSIFIER_AUC_SQL = f"""
+# the AUC / KS / ROC oracles' shared prefix: the classifier score on its
+# 1e-4 grid against the Gopher label, as a per-score-value histogram
+_SCORE_LABEL_HIST_SQL = f"""
 WITH scored AS ({QUALITY_CLASSIFIER_SQL.replace(chr(10), chr(10) + '  ')}
 ),
 labels AS ({GOPHER_QUALITY_SQL.replace(chr(10), chr(10) + '  ')}
@@ -868,7 +884,10 @@ hist AS (
          CAST(sum(CASE WHEN l.keep THEN 0 ELSE 1 END) AS BIGINT) AS n_neg
   FROM scored s JOIN labels l ON l.doc_id = s.doc_id
   GROUP BY 1
-),
+),"""
+
+CLASSIFIER_AUC_SQL = f"""
+{_SCORE_LABEL_HIST_SQL}
 cum AS (
   SELECT n_pos, n_neg,
          CAST(sum(n_neg) OVER (ORDER BY s_i
@@ -906,21 +925,7 @@ FROM agg
 def classifier_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    scored = quality_classifier_linear(spark, sf_dir).select(
-        "doc_id",
-        F.floor(F.col("score") * 10000 + 1e-6).cast("long").alias("s_i"),
-    )
-    labels = gopher_quality_filter(spark, sf_dir).select(
-        "doc_id", F.col("keep").cast("long").alias("pos")
-    )
-    hist = (
-        scored.join(labels, "doc_id")
-        .groupBy("s_i")
-        .agg(
-            F.sum("pos").cast("long").alias("n_pos"),
-            F.sum(1 - F.col("pos")).cast("long").alias("n_neg"),
-        )
-    )
+    hist = _score_label_hist(spark, sf_dir)
     tot = hist.agg(
         F.sum("n_pos").cast("long").alias("tp"),
         F.sum("n_neg").cast("long").alias("tn"),
@@ -952,17 +957,7 @@ def classifier_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CLASSIFIER_KS_SQL = f"""
-WITH scored AS ({QUALITY_CLASSIFIER_SQL.replace(chr(10), chr(10) + '  ')}
-),
-labels AS ({GOPHER_QUALITY_SQL.replace(chr(10), chr(10) + '  ')}
-),
-hist AS (
-  SELECT CAST(floor(s.score * 10000 + 1e-6) AS BIGINT) AS s_i,
-         CAST(sum(CASE WHEN l.keep THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         CAST(sum(CASE WHEN l.keep THEN 0 ELSE 1 END) AS BIGINT) AS n_neg
-  FROM scored s JOIN labels l ON l.doc_id = s.doc_id
-  GROUP BY 1
-),
+{_SCORE_LABEL_HIST_SQL}
 tot AS (
   SELECT CAST(sum(n_pos) AS BIGINT) AS tp,
          CAST(sum(n_neg) AS BIGINT) AS tn
@@ -1009,21 +1004,7 @@ ROC_THRESHOLDS = list(range(-8000, 8001, 2000))  # score × 1e4 grid
 def classifier_roc_points(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    scored = quality_classifier_linear(spark, sf_dir).select(
-        "doc_id",
-        F.floor(F.col("score") * 10000 + 1e-6).cast("long").alias("s_i"),
-    )
-    labels = gopher_quality_filter(spark, sf_dir).select(
-        "doc_id", F.col("keep").cast("long").alias("pos")
-    )
-    hist = (
-        scored.join(labels, "doc_id")
-        .groupBy("s_i")
-        .agg(
-            F.sum("pos").cast("long").alias("n_pos"),
-            F.sum(1 - F.col("pos")).cast("long").alias("n_neg"),
-        )
-    )
+    hist = _score_label_hist(spark, sf_dir)
     ts = spark.createDataFrame(
         [(t,) for t in ROC_THRESHOLDS], "thr long"
     )
@@ -1063,17 +1044,7 @@ def classifier_roc_points(
 
 
 ROC_POINTS_SQL = f"""
-WITH scored AS ({{cls}}
-),
-labels AS ({{gopher}}
-),
-hist AS (
-  SELECT CAST(floor(s.score * 10000 + 1e-6) AS BIGINT) AS s_i,
-         CAST(sum(CASE WHEN l.keep THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         CAST(sum(CASE WHEN l.keep THEN 0 ELSE 1 END) AS BIGINT) AS n_neg
-  FROM scored s JOIN labels l ON l.doc_id = s.doc_id
-  GROUP BY 1
-),
+{_SCORE_LABEL_HIST_SQL}
 ts AS (SELECT unnest([{', '.join(str(t) for t in ROC_THRESHOLDS)}])
          AS thr),
 per_t AS (
@@ -1095,10 +1066,7 @@ SELECT CAST(thr AS BIGINT) AS thr, tp, fp,
             / 1000000 AS DOUBLE) AS fpr
 FROM per_t
 ORDER BY thr
-""".format(
-    cls=QUALITY_CLASSIFIER_SQL.replace(chr(10), chr(10) + "  "),
-    gopher=GOPHER_QUALITY_SQL.replace(chr(10), chr(10) + "  "),
-)
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -1121,18 +1089,7 @@ def psi_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textstats import quality_score
 
     q = quality_score(spark, sf_dir).select("doc_id", "quality")
-    wave = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("wave|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    wave = _doc_wave()
     binned = q.select(
         F.least(
             F.floor(F.col("quality") * PSI_BINS).cast("long"),
@@ -1208,8 +1165,7 @@ WITH q AS ({QUALITY_SCORE_SQL}),
 binned AS (
   SELECT least(CAST(floor(quality * {PSI_BINS}) AS BIGINT),
                {PSI_BINS - 1}) AS bin,
-         CAST('0x' || substr(md5('wave|' || CAST(doc_id AS VARCHAR)), 1, 8)
-              AS BIGINT) % 2 AS w
+         {_DOC_WAVE_SQL} AS w
   FROM q
 ),
 cell AS (

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .base import floor_round, load
@@ -1045,7 +1045,9 @@ def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SESSION_WINDOWS_SQL = f"""
+# lag-method session flags shared by the session-window and concurrency
+# oracles: new_s = 1 where an event opens a session
+_SESSION_FLAGGED_SQL = f"""
 WITH flagged AS (
   SELECT user_id, event_id, epoch_us(ts) AS t_us,
          CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
@@ -1053,7 +1055,11 @@ WITH flagged AS (
                    >= {SESSION_GAP_S} * 1000000 THEN 1 ELSE 0 END AS new_s
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+),"""
+
+
+SESSION_WINDOWS_SQL = f"""
+{_SESSION_FLAGGED_SQL}
 sess AS (
   -- cumulative sum ordered deterministically: ties on t_us must sum
   -- the new_s=1 row first (new_s DESC) so tie rows join the session
@@ -3399,9 +3405,7 @@ def monthly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             "yyyy-MM",
         ).alias("month")
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long")
-        ).cast("long").alias("rev_cents"),
+        _cents_sum("rev_cents"),
         F.count("*").cast("long").alias("n_orders"),
     )
     w = Window.orderBy("month")
@@ -4088,14 +4092,7 @@ def concurrent_sessions_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CONCURRENT_PEAK_SQL = f"""
-WITH flagged AS (
-  SELECT user_id, event_id, epoch_us(ts) AS t_us,
-         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                   >= {SESSION_GAP_S} * 1000000 THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+{_SESSION_FLAGGED_SQL}
 sess AS (
   SELECT user_id, t_us,
          sum(new_s) OVER (PARTITION BY user_id
@@ -4267,50 +4264,73 @@ TRIM_PCT_NUM = 1  # trim 1/10 from each side
 TRIM_PCT_DEN = 10
 
 
-def trimmed_mean_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _cents_sum(name: str) -> Column:
+    """Revenue in exact integer cents: Σ floor(o_totalprice·100)."""
+    return (
+        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
+        .cast("long")
+        .alias(name)
+    )
+
+
+def _segment_cents(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """(c_mktsegment, name): every order's total in exact integer cents."""
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    orders = load(spark, sf_dir, "orders").select(
-        "o_custkey", "o_totalprice"
-    )
-    cents = (
-        orders.join(
-            F.broadcast(cust), orders.o_custkey == cust.c_custkey
-        )
+    return (
+        load(spark, sf_dir, "orders")
+        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .select(
             "c_mktsegment",
             F.floor(F.col("o_totalprice") * 100 + 1e-6)
             .cast("long")
-            .alias("cents"),
+            .alias(name),
         )
     )
-    hist = cents.groupBy("c_mktsegment", "cents").agg(
+
+
+def _segment_rank_spans(df: DataFrame, col: str) -> DataFrame:
+    """Per-segment histogram of ``col``: each distinct value with its
+    count ``n_v``, its cumulative rank ``cum`` and the segment size
+    ``n`` — value v holds ranks [cum − n_v + 1, cum]."""
+    hist = df.groupBy("c_mktsegment", col).agg(
         F.count("*").cast("long").alias("n_v")
     )
     tot = hist.groupBy("c_mktsegment").agg(
-        F.sum("n_v").cast("long").alias("n"),
-        F.sum(F.col("n_v") * F.col("cents")).cast("long").alias("sum_all"),
+        F.sum("n_v").cast("long").alias("n")
     )
     w = (
         Window.partitionBy("c_mktsegment")
-        .orderBy("cents")
+        .orderBy(col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = hist.select(
+    return hist.select(
         "c_mktsegment",
-        "cents",
+        col,
         "n_v",
         F.sum("n_v").over(w).cast("long").alias("cum"),
     ).join(tot, "c_mktsegment")
+
+
+def _trim_k_overlap() -> tuple[Column, Column]:
+    """(k, overlap): k = floor(n·TRIM_PCT) ranks trimmed per side, and
+    each value's rank-span overlap with the kept interval [k+1, n−k]."""
     k = F.floor(F.col("n") * TRIM_PCT_NUM / TRIM_PCT_DEN).cast("long")
-    lo_rank = (F.col("cum") - F.col("n_v") + 1)
     ov = F.greatest(
         F.lit(0).cast("long"),
         F.least(F.col("cum"), F.col("n") - k)
-        - F.greatest(lo_rank, k + 1)
+        - F.greatest(F.col("cum") - F.col("n_v") + 1, k + 1)
         + 1,
     )
+    return k, ov
+
+
+def trimmed_mean_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cum = _segment_rank_spans(
+        _segment_cents(spark, sf_dir, "cents"), "cents"
+    )
+    k, ov = _trim_k_overlap()
     per_seg = (
         cum.withColumn("k", k)
         .withColumn("contrib", ov * F.col("cents"))
@@ -4319,7 +4339,9 @@ def trimmed_mean_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").alias("n_orders"),
             F.max("k").cast("long").alias("trim_k"),
             F.sum("contrib").cast("long").alias("sum_kept"),
-            F.max("sum_all").alias("sum_all"),
+            F.sum(F.col("n_v") * F.col("cents"))
+            .cast("long")
+            .alias("sum_all"),
         )
     )
     return per_seg.select(
@@ -4337,7 +4359,9 @@ def trimmed_mean_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_mktsegment")
 
 
-TRIMMED_MEAN_SQL = f"""
+# the trimmed and winsorized oracles' shared prefix: the per-segment cents
+# histogram, its cumulative rank walk, and the kept-rank overlap sum
+_SEG_CENTS_HIST_SQL = """
 WITH cents AS (
   SELECT c.c_mktsegment,
          CAST(floor(o.o_totalprice * 100 + 1e-6) AS BIGINT) AS cents
@@ -4346,15 +4370,9 @@ WITH cents AS (
 hist AS (
   SELECT c_mktsegment, cents, CAST(count(*) AS BIGINT) AS n_v
   FROM cents GROUP BY 1, 2
-),
-tot AS (
-  SELECT c_mktsegment,
-         CAST(sum(n_v) AS BIGINT) AS n,
-         CAST(sum(n_v * cents) AS BIGINT) AS sum_all
-  FROM hist GROUP BY 1
-),
-cum AS (
-  SELECT h.c_mktsegment, h.cents, h.n_v, t.n, t.sum_all,
+),"""
+
+_SEG_CUM_K_SQL = f"""
          CAST(sum(h.n_v) OVER (PARTITION BY h.c_mktsegment ORDER BY h.cents
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
            AS cum,
@@ -4363,12 +4381,27 @@ cum AS (
 ),
 per_seg AS (
   SELECT c_mktsegment,
-         max(n) AS n_orders,
-         max(k) AS trim_k,
+         max(n) AS n_orders,"""
+
+_SEG_KEPT_SUM_SQL = """
          CAST(sum(greatest(CAST(0 AS BIGINT),
                            least(cum, n - k)
                            - greatest(cum - n_v + 1, k + 1) + 1)
-                  * cents) AS BIGINT) AS sum_kept,
+                  * cents) AS BIGINT) AS sum_kept,"""
+
+TRIMMED_MEAN_SQL = f"""
+{_SEG_CENTS_HIST_SQL}
+tot AS (
+  SELECT c_mktsegment,
+         CAST(sum(n_v) AS BIGINT) AS n,
+         CAST(sum(n_v * cents) AS BIGINT) AS sum_all
+  FROM hist GROUP BY 1
+),
+cum AS (
+  SELECT h.c_mktsegment, h.cents, h.n_v, t.n, t.sum_all,
+{_SEG_CUM_K_SQL}
+         max(k) AS trim_k,
+{_SEG_KEPT_SUM_SQL}
          max(sum_all) AS sum_all
   FROM cum GROUP BY 1
 )
@@ -4408,9 +4441,7 @@ def trailing_revenue_range(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
         ).alias("day_idx")
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long")
-        ).cast("long").alias("rev_cents"),
+        _cents_sum("rev_cents"),
         F.count("*").cast("long").alias("n_orders"),
     )
     w = (
@@ -4646,39 +4677,11 @@ MAD_K = 5
 
 
 def mad_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    cents = (
-        load(spark, sf_dir, "orders")
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_mktsegment",
-            F.floor(F.col("o_totalprice") * 100 + 1e-6)
-            .cast("long")
-            .alias("v"),
-        )
-    ).persist()
+    cents = _segment_cents(spark, sf_dir, "v").persist()
 
-    def median2(df: DataFrame, col: str) -> DataFrame:
-        """Per-segment DOUBLED median (2·median stays integral)."""
-        hist = df.groupBy("c_mktsegment", col).agg(
-            F.count("*").cast("long").alias("n_v")
-        )
-        tot = hist.groupBy("c_mktsegment").agg(
-            F.sum("n_v").cast("long").alias("n")
-        )
-        w = (
-            Window.partitionBy("c_mktsegment")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = hist.select(
-            "c_mktsegment",
-            F.col(col).alias("v"),
-            "n_v",
-            F.sum("n_v").over(w).cast("long").alias("cum"),
-        ).join(tot, "c_mktsegment")
+    def median2(df: DataFrame) -> DataFrame:
+        """Per-segment DOUBLED median of ``v`` (2·median stays integral)."""
+        cum = _segment_rank_spans(df, "v")
         lo = F.floor((F.col("n") + 1) / 2).cast("long")
         hi = F.ceil((F.col("n") + 1) / 2).cast("long")
         picks = cum.groupBy("c_mktsegment").agg(
@@ -4702,12 +4705,12 @@ def mad_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("v_lo") + F.col("v_hi")).cast("long").alias("med2"),
         )
 
-    med = median2(cents, "v")
+    med = median2(cents)
     dev = cents.join(med, "c_mktsegment").select(
         "c_mktsegment",
         F.abs(2 * F.col("v") - F.col("med2")).cast("long").alias("d2"),
     )
-    mad = median2(dev.select("c_mktsegment", F.col("d2").alias("v")), "v")
+    mad = median2(dev.select("c_mktsegment", F.col("d2").alias("v")))
     mad = mad.select("c_mktsegment", F.col("med2").alias("mad4"))
     flagged = (
         cents.join(med, "c_mktsegment")
@@ -4961,44 +4964,11 @@ FROM st
 
 
 def winsorized_mean_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
+    cum = _segment_rank_spans(
+        _segment_cents(spark, sf_dir, "cents"), "cents"
     )
-    cents = (
-        load(spark, sf_dir, "orders")
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_mktsegment",
-            F.floor(F.col("o_totalprice") * 100 + 1e-6)
-            .cast("long")
-            .alias("cents"),
-        )
-    )
-    hist = cents.groupBy("c_mktsegment", "cents").agg(
-        F.count("*").cast("long").alias("n_v")
-    )
-    tot = hist.groupBy("c_mktsegment").agg(
-        F.sum("n_v").cast("long").alias("n")
-    )
-    w = (
-        Window.partitionBy("c_mktsegment")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = hist.select(
-        "c_mktsegment",
-        "cents",
-        "n_v",
-        F.sum("n_v").over(w).cast("long").alias("cum"),
-    ).join(tot, "c_mktsegment")
-    k = F.floor(F.col("n") * TRIM_PCT_NUM / TRIM_PCT_DEN).cast("long")
+    k, ov = _trim_k_overlap()
     lo_rank = F.col("cum") - F.col("n_v") + 1
-    ov = F.greatest(
-        F.lit(0).cast("long"),
-        F.least(F.col("cum"), F.col("n") - k)
-        - F.greatest(lo_rank, k + 1)
-        + 1,
-    )
     covers = lambda r: (lo_rank <= r) & (r <= F.col("cum"))  # noqa: E731
     per_seg = (
         cum.withColumn("k", k)
@@ -5033,34 +5003,15 @@ def winsorized_mean_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 WINSORIZED_MEAN_SQL = f"""
-WITH cents AS (
-  SELECT c.c_mktsegment,
-         CAST(floor(o.o_totalprice * 100 + 1e-6) AS BIGINT) AS cents
-  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-),
-hist AS (
-  SELECT c_mktsegment, cents, CAST(count(*) AS BIGINT) AS n_v
-  FROM cents GROUP BY 1, 2
-),
+{_SEG_CENTS_HIST_SQL}
 tot AS (
   SELECT c_mktsegment, CAST(sum(n_v) AS BIGINT) AS n FROM hist GROUP BY 1
 ),
 cum AS (
   SELECT h.c_mktsegment, h.cents, h.n_v, t.n,
-         CAST(sum(h.n_v) OVER (PARTITION BY h.c_mktsegment ORDER BY h.cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS cum,
-         CAST(floor(t.n * {TRIM_PCT_NUM} / {TRIM_PCT_DEN}.0) AS BIGINT) AS k
-  FROM hist h JOIN tot t ON t.c_mktsegment = h.c_mktsegment
-),
-per_seg AS (
-  SELECT c_mktsegment,
-         max(n) AS n_orders,
+{_SEG_CUM_K_SQL}
          max(k) AS win_k,
-         CAST(sum(greatest(CAST(0 AS BIGINT),
-                           least(cum, n - k)
-                           - greatest(cum - n_v + 1, k + 1) + 1)
-                  * cents) AS BIGINT) AS sum_kept,
+{_SEG_KEPT_SUM_SQL}
          CAST(min(CASE WHEN cum - n_v + 1 <= k + 1 AND k + 1 <= cum
                        THEN cents END) AS BIGINT) AS v_lo,
          CAST(min(CASE WHEN cum - n_v + 1 <= n - k AND n - k <= cum
@@ -5108,11 +5059,7 @@ def hhi_revenue_concentration(
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_mktsegment", "c_custkey")
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long")
-            )
-            .cast("long")
-            .alias("rev")
+            _cents_sum("rev")
         )
     )
     seg_tot = per_cust.groupBy("c_mktsegment").agg(
@@ -5208,25 +5155,7 @@ ORDER BY c_mktsegment
 def theil_sen_daily_revenue(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    daily = (
-        load(spark, sf_dir, "orders")
-        .groupBy(
-            F.date_trunc("day", F.col("o_orderdate"))
-            .cast("date")
-            .alias("d")
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
-        )
-    )
-    d0 = daily.agg(F.min("d").alias("d0"))
-    xy = daily.crossJoin(F.broadcast(d0)).select(
-        F.datediff("d", "d0").cast("long").alias("x"), "cents"
-    )
+    xy = _daily_xy(spark, sf_dir)
     a, b = xy.alias("a"), xy.alias("b")
     slopes = (
         a.join(b, F.col("a.x") < F.col("b.x"))
@@ -5373,21 +5302,7 @@ FROM ols, med
 
 
 def cusum_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
-        load(spark, sf_dir, "orders")
-        .groupBy(
-            F.date_trunc("day", F.col("o_orderdate"))
-            .cast("date")
-            .alias("d")
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = _daily_cents(spark, sf_dir)
     tot = daily.agg(
         F.count("*").cast("long").alias("n_days"),
         F.sum("cents").cast("long").alias("s_total"),
@@ -5485,21 +5400,7 @@ GUMBEL_STRESS_MULT = 1.5
 def gumbel_monthly_peak_fit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    daily = (
-        load(spark, sf_dir, "orders")
-        .groupBy(
-            F.date_trunc("day", F.col("o_orderdate"))
-            .cast("date")
-            .alias("d")
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = _daily_cents(spark, sf_dir)
     monthly = (
         daily.groupBy(F.date_trunc("month", "d").alias("mth"))
         .agg(F.max("cents").alias("max_cents"))
@@ -5589,11 +5490,7 @@ def lorenz_curve_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long")
-            )
-            .cast("long")
-            .alias("rev")
+            _cents_sum("rev")
         )
     )
     hist = per_cust.groupBy("rev").agg(
@@ -6056,20 +5953,54 @@ _DAILY_XY = """
 """
 
 
-def _daily_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily order count + revenue cents keyed by day index x."""
+def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily order count ``cnt`` + revenue ``cents`` keyed by date d."""
     orders = load(spark, sf_dir, "orders")
-    daily = orders.groupBy(
+    return orders.groupBy(
         F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("d")
     ).agg(
         F.count("*").cast("long").alias("cnt"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents"),
+        _cents_sum("cents"),
     )
+
+
+def _daily_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily order count + revenue cents keyed by day index x."""
+    daily = _daily_cents(spark, sf_dir)
     d0 = daily.agg(F.min("d").alias("d0"))
     return daily.crossJoin(F.broadcast(d0)).select(
         F.datediff("d", "d0").cast("long").alias("x"), "cnt", "cents"
+    )
+
+
+def _ols_sums(df: DataFrame | GroupedData, *extra: Column) -> DataFrame:
+    """Exact BIGINT moment sums (n, sx, sy, sxy, sxx, *extra) of the
+    least-squares line y ~ x over ``df`` (one row, or one per group)."""
+    return df.agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("x").cast("long").alias("sx"),
+        F.sum("y").cast("long").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+        *extra,
+    )
+
+
+def _ols_resid_q() -> Column:
+    """floor(y − (a + b·x)): the whole-unit residual against the line
+    fitted from ``_ols_sums``'s columns (cross-joined onto the rows)."""
+    slope = (
+        F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
+    ).cast("double") / (
+        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
+    ).cast("double")
+    intercept = (
+        F.col("sy").cast("double") - slope * F.col("sx").cast("double")
+    ) / F.col("n").cast("double")
+    return F.floor(
+        F.col("y").cast("double")
+        - (intercept + slope * F.col("x").cast("double"))
+        + 1e-6
     )
 
 
@@ -6186,30 +6117,10 @@ def durbin_watson_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_xy(spark, sf_dir).select(
         "x", F.floor(F.col("cents") / 100).cast("long").alias("y")
     )
-    ols = daily.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    slope = (
-        F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    ).cast("double") / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    ).cast("double")
-    intercept = (
-        F.col("sy").cast("double") - slope * F.col("sx").cast("double")
-    ) / F.col("n").cast("double")
+    ols = _ols_sums(daily)
     resid = daily.crossJoin(F.broadcast(ols)).select(
         "x",
-        F.floor(
-            F.col("y").cast("double")
-            - (intercept + slope * F.col("x").cast("double"))
-            + 1e-6
-        )
-        .cast("long")
-        .alias("eq"),
+        _ols_resid_q().cast("long").alias("eq"),
     )
     w = Window.orderBy("x")
     diffed = resid.select(
@@ -6228,21 +6139,16 @@ def durbin_watson_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DURBIN_WATSON_SQL = f"""
-WITH daily0 AS ({_DAILY_XY}),
-daily AS (
-  SELECT x, CAST(floor(cents / 100) AS BIGINT) AS y FROM daily0
-),
-ols AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
+# the DW / runs-test / variance-decomposition oracles' shared OLS fit:
+# exact BIGINT moment sums, then slope b and intercept a
+_OLS_SUMS_SQL = """
+CAST(count(*) AS BIGINT) AS n,
          CAST(sum(x) AS BIGINT) AS sx,
          CAST(sum(y) AS BIGINT) AS sy,
          CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM daily
-),
-coef AS (
-  SELECT n,
+         CAST(sum(x * x) AS BIGINT) AS sxx"""
+
+_OLS_COEF_SQL = """
          CAST(n * sxy - sx * sy AS DOUBLE)
            / CAST(n * sxx - sx * sx AS DOUBLE) AS b,
          (CAST(sy AS DOUBLE)
@@ -6251,7 +6157,24 @@ coef AS (
             * CAST(sx AS DOUBLE))
            / CAST(n AS DOUBLE) AS a
   FROM ols
+),"""
+
+# the DW and runs-test oracles' whole-dollar daily series with its OLS sums
+_DAILY_Y_OLS_SQL = f"""
+WITH daily0 AS ({_DAILY_XY}),
+daily AS (
+  SELECT x, CAST(floor(cents / 100) AS BIGINT) AS y FROM daily0
 ),
+ols AS (
+  SELECT {_OLS_SUMS_SQL}
+  FROM daily
+),"""
+
+DURBIN_WATSON_SQL = f"""
+{_DAILY_Y_OLS_SQL}
+coef AS (
+  SELECT n,
+{_OLS_COEF_SQL}
 resid AS (
   SELECT d.x,
          CAST(floor(CAST(d.y AS DOUBLE)
@@ -6290,13 +6213,7 @@ def dow_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sums are exact BIGINT cents; the two-division index is the only
     double. One hash-agg to the 7-row table; scale-free.
     """
-    daily = load(spark, sf_dir, "orders").groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
+    daily = _daily_cents(spark, sf_dir)
     dow = (F.datediff("d", F.lit("1970-01-01").cast("date")) + 3) % 7
     per = daily.select(
         dow.cast("long").alias("dow_idx"), "cents"
@@ -6819,13 +6736,7 @@ ANOM_TOP = 15
 
 
 def dow_adjusted_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = load(spark, sf_dir, "orders").groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents")
-    ).select(
+    daily = _daily_cents(spark, sf_dir).select(
         "d",
         (
             (F.datediff("d", F.lit("1970-01-01").cast("date")) + 3) % 7
@@ -6916,32 +6827,10 @@ def residual_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_xy(spark, sf_dir).select(
         "x", F.floor(F.col("cents") / 100).cast("long").alias("y")
     )
-    ols = daily.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    slope = (
-        F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    ).cast("double") / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    ).cast("double")
-    intercept = (
-        F.col("sy").cast("double") - slope * F.col("sx").cast("double")
-    ) / F.col("n").cast("double")
+    ols = _ols_sums(daily)
     signs = daily.crossJoin(F.broadcast(ols)).select(
         "x",
-        F.when(
-            F.floor(
-                F.col("y").cast("double")
-                - (intercept + slope * F.col("x").cast("double"))
-                + 1e-6
-            )
-            >= 0,
-            F.lit(1),
-        )
+        F.when(_ols_resid_q() >= 0, F.lit(1))
         .otherwise(F.lit(0))
         .cast("long")
         .alias("s"),
@@ -6982,28 +6871,9 @@ def residual_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RUNS_TEST_SQL = f"""
-WITH daily0 AS ({_DAILY_XY}),
-daily AS (
-  SELECT x, CAST(floor(cents / 100) AS BIGINT) AS y FROM daily0
-),
-ols AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM daily
-),
+{_DAILY_Y_OLS_SQL}
 coef AS (
-  SELECT CAST(n * sxy - sx * sy AS DOUBLE)
-           / CAST(n * sxx - sx * sx AS DOUBLE) AS b,
-         (CAST(sy AS DOUBLE)
-          - (CAST(n * sxy - sx * sy AS DOUBLE)
-             / CAST(n * sxx - sx * sx AS DOUBLE))
-            * CAST(sx AS DOUBLE))
-           / CAST(n AS DOUBLE) AS a
-  FROM ols
-),
+  SELECT {_OLS_COEF_SQL}
 signs AS (
   SELECT d.x,
          CASE WHEN CAST(floor(CAST(d.y AS DOUBLE)
@@ -7063,8 +6933,9 @@ FROM agg
 LTV_MAX_OFFSET = 11
 
 
-def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders").select(
+def _monthly_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders as (o_custkey, month index m = year·12 + month, cents)."""
+    return load(spark, sf_dir, "orders").select(
         "o_custkey",
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
         .cast("long")
@@ -7073,6 +6944,10 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     )
+
+
+def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = _monthly_customer_orders(spark, sf_dir)
     cohort = orders.groupBy("o_custkey").agg(
         F.min("m").cast("long").alias("m0")
     )
@@ -7169,13 +7044,7 @@ ORDER BY cohort_month, offset_m
 
 
 def daily_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = load(spark, sf_dir, "orders").groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
+    daily = _daily_cents(spark, sf_dir)
     span = daily.agg(F.min("d").alias("d_min"), F.max("d").alias("d_max"))
     spine = span.select(
         F.explode(
@@ -7713,15 +7582,7 @@ ORDER BY digit
 
 
 def growth_accounting_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders").select(
-        "o_custkey",
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-        .cast("long")
-        .alias("m"),
-        F.floor(F.col("o_totalprice") * 100 + 1e-6)
-        .cast("long")
-        .alias("cents"),
-    )
+    orders = _monthly_customer_orders(spark, sf_dir)
     first = orders.groupBy("o_custkey").agg(
         F.min("m").cast("long").alias("m0")
     )
@@ -7917,13 +7778,7 @@ ORDER BY c_mktsegment
 def variance_decomposition_daily(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    daily = load(spark, sf_dir, "orders").groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
+    daily = _daily_cents(spark, sf_dir)
     d0 = daily.agg(F.min("d").alias("d0"))
     base = daily.crossJoin(F.broadcast(d0)).select(
         F.datediff("d", "d0").cast("long").alias("x"),
@@ -7932,31 +7787,12 @@ def variance_decomposition_daily(
         ).cast("long").alias("dow"),
         F.floor(F.col("cents") / 100).cast("long").alias("y"),
     )
-    ols = base.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+    ols = _ols_sums(
+        base, F.sum(F.col("y") * F.col("y")).cast("long").alias("syy")
     )
-    slope = (
-        F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    ).cast("double") / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    ).cast("double")
-    intercept = (
-        F.col("sy").cast("double") - slope * F.col("sx").cast("double")
-    ) / F.col("n").cast("double")
     resid = base.crossJoin(F.broadcast(ols)).select(
         "dow",
-        F.floor(
-            F.col("y").cast("double")
-            - (intercept + slope * F.col("x").cast("double"))
-            + 1e-6
-        )
-        .cast("long")
-        .alias("eq"),
+        _ols_resid_q().cast("long").alias("eq"),
     )
     rmom = resid.agg(
         F.sum("eq").cast("long").alias("se"),
@@ -8014,25 +7850,13 @@ base AS (
   FROM daily0
 ),
 ols AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
+  SELECT {_OLS_SUMS_SQL},
          CAST(sum(y * y) AS BIGINT) AS syy
   FROM base
 ),
 coef AS (
   SELECT n, sx, sy, syy,
-         CAST(n * sxy - sx * sy AS DOUBLE)
-           / CAST(n * sxx - sx * sx AS DOUBLE) AS b,
-         (CAST(sy AS DOUBLE)
-          - (CAST(n * sxy - sx * sy AS DOUBLE)
-             / CAST(n * sxx - sx * sx AS DOUBLE))
-            * CAST(sx AS DOUBLE))
-           / CAST(n AS DOUBLE) AS a
-  FROM ols
-),
+{_OLS_COEF_SQL}
 resid AS (
   SELECT d.dow,
          CAST(floor(CAST(d.y AS DOUBLE)
@@ -8180,9 +8004,7 @@ def wilcoxon_monthly_revenue(
         .cast("long")
         .alias("m")
     ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents")
+        _cents_sum("cents")
     )
     w = Window.orderBy("m")
     deltas = monthly.select(
@@ -8279,12 +8101,13 @@ FROM agg
 # ---------------------------------------------------------------------------
 
 
-def segment_trend_tstats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _segment_daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(c_mktsegment, day d) revenue in exact integer cents."""
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
-    daily = (
+    return (
         orders.join(F.broadcast(cust), "o_custkey")
         .groupBy(
             "c_mktsegment",
@@ -8293,23 +8116,21 @@ def segment_trend_tstats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("d"),
         )
         .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-            .cast("long")
-            .alias("cents")
+            _cents_sum("cents")
         )
     )
+
+
+def segment_trend_tstats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    daily = _segment_daily_cents(spark, sf_dir)
     d0 = daily.agg(F.min("d").alias("d0"))
     xy = daily.crossJoin(F.broadcast(d0)).select(
         "c_mktsegment",
         F.datediff("d", "d0").cast("long").alias("x"),
         F.floor(F.col("cents") / 100).cast("long").alias("y"),
     )
-    g = xy.groupBy("c_mktsegment").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+    g = _ols_sums(
+        xy.groupBy("c_mktsegment"),
         F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
     )
     n = F.col("n").cast("double")
@@ -8334,7 +8155,8 @@ def segment_trend_tstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_mktsegment")
 
 
-SEGMENT_TREND_SQL = """
+# the segment-trend and podium oracles' per-(segment, day) revenue
+_SEGMENT_DAILY_SQL = """
 WITH daily AS (
   SELECT c.c_mktsegment,
          CAST(date_trunc('day', o.o_orderdate) AS DATE) AS d,
@@ -8342,7 +8164,29 @@ WITH daily AS (
               AS BIGINT) AS cents
   FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
   GROUP BY 1, 2
-),
+),"""
+
+# squared standard error of the per-segment slope, (Syy′ − b·Sxy′) /
+# (n − 2) / Sxx′ — under slope_se's sqrt and t_stat's denominator
+_SEG_TREND_SE2_SQL = """((CAST(syy AS DOUBLE)
+   - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)
+     / CAST(n AS DOUBLE))
+  - ((CAST(sxy AS DOUBLE)
+      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)
+        / CAST(n AS DOUBLE))
+     / (CAST(sxx AS DOUBLE)
+        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
+          / CAST(n AS DOUBLE)))
+    * (CAST(sxy AS DOUBLE)
+       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)
+         / CAST(n AS DOUBLE)))
+ / (CAST(n AS DOUBLE) - 2.0)
+ / (CAST(sxx AS DOUBLE)
+    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
+      / CAST(n AS DOUBLE))"""
+
+SEGMENT_TREND_SQL = f"""
+{_SEGMENT_DAILY_SQL}
 xy AS (
   SELECT c_mktsegment,
          CAST(date_diff('day', (SELECT min(d) FROM daily), d) AS BIGINT)
@@ -8352,11 +8196,7 @@ xy AS (
 ),
 g AS (
   SELECT c_mktsegment,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
+         {_OLS_SUMS_SQL},
          CAST(sum(y * y) AS BIGINT) AS syy
   FROM xy GROUP BY 1
 )
@@ -8369,22 +8209,7 @@ SELECT c_mktsegment, n AS n_days,
                        / CAST(n AS DOUBLE))
                   * 10000 + 1e-6) / 10000 AS DOUBLE)
          AS slope_dollars_per_day,
-       CAST(floor(sqrt(((CAST(syy AS DOUBLE)
-                         - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)
-                           / CAST(n AS DOUBLE))
-                        - ((CAST(sxy AS DOUBLE)
-                            - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)
-                              / CAST(n AS DOUBLE))
-                           / (CAST(sxx AS DOUBLE)
-                              - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                                / CAST(n AS DOUBLE)))
-                          * (CAST(sxy AS DOUBLE)
-                             - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)
-                               / CAST(n AS DOUBLE)))
-                       / (CAST(n AS DOUBLE) - 2.0)
-                       / (CAST(sxx AS DOUBLE)
-                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                            / CAST(n AS DOUBLE)))
+       CAST(floor(sqrt({_SEG_TREND_SE2_SQL})
                   * 10000 + 1e-6) / 10000 AS DOUBLE) AS slope_se,
        CAST(floor(((CAST(sxy AS DOUBLE)
                     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)
@@ -8392,22 +8217,7 @@ SELECT c_mktsegment, n AS n_days,
                    / (CAST(sxx AS DOUBLE)
                       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
                         / CAST(n AS DOUBLE)))
-                  / sqrt(((CAST(syy AS DOUBLE)
-                           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)
-                             / CAST(n AS DOUBLE))
-                          - ((CAST(sxy AS DOUBLE)
-                              - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)
-                                / CAST(n AS DOUBLE))
-                             / (CAST(sxx AS DOUBLE)
-                                - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                                  / CAST(n AS DOUBLE)))
-                            * (CAST(sxy AS DOUBLE)
-                               - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)
-                                 / CAST(n AS DOUBLE)))
-                         / (CAST(n AS DOUBLE) - 2.0)
-                         / (CAST(sxx AS DOUBLE)
-                            - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                              / CAST(n AS DOUBLE)))
+                  / sqrt({_SEG_TREND_SE2_SQL})
                   * 10000 + 1e-6) / 10000 AS DOUBLE) AS t_stat
 FROM g
 ORDER BY c_mktsegment
@@ -8426,13 +8236,7 @@ ORDER BY c_mktsegment
 
 
 def revenue_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = load(spark, sf_dir, "orders").groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
+    daily = _daily_cents(spark, sf_dir)
     tot = daily.agg(
         F.count("*").cast("long").alias("n"),
         F.sum("cents").cast("long").alias("s"),
@@ -8781,13 +8585,7 @@ BACKTEST_LOOKBACK = 4
 def seasonal_naive_backtest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    daily = load(spark, sf_dir, "orders").groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
+    daily = _daily_cents(spark, sf_dir)
     dmax = daily.agg(F.max("d").alias("dmax"))
     base = daily.crossJoin(F.broadcast(dmax)).select(
         "d", "cents", F.datediff("dmax", "d").cast("long").alias("back")
@@ -9016,13 +8814,7 @@ ORDER BY region, nation
 
 
 def weekday_revenue_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = load(spark, sf_dir, "orders").groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents")
-    ).select(
+    daily = _daily_cents(spark, sf_dir).select(
         (
             (F.datediff("d", F.lit("1970-01-01").cast("date")) + 3) % 7
         ).cast("long").alias("dow"),
@@ -9409,9 +9201,7 @@ def month_seasonality_index(
         F.countDistinct(
             (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
         ).cast("long").alias("n_months"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-        .cast("long")
-        .alias("cents"),
+        _cents_sum("cents"),
     )
     tot = per.agg(
         F.sum("n_months").cast("long").alias("nn"),
@@ -9465,6 +9255,26 @@ ORDER BY moy
 # ---------------------------------------------------------------------------
 
 
+def _pearson_num_den() -> tuple[Column, Column]:
+    """Pearson r = num / den over the exact moment sums n, sx, sy,
+    sxy, sxx, syy (closed form in doubles)."""
+    num = (
+        F.col("n").cast("double") * F.col("sxy").cast("double")
+        - F.col("sx").cast("double") * F.col("sy").cast("double")
+    )
+    den = F.sqrt(
+        (
+            F.col("n").cast("double") * F.col("sxx").cast("double")
+            - F.col("sx").cast("double") * F.col("sx").cast("double")
+        )
+        * (
+            F.col("n").cast("double") * F.col("syy").cast("double")
+            - F.col("sy").cast("double") * F.col("sy").cast("double")
+        )
+    )
+    return num, den
+
+
 def acctbal_activity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -9492,19 +9302,8 @@ def acctbal_activity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_active"),
     )
-    r = (
-        F.col("n").cast("double") * F.col("sxy").cast("double")
-        - F.col("sx").cast("double") * F.col("sy").cast("double")
-    ) / F.sqrt(
-        (
-            F.col("n").cast("double") * F.col("sxx").cast("double")
-            - F.col("sx").cast("double") * F.col("sx").cast("double")
-        )
-        * (
-            F.col("n").cast("double") * F.col("syy").cast("double")
-            - F.col("sy").cast("double") * F.col("sy").cast("double")
-        )
-    )
+    num, den = _pearson_num_den()
+    r = num / den
     return agg.select(
         F.col("n").alias("n_customers"),
         "n_active",
@@ -9613,6 +9412,28 @@ def brand_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("p_brand")
 
 
+def _wilson_sql(sign: str) -> str:
+    """Wilson score bound (sign '-' lower, '+' upper) of the brand
+    return rate n_returns / n_lines at z = _BRAND_Z."""
+    z2 = f"{_BRAND_Z * _BRAND_Z!r}"
+    return f"""((CAST(n_returns AS DOUBLE) / CAST(n_lines AS DOUBLE)
+    + {z2}
+      / (2.0 * CAST(n_lines AS DOUBLE)))
+   / (1.0 + {z2}
+            / CAST(n_lines AS DOUBLE))
+   {sign} {_BRAND_Z!r}
+     * sqrt((CAST(n_returns AS DOUBLE)
+             / CAST(n_lines AS DOUBLE))
+            * (1.0 - CAST(n_returns AS DOUBLE)
+                     / CAST(n_lines AS DOUBLE))
+            / CAST(n_lines AS DOUBLE)
+            + {z2}
+              / (4.0 * CAST(n_lines AS DOUBLE)
+                 * CAST(n_lines AS DOUBLE)))
+     / (1.0 + {z2}
+              / CAST(n_lines AS DOUBLE)))"""
+
+
 BRAND_RETURN_SQL = f"""
 WITH per AS (
   SELECT p.p_brand,
@@ -9630,56 +9451,11 @@ tot AS (
 SELECT p_brand, n_lines, n_returns,
        CAST(floor(CAST(n_returns AS DOUBLE) / CAST(n_lines AS DOUBLE)
                   * 1000000 + 1e-6) / 1000000 AS DOUBLE) AS return_rate,
-       CAST(floor(((CAST(n_returns AS DOUBLE) / CAST(n_lines AS DOUBLE)
-                    + {_BRAND_Z * _BRAND_Z!r}
-                      / (2.0 * CAST(n_lines AS DOUBLE)))
-                   / (1.0 + {_BRAND_Z * _BRAND_Z!r}
-                            / CAST(n_lines AS DOUBLE))
-                   - {_BRAND_Z!r}
-                     * sqrt((CAST(n_returns AS DOUBLE)
-                             / CAST(n_lines AS DOUBLE))
-                            * (1.0 - CAST(n_returns AS DOUBLE)
-                                     / CAST(n_lines AS DOUBLE))
-                            / CAST(n_lines AS DOUBLE)
-                            + {_BRAND_Z * _BRAND_Z!r}
-                              / (4.0 * CAST(n_lines AS DOUBLE)
-                                 * CAST(n_lines AS DOUBLE)))
-                     / (1.0 + {_BRAND_Z * _BRAND_Z!r}
-                              / CAST(n_lines AS DOUBLE)))
+       CAST(floor({_wilson_sql('-')}
                   * 1000000 + 1e-6) / 1000000 AS DOUBLE) AS wilson_lo,
-       CAST(floor(((CAST(n_returns AS DOUBLE) / CAST(n_lines AS DOUBLE)
-                    + {_BRAND_Z * _BRAND_Z!r}
-                      / (2.0 * CAST(n_lines AS DOUBLE)))
-                   / (1.0 + {_BRAND_Z * _BRAND_Z!r}
-                            / CAST(n_lines AS DOUBLE))
-                   + {_BRAND_Z!r}
-                     * sqrt((CAST(n_returns AS DOUBLE)
-                             / CAST(n_lines AS DOUBLE))
-                            * (1.0 - CAST(n_returns AS DOUBLE)
-                                     / CAST(n_lines AS DOUBLE))
-                            / CAST(n_lines AS DOUBLE)
-                            + {_BRAND_Z * _BRAND_Z!r}
-                              / (4.0 * CAST(n_lines AS DOUBLE)
-                                 * CAST(n_lines AS DOUBLE)))
-                     / (1.0 + {_BRAND_Z * _BRAND_Z!r}
-                              / CAST(n_lines AS DOUBLE)))
+       CAST(floor({_wilson_sql('+')}
                   * 1000000 + 1e-6) / 1000000 AS DOUBLE) AS wilson_hi,
-       floor(((CAST(n_returns AS DOUBLE) / CAST(n_lines AS DOUBLE)
-               + {_BRAND_Z * _BRAND_Z!r}
-                 / (2.0 * CAST(n_lines AS DOUBLE)))
-              / (1.0 + {_BRAND_Z * _BRAND_Z!r}
-                       / CAST(n_lines AS DOUBLE))
-              - {_BRAND_Z!r}
-                * sqrt((CAST(n_returns AS DOUBLE)
-                        / CAST(n_lines AS DOUBLE))
-                       * (1.0 - CAST(n_returns AS DOUBLE)
-                                / CAST(n_lines AS DOUBLE))
-                       / CAST(n_lines AS DOUBLE)
-                       + {_BRAND_Z * _BRAND_Z!r}
-                         / (4.0 * CAST(n_lines AS DOUBLE)
-                            * CAST(n_lines AS DOUBLE)))
-                / (1.0 + {_BRAND_Z * _BRAND_Z!r}
-                         / CAST(n_lines AS DOUBLE)))
+       floor({_wilson_sql('-')}
              * 1000000 + 1e-6)
          > floor(CAST(t.tr AS DOUBLE) / CAST(t.tn AS DOUBLE)
                  * 1000000 + 1e-6) AS worse_than_corpus
@@ -9702,24 +9478,7 @@ ORDER BY p_brand
 def podium_days_per_segment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    daily = (
-        orders.join(F.broadcast(cust), "o_custkey")
-        .groupBy(
-            "c_mktsegment",
-            F.date_trunc("day", F.col("o_orderdate"))
-            .cast("date")
-            .alias("d"),
-        )
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = _segment_daily_cents(spark, sf_dir)
     w = (
         Window.partitionBy("c_mktsegment")
         .orderBy(F.desc("cents"), F.asc("d"))
@@ -9745,15 +9504,8 @@ def podium_days_per_segment(
     ).orderBy("c_mktsegment")
 
 
-PODIUM_SQL = """
-WITH daily AS (
-  SELECT c.c_mktsegment,
-         CAST(date_trunc('day', o.o_orderdate) AS DATE) AS d,
-         CAST(sum(CAST(floor(o.o_totalprice * 100 + 1e-6) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-  GROUP BY 1, 2
-),
+PODIUM_SQL = f"""
+{_SEGMENT_DAILY_SQL}
 ranked AS (
   SELECT c_mktsegment,
          row_number() OVER (PARTITION BY c_mktsegment
@@ -9789,17 +9541,27 @@ ORDER BY c_mktsegment
 _LI_FEATURES = ["qty", "price_c", "disc_bp", "tax_bp"]
 
 
-def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem").select(
-        F.floor(F.col("l_quantity") + 1e-6).cast("long").alias("qty"),
-        F.floor(F.col("l_extendedprice") / F.col("l_quantity") * 100 + 1e-6)
-        .cast("long")
-        .alias("price_c"),
-        F.floor(F.col("l_discount") * 10000 + 1e-6)
-        .cast("long")
-        .alias("disc_bp"),
-        F.floor(F.col("l_tax") * 10000 + 1e-6).cast("long").alias("tax_bp"),
+def _li_features(
+    spark: SparkSession, sf_dir: str, names: list[str]
+) -> DataFrame:
+    """lineitem as the exact integer features ``names`` (of
+    _LI_FEATURES): whole quantity, unit price in cents, discount and
+    tax in basis points."""
+    exprs = {
+        "qty": F.floor(F.col("l_quantity") + 1e-6),
+        "price_c": F.floor(
+            F.col("l_extendedprice") / F.col("l_quantity") * 100 + 1e-6
+        ),
+        "disc_bp": F.floor(F.col("l_discount") * 10000 + 1e-6),
+        "tax_bp": F.floor(F.col("l_tax") * 10000 + 1e-6),
+    }
+    return load(spark, sf_dir, "lineitem").select(
+        *[exprs[n].cast("long").alias(n) for n in names]
     )
+
+
+def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _li_features(spark, sf_dir, _LI_FEATURES)
     aggs = [F.count("*").cast("long").alias("n")]
     for f in _LI_FEATURES:
         aggs.append(F.sum(f).cast("long").alias(f"s_{f}"))
@@ -10058,15 +9820,7 @@ _PC_FEATURES = ["qty", "price_c", "disc_bp"]
 
 
 def partial_corr_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem").select(
-        F.floor(F.col("l_quantity") + 1e-6).cast("long").alias("qty"),
-        F.floor(F.col("l_extendedprice") / F.col("l_quantity") * 100 + 1e-6)
-        .cast("long")
-        .alias("price_c"),
-        F.floor(F.col("l_discount") * 10000 + 1e-6)
-        .cast("long")
-        .alias("disc_bp"),
-    )
+    li = _li_features(spark, sf_dir, _PC_FEATURES)
     aggs = [F.count("*").cast("long").alias("n")]
     for f in _PC_FEATURES:
         aggs.append(F.sum(f).cast("long").alias(f"s_{f}"))
@@ -10627,7 +10381,12 @@ GPD_P = 95
 GPD_RET_T = 10_000
 
 
-def gpd_tail_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _order_cents_cum(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(cents, tot, cum): every order total in exact integer cents
+    ``c``, the order count ``n``, and the cents histogram's cumulative
+    rank ``cum`` per distinct value with ``n`` attached."""
     cents = load(spark, sf_dir, "orders").select(
         F.floor(F.col("o_totalprice") * 100 + 1e-6)
         .cast("long")
@@ -10641,6 +10400,28 @@ def gpd_tail_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = hist.select(
         "c", F.sum("n_v").over(w).cast("long").alias("cum")
     ).crossJoin(F.broadcast(tot))
+    return cents, tot, cum
+
+
+# the GPD and median-CI oracles' shared prefix: the global order-cents
+# histogram and its cumulative rank walk
+_ORDER_CENTS_CUM_SQL = """
+WITH cents AS (
+  SELECT CAST(floor(o_totalprice * 100 + 1e-6) AS BIGINT) AS c
+  FROM orders
+),
+hist AS (SELECT c, CAST(count(*) AS BIGINT) AS n_v FROM cents GROUP BY 1),
+tot AS (SELECT CAST(sum(n_v) AS BIGINT) AS n FROM hist),
+cum AS (
+  SELECT c, CAST(sum(n_v) OVER (ORDER BY c
+                                ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND CURRENT ROW) AS BIGINT) AS cum
+  FROM hist
+)"""
+
+
+def gpd_tail_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cents, tot, cum = _order_cents_cum(spark, sf_dir)
     k = F.floor((F.lit(GPD_P) * F.col("n") + 99) / 100).cast("long")
     u_row = (
         cum.where(F.col("cum") >= k)
@@ -10680,18 +10461,7 @@ def gpd_tail_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 GPD_TAIL_SQL = f"""
-WITH cents AS (
-  SELECT CAST(floor(o_totalprice * 100 + 1e-6) AS BIGINT) AS c
-  FROM orders
-),
-hist AS (SELECT c, CAST(count(*) AS BIGINT) AS n_v FROM cents GROUP BY 1),
-tot AS (SELECT CAST(sum(n_v) AS BIGINT) AS n FROM hist),
-cum AS (
-  SELECT c, CAST(sum(n_v) OVER (ORDER BY c
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS BIGINT) AS cum
-  FROM hist
-),
+{_ORDER_CENTS_CUM_SQL},
 u_row AS (
   SELECT CAST(min(c) AS BIGINT) AS u
   FROM cum, tot
@@ -10768,20 +10538,7 @@ def simpsons_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
         F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
     )
-    num = (
-        F.col("n").cast("double") * F.col("sxy").cast("double")
-        - F.col("sx").cast("double") * F.col("sy").cast("double")
-    )
-    den = F.sqrt(
-        (
-            F.col("n").cast("double") * F.col("sxx").cast("double")
-            - F.col("sx").cast("double") * F.col("sx").cast("double")
-        )
-        * (
-            F.col("n").cast("double") * F.col("syy").cast("double")
-            - F.col("sy").cast("double") * F.col("sy").cast("double")
-        )
-    )
+    num, den = _pearson_num_den()
     scored = mom.select(
         F.coalesce("l_returnflag", F.lit("<ALL>")).alias("stratum"),
         "n",
@@ -10861,19 +10618,7 @@ MEDIAN_CI_Z = 1.959964
 
 
 def median_ci_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cents = load(spark, sf_dir, "orders").select(
-        F.floor(F.col("o_totalprice") * 100 + 1e-6)
-        .cast("long")
-        .alias("c")
-    )
-    hist = cents.groupBy("c").agg(F.count("*").cast("long").alias("n_v"))
-    tot = hist.agg(F.sum("n_v").cast("long").alias("n"))
-    w = Window.orderBy("c").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.select(
-        "c", F.sum("n_v").over(w).cast("long").alias("cum")
-    ).crossJoin(F.broadcast(tot))
+    _, _, cum = _order_cents_cum(spark, sf_dir)
     nd = F.col("n").cast("double")
     l_rank = F.greatest(
         F.lit(1).cast("long"),
@@ -10905,18 +10650,7 @@ def median_ci_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MEDIAN_CI_SQL = f"""
-WITH cents AS (
-  SELECT CAST(floor(o_totalprice * 100 + 1e-6) AS BIGINT) AS c
-  FROM orders
-),
-hist AS (SELECT c, CAST(count(*) AS BIGINT) AS n_v FROM cents GROUP BY 1),
-tot AS (SELECT CAST(sum(n_v) AS BIGINT) AS n FROM hist),
-cum AS (
-  SELECT c, CAST(sum(n_v) OVER (ORDER BY c
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS BIGINT) AS cum
-  FROM hist
-)
+{_ORDER_CENTS_CUM_SQL}
 SELECT t.n AS n_orders,
        CAST(min(CASE WHEN cum >= CAST(floor((CAST(t.n AS DOUBLE) + 1.0)
                                             / 2.0 + 1e-6) AS BIGINT)
@@ -10957,21 +10691,7 @@ GROUP BY t.n
 
 
 def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
-        load(spark, sf_dir, "orders")
-        .groupBy(
-            F.date_trunc("day", F.col("o_orderdate"))
-            .cast("date")
-            .alias("d")
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 1e-6).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = _daily_cents(spark, sf_dir)
     a = daily.select(
         F.col("d").alias("da"), F.col("cents").alias("ca")
     )

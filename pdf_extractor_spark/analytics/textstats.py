@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .base import floor_round as _floor_round
-from .base import load
+from .base import _DOC_WAVE_SQL, _doc_wave, load
 from .base import tokens as _tokens
 
 STOPWORDS = ["the", "a", "fast", "slow"]
@@ -201,8 +201,8 @@ def _sql_words(lang: str) -> str:
     return "[" + ",".join(f"'{w}'" for w in _LANG_SETS[lang]) + "]"
 
 
-def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
+def _lang_pred() -> Column:
+    """The stopword-hit language prediction: en, then de, then es."""
     toks = _tokens()
     hits = {
         lang: F.size(
@@ -210,24 +210,44 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for lang, ws in _LANG_SETS.items()
     }
-    pred = (
+    return (
         F.when((hits["en"] >= hits["de"]) & (hits["en"] >= hits["es"]), "en")
         .when(hits["de"] >= hits["es"], "de")
         .otherwise("es")
     )
-    return docs.select("doc_id", pred.alias("lang_pred"))
 
+
+def _lang_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language-ID confusion cells: (actual, predicted, n)."""
+    return (
+        load(spark, sf_dir, "documents")
+        .select(F.col("lang").alias("actual"), _lang_pred().alias("predicted"))
+        .groupBy("actual", "predicted")
+        .agg(F.count("*").cast("long").alias("n"))
+    )
+
+
+def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents")
+    return docs.select("doc_id", _lang_pred().alias("lang_pred"))
+
+
+# the language-ID oracles' shared prediction: stopword hits per language,
+# then the en > de > es tie order
+_LANG_HITS_SQL = f"""len(list_intersect(toks, {_sql_words("en")})) AS en,
+         len(list_intersect(toks, {_sql_words("de")})) AS de,
+         len(list_intersect(toks, {_sql_words("es")})) AS es"""
+
+_LANG_CASE_SQL = """CASE WHEN en >= de AND en >= es THEN 'en'
+            WHEN de >= es THEN 'de'
+            ELSE 'es' END"""
 
 LANG_ID_SQL = rf"""
 SELECT doc_id,
-       CASE WHEN en >= de AND en >= es THEN 'en'
-            WHEN de >= es THEN 'de'
-            ELSE 'es' END AS lang_pred
+       {_LANG_CASE_SQL} AS lang_pred
 FROM (
   SELECT doc_id,
-         len(list_intersect(toks, {_sql_words("en")})) AS en,
-         len(list_intersect(toks, {_sql_words("de")})) AS de,
-         len(list_intersect(toks, {_sql_words("es")})) AS es
+         {_LANG_HITS_SQL}
   FROM (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents)
 )
 """
@@ -305,18 +325,15 @@ def _bm25_from_per_doc(per_doc: DataFrame, n_terms: int) -> DataFrame:
     return joined.select("doc_id", _floor_round(score, 4).alias("bm25"))
 
 
-def bm25_scores(docs: DataFrame, terms: list | None = None) -> DataFrame:
-    """(doc_id, bm25) for every document — shared by bm25_search, the
-    hybrid RRF query, and the user-facing dispatch (``terms`` carries
-    an arbitrary tokenized query; default = the graded fixture terms)."""
-    terms = BM25_TERMS if terms is None else terms
-    toks = _tokens()
+def _bm25_per_doc(docs: DataFrame, toks: Column, terms: list) -> DataFrame:
+    """(doc_id, dl, tf_0..) — document length and each query term's
+    count in the token array ``toks``."""
     def _eq(term: str):
         # NB: capture via factory, not lambda default args — Spark counts
         # default args in HOF lambda arity and would pass the array index.
         return lambda t: t == F.lit(term)
 
-    per_doc = docs.select(
+    return docs.select(
         "doc_id",
         F.size(toks).alias("dl"),
         *[
@@ -324,6 +341,14 @@ def bm25_scores(docs: DataFrame, terms: list | None = None) -> DataFrame:
             for i, t_ in enumerate(terms)
         ],
     )
+
+
+def bm25_scores(docs: DataFrame, terms: list | None = None) -> DataFrame:
+    """(doc_id, bm25) for every document — shared by bm25_search, the
+    hybrid RRF query, and the user-facing dispatch (``terms`` carries
+    an arbitrary tokenized query; default = the graded fixture terms)."""
+    terms = BM25_TERMS if terms is None else terms
+    per_doc = _bm25_per_doc(docs, _tokens(), terms)
     # BM25 needs corpus stats BEFORE scoring → two passes over per_doc.
     # Persist the projection so the expensive part (parquet scan +
     # tokenization of every document) runs once; what's cached is only
@@ -661,20 +686,7 @@ def bm25_scores_stemmed(docs: DataFrame, query: str | None = None) -> DataFrame:
     )
     if not terms:
         raise ValueError("empty query after analysis")
-    toks = _stemmed_tokens_udf()(F.col("text"))
-
-    def _eq(term: str):
-        # factory capture, not lambda default args (HOF arity rule)
-        return lambda t: t == F.lit(term)
-
-    per_doc = docs.select(
-        "doc_id",
-        F.size(toks).alias("dl"),
-        *[
-            F.size(F.filter(toks, _eq(t_))).alias(f"tf_{i}")
-            for i, t_ in enumerate(terms)
-        ],
-    )
+    per_doc = _bm25_per_doc(docs, _stemmed_tokens_udf()(F.col("text")), terms)
     if query is None:  # cache only the fixed graded plan (see bm25_scores)
         per_doc = per_doc.persist()
     return _bm25_from_per_doc(per_doc, len(terms))
@@ -781,7 +793,9 @@ def doc_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_sql() -> str:
+def _bpe_per_doc_sql() -> str:
+    """The BPE oracles' shared prefix: each document's pinned-vocabulary
+    BPE token count (NULL when a token is out of vocabulary)."""
     from ..textproc import bpe_token_count
 
     values = ", ".join(
@@ -800,7 +814,11 @@ per_doc AS (
   FROM tok_rows t LEFT JOIN bpe_counts m ON t.tok = m.tok
   WHERE t.tok <> ''
   GROUP BY t.doc_id
-)
+)"""
+
+
+def _bpe_sql() -> str:
+    return _bpe_per_doc_sql() + r"""
 -- re-anchor on documents: an empty/whitespace-only doc has no surviving
 -- tok_rows and would otherwise VANISH from the oracle while the Spark
 -- kernel correctly emits n_bpe_tokens=0 for it (rows-mismatch at the
@@ -1541,25 +1559,25 @@ ORDER BY lang, p
 # ---------------------------------------------------------------------------
 
 
+_LANG_CELLS_SQL = rf"""
+WITH pred AS (
+  SELECT lang AS actual,
+         {_LANG_CASE_SQL} AS predicted
+  FROM (
+    SELECT lang,
+           {_LANG_HITS_SQL}
+    FROM (SELECT lang, string_split_regex(text, '\s+') AS toks
+          FROM documents)
+  )
+),
+cells AS (
+  SELECT actual, predicted, CAST(count(*) AS BIGINT) AS n
+  FROM pred GROUP BY 1, 2
+),"""
+
+
 def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
-    hits = {
-        lang: F.size(
-            F.array_intersect(toks, F.array(*[F.lit(w) for w in ws]))
-        )
-        for lang, ws in _LANG_SETS.items()
-    }
-    pred = (
-        F.when((hits["en"] >= hits["de"]) & (hits["en"] >= hits["es"]), "en")
-        .when(hits["de"] >= hits["es"], "de")
-        .otherwise("es")
-    )
-    cells = (
-        docs.select(F.col("lang").alias("actual"), pred.alias("predicted"))
-        .groupBy("actual", "predicted")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
+    cells = _lang_cells(spark, sf_dir)
     row_tot = cells.groupBy("actual").agg(
         F.sum("n").cast("long").alias("n_actual")
     )
@@ -1581,24 +1599,7 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LANGID_CONFUSION_SQL = rf"""
-WITH pred AS (
-  SELECT lang AS actual,
-         CASE WHEN en >= de AND en >= es THEN 'en'
-              WHEN de >= es THEN 'de'
-              ELSE 'es' END AS predicted
-  FROM (
-    SELECT lang,
-           len(list_intersect(toks, {_sql_words("en")})) AS en,
-           len(list_intersect(toks, {_sql_words("de")})) AS de,
-           len(list_intersect(toks, {_sql_words("es")})) AS es
-    FROM (SELECT lang, string_split_regex(text, '\s+') AS toks
-          FROM documents)
-  )
-),
-cells AS (
-  SELECT actual, predicted, CAST(count(*) AS BIGINT) AS n
-  FROM pred GROUP BY 1, 2
-),
+{_LANG_CELLS_SQL}
 rt AS (SELECT actual, sum(n) AS n_actual FROM cells GROUP BY 1),
 ct AS (SELECT predicted, sum(n) AS n_predicted FROM cells GROUP BY 1)
 SELECT c.actual, c.predicted, c.n,
@@ -1815,25 +1816,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fertility_sql() -> str:
-    from ..textproc import bpe_token_count
-
-    values = ", ".join(
-        f"('{w}', {bpe_token_count(w)})" for w in _CORPUS_VOCAB
-    )
-    return rf"""
-WITH bpe_counts(tok, n) AS (SELECT * FROM (VALUES {values})),
-tok_rows AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-  FROM documents
-),
-per_doc AS (
-  SELECT t.doc_id,
-         CAST(CASE WHEN count(*) = count(m.n) THEN sum(m.n) END AS INT)
-           AS n_bpe_tokens
-  FROM tok_rows t LEFT JOIN bpe_counts m ON t.tok = m.tok
-  WHERE t.tok <> ''
-  GROUP BY t.doc_id
-),
+    return _bpe_per_doc_sql() + r""",
 anchored AS (
   SELECT d.lang, d.n_chars,
          CASE WHEN p.doc_id IS NULL THEN 0 ELSE p.n_bpe_tokens END AS nt
@@ -2739,17 +2722,21 @@ def chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang", "source")
 
 
-CHI2_LANG_SOURCE_SQL = """
-WITH cells AS (
-  SELECT lang, source, CAST(count(*) AS BIGINT) AS n
-  FROM documents GROUP BY 1, 2
-),
+# the chi-square and mutual-information oracles' contingency margins
+_LANG_SOURCE_MARGINS_SQL = """
 rowt AS (
   SELECT lang, CAST(count(*) AS BIGINT) AS rt FROM documents GROUP BY 1
 ),
 colt AS (
   SELECT source, CAST(count(*) AS BIGINT) AS ct FROM documents GROUP BY 1
+),"""
+
+CHI2_LANG_SOURCE_SQL = f"""
+WITH cells AS (
+  SELECT lang, source, CAST(count(*) AS BIGINT) AS n
+  FROM documents GROUP BY 1, 2
 ),
+{_LANG_SOURCE_MARGINS_SQL}
 tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM documents)
 SELECT r.lang, c.source,
        coalesce(x.n, 0) AS n,
@@ -2782,24 +2769,7 @@ ORDER BY r.lang, c.source
 
 
 def langid_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
-    hits = {
-        lang: F.size(
-            F.array_intersect(toks, F.array(*[F.lit(w) for w in ws]))
-        )
-        for lang, ws in _LANG_SETS.items()
-    }
-    pred = (
-        F.when((hits["en"] >= hits["de"]) & (hits["en"] >= hits["es"]), "en")
-        .when(hits["de"] >= hits["es"], "de")
-        .otherwise("es")
-    )
-    cells = (
-        docs.select(F.col("lang").alias("actual"), pred.alias("predicted"))
-        .groupBy("actual", "predicted")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
+    cells = _lang_cells(spark, sf_dir)
     rt = cells.groupBy("actual").agg(F.sum("n").alias("rt"))
     ct = cells.groupBy("predicted").agg(F.sum("n").alias("ct"))
     chance = (
@@ -2828,24 +2798,7 @@ def langid_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LANGID_KAPPA_SQL = rf"""
-WITH pred AS (
-  SELECT lang AS actual,
-         CASE WHEN en >= de AND en >= es THEN 'en'
-              WHEN de >= es THEN 'de'
-              ELSE 'es' END AS predicted
-  FROM (
-    SELECT lang,
-           len(list_intersect(toks, {_sql_words("en")})) AS en,
-           len(list_intersect(toks, {_sql_words("de")})) AS de,
-           len(list_intersect(toks, {_sql_words("es")})) AS es
-    FROM (SELECT lang, string_split_regex(text, '\s+') AS toks
-          FROM documents)
-  )
-),
-cells AS (
-  SELECT actual, predicted, CAST(count(*) AS BIGINT) AS n
-  FROM pred GROUP BY 1, 2
-),
+{_LANG_CELLS_SQL}
 rt AS (SELECT actual, CAST(sum(n) AS BIGINT) AS rt FROM cells GROUP BY 1),
 ct AS (SELECT predicted, CAST(sum(n) AS BIGINT) AS ct FROM cells GROUP BY 1),
 chance AS (
@@ -2887,8 +2840,11 @@ FROM base, chance
 # ---------------------------------------------------------------------------
 
 
-def spearman_len_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
+def _len_quality_scores(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, n_chars) and (doc_id, s_i): each document's length and
+    its linear quality score floored to a 1e-4 integer grid."""
     from .quality_rules import quality_classifier_linear
 
     lens = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -2896,6 +2852,12 @@ def spearman_len_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.floor(F.col("score") * 10000 + 1e-6).cast("long").alias("s_i"),
     )
+    return lens, scores
+
+
+def spearman_len_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+    lens, scores = _len_quality_scores(spark, sf_dir)
 
     def doubled_ranks(df: DataFrame, col: str, out: str) -> DataFrame:
         hist = df.groupBy(col).agg(F.count("*").cast("long").alias("n_v"))
@@ -2943,13 +2905,17 @@ def spearman_len_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from .quality_rules import QUALITY_CLASSIFIER_SQL as _CLS_SQL  # noqa: E402
 
-SPEARMAN_SQL = f"""
+# the Spearman and Kendall oracles' classifier score on its 1e-4 grid
+_LEN_QUALITY_SCORED_SQL = f"""
 WITH scored AS (
   SELECT doc_id,
          CAST(floor(score * 10000 + 1e-6) AS BIGINT) AS s_i
   FROM ({_CLS_SQL.replace(chr(10), chr(10) + '    ')}
   ) _c
-),
+),"""
+
+SPEARMAN_SQL = f"""
+{_LEN_QUALITY_SCORED_SQL}
 lens AS (SELECT doc_id, n_chars FROM documents),
 hx AS (
   SELECT n_chars, CAST(count(*) AS BIGINT) AS n_v FROM lens GROUP BY 1
@@ -3210,17 +3176,12 @@ def mutual_info_lang_source(
     )
 
 
-MUTUAL_INFO_SQL = """
+MUTUAL_INFO_SQL = f"""
 WITH cells AS (
   SELECT lang, source, CAST(count(*) AS BIGINT) AS n_ij
   FROM documents GROUP BY 1, 2
 ),
-rowt AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS rt FROM documents GROUP BY 1
-),
-colt AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS ct FROM documents GROUP BY 1
-),
+{_LANG_SOURCE_MARGINS_SQL}
 tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
 mi AS (
   SELECT CAST(sum(CAST(floor(
@@ -3381,13 +3342,7 @@ def kendall_tau_len_quality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from pyspark.sql import Window
-    from .quality_rules import quality_classifier_linear
-
-    lens = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    scores = quality_classifier_linear(spark, sf_dir).select(
-        "doc_id",
-        F.floor(F.col("score") * 10000 + 1e-6).cast("long").alias("s_i"),
-    )
+    lens, scores = _len_quality_scores(spark, sf_dir)
     joined = lens.join(scores, "doc_id")
     n = joined.agg(F.count("*").cast("long").alias("n"))
 
@@ -3499,15 +3454,8 @@ def kendall_tau_len_quality(
     )
 
 
-from .quality_rules import QUALITY_CLASSIFIER_SQL as _CLS_SQL2  # noqa: E402
-
 KENDALL_SQL = f"""
-WITH scored AS (
-  SELECT doc_id,
-         CAST(floor(score * 10000 + 1e-6) AS BIGINT) AS s_i
-  FROM ({_CLS_SQL2.replace(chr(10), chr(10) + '    ')}
-  ) _c
-),
+{_LEN_QUALITY_SCORED_SQL}
 joined AS (
   SELECT d.doc_id, d.n_chars, s.s_i
   FROM documents d JOIN scored s ON s.doc_id = d.doc_id
@@ -4292,14 +4240,17 @@ ORDER BY rnk
 # ---------------------------------------------------------------------------
 
 
-def anova_length_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").select(
-        "lang", F.size(_tokens()).cast("long").alias("n_t")
-    )
-    g = docs.groupBy("lang").agg(
+def _oneway_anova(
+    df: DataFrame, col: str
+) -> tuple[DataFrame, Column, Column, Column]:
+    """One-way ANOVA of ``col`` across ``lang`` groups: the one-row
+    (k_groups, n_total, ssw_q, ssb_q) aggregate — per-group SS terms
+    floored to a 1e-6 grid before the BIGINT sum — and the SS_between,
+    SS_within and F columns over it."""
+    g = df.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_g"),
-        F.sum("n_t").cast("long").alias("s_g"),
-        F.sum(F.col("n_t") * F.col("n_t")).cast("long").alias("ss_g"),
+        F.sum(col).cast("long").alias("s_g"),
+        F.sum(F.col(col) * F.col(col)).cast("long").alias("ss_g"),
     )
     tot = g.agg(
         F.count("*").cast("long").alias("k"),
@@ -4338,6 +4289,14 @@ def anova_length_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.col("k_groups").cast("double")
         )
     )
+    return agg, ssb, ssw, f_stat
+
+
+def anova_length_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents").select(
+        "lang", F.size(_tokens()).cast("long").alias("n_t")
+    )
+    agg, ssb, ssw, f_stat = _oneway_anova(docs, "n_t")
     return agg.select(
         F.col("k_groups").cast("long").alias("k_groups"),
         F.col("n_total").cast("long").alias("n_total"),
@@ -4348,18 +4307,15 @@ def anova_length_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANOVA_LENGTH_SQL = r"""
-WITH docs AS (
-  SELECT lang,
-         CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_t
-  FROM documents
-),
-g AS (
+def _anova_sql(col: str, src: str) -> str:
+    """The ANOVA oracles' shared CTEs g, tot, terms and agg: one-way
+    ANOVA of ``col`` across ``lang`` over the relation ``src``."""
+    return f"""g AS (
   SELECT lang,
          CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(n_t) AS BIGINT) AS s_g,
-         CAST(sum(n_t * n_t) AS BIGINT) AS ss_g
-  FROM docs GROUP BY 1
+         CAST(sum({col}) AS BIGINT) AS s_g,
+         CAST(sum({col} * {col}) AS BIGINT) AS ss_g
+  FROM {src} GROUP BY 1
 ),
 tot AS (
   SELECT CAST(count(*) AS BIGINT) AS k,
@@ -4386,7 +4342,16 @@ agg AS (
          CAST(sum(wq) AS BIGINT) AS ssw_q,
          CAST(sum(bq) AS BIGINT) AS ssb_q
   FROM terms
-)
+)"""
+
+
+ANOVA_LENGTH_SQL = rf"""
+WITH docs AS (
+  SELECT lang,
+         CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_t
+  FROM documents
+),
+{_anova_sql("n_t", "docs")}
 SELECT CAST(k_groups AS BIGINT) AS k_groups,
        CAST(n_total AS BIGINT) AS n_total,
        CAST(floor(CAST(ssb_q AS DOUBLE) / 1000000.0 * 10000 + 1e-6)
@@ -4452,48 +4417,7 @@ def brown_forsythe_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = docs.join(F.broadcast(med), "lang").select(
         "lang", F.abs(F.col("n_t") - F.col("med")).cast("long").alias("z")
     )
-    g = z.groupBy("lang").agg(
-        F.count("*").cast("long").alias("n_g"),
-        F.sum("z").cast("long").alias("s_g"),
-        F.sum(F.col("z") * F.col("z")).cast("long").alias("ss_g"),
-    )
-    tot = g.agg(
-        F.count("*").cast("long").alias("k"),
-        F.sum("n_g").cast("long").alias("n"),
-        F.sum("s_g").cast("long").alias("s"),
-    )
-    j = g.crossJoin(F.broadcast(tot))
-    m_g = F.col("s_g").cast("double") / F.col("n_g").cast("double")
-    m = F.col("s").cast("double") / F.col("n").cast("double")
-    wq = F.floor(
-        (
-            F.col("ss_g").cast("double")
-            - F.col("s_g").cast("double")
-              * F.col("s_g").cast("double")
-              / F.col("n_g").cast("double")
-        )
-        * 1000000
-        + 1e-6
-    ).cast("long")
-    bq = F.floor(
-        F.col("n_g").cast("double") * (m_g - m) * (m_g - m) * 1000000
-        + 1e-6
-    ).cast("long")
-    agg = j.groupBy().agg(
-        F.max("k").alias("k_groups"),
-        F.max("n").alias("n_total"),
-        F.sum(wq).cast("long").alias("ssw_q"),
-        F.sum(bq).cast("long").alias("ssb_q"),
-    )
-    ssw = F.col("ssw_q").cast("double") / 1000000.0
-    ssb = F.col("ssb_q").cast("double") / 1000000.0
-    f_stat = (ssb / (F.col("k_groups").cast("double") - 1.0)) / (
-        ssw
-        / (
-            F.col("n_total").cast("double")
-            - F.col("k_groups").cast("double")
-        )
-    )
+    agg, _, _, f_stat = _oneway_anova(z, "z")
     return agg.select(
         F.col("k_groups").cast("long").alias("k_groups"),
         F.col("n_total").cast("long").alias("n_total"),
@@ -4501,7 +4425,7 @@ def brown_forsythe_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BROWN_FORSYTHE_SQL = r"""
+BROWN_FORSYTHE_SQL = rf"""
 WITH docs AS (
   SELECT lang,
          CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_t
@@ -4529,39 +4453,7 @@ z AS (
   SELECT d.lang, CAST(abs(d.n_t - m.med) AS BIGINT) AS z
   FROM docs d JOIN med m USING (lang)
 ),
-g AS (
-  SELECT lang,
-         CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(z) AS BIGINT) AS s_g,
-         CAST(sum(z * z) AS BIGINT) AS ss_g
-  FROM z GROUP BY 1
-),
-tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(n_g) AS BIGINT) AS n,
-         CAST(sum(s_g) AS BIGINT) AS s
-  FROM g
-),
-terms AS (
-  SELECT t.k, t.n,
-         CAST(floor((CAST(g.ss_g AS DOUBLE)
-                     - CAST(g.s_g AS DOUBLE) * CAST(g.s_g AS DOUBLE)
-                       / CAST(g.n_g AS DOUBLE))
-                    * 1000000 + 1e-6) AS BIGINT) AS wq,
-         CAST(floor(CAST(g.n_g AS DOUBLE)
-                    * (CAST(g.s_g AS DOUBLE) / CAST(g.n_g AS DOUBLE)
-                       - CAST(t.s AS DOUBLE) / CAST(t.n AS DOUBLE))
-                    * (CAST(g.s_g AS DOUBLE) / CAST(g.n_g AS DOUBLE)
-                       - CAST(t.s AS DOUBLE) / CAST(t.n AS DOUBLE))
-                    * 1000000 + 1e-6) AS BIGINT) AS bq
-  FROM g, tot t
-),
-agg AS (
-  SELECT max(k) AS k_groups, max(n) AS n_total,
-         CAST(sum(wq) AS BIGINT) AS ssw_q,
-         CAST(sum(bq) AS BIGINT) AS ssb_q
-  FROM terms
-)
+{_anova_sql("z", "z")}
 SELECT CAST(k_groups AS BIGINT) AS k_groups,
        CAST(n_total AS BIGINT) AS n_total,
        CAST(floor(((CAST(ssb_q AS DOUBLE) / 1000000.0)
@@ -4916,18 +4808,7 @@ TERM_DRIFT_M = 20
 def top_term_drift_waves(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    wave = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("wave|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    wave = _doc_wave()
     toks = load(spark, sf_dir, "documents").select(
         wave.alias("w"), F.explode(_tokens()).alias("term")
     )
@@ -4962,8 +4843,7 @@ def top_term_drift_waves(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TERM_DRIFT_SQL = rf"""
 WITH toks AS (
-  SELECT CAST('0x' || substr(md5('wave|' || CAST(doc_id AS VARCHAR)), 1, 8)
-              AS BIGINT) % 2 AS w,
+  SELECT {_DOC_WAVE_SQL} AS w,
          unnest(string_split_regex(text, '\s+')) AS term
   FROM documents
 ),
@@ -5434,13 +5314,8 @@ def stylometric_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-STYLOMETRIC_RICHNESS_SQL = """
-WITH toks AS (
-  SELECT source, x AS tok
-  FROM (SELECT source, unnest(string_split_regex(text, '\\s+')) AS x
-        FROM documents WHERE text IS NOT NULL)
-  WHERE x <> ''
-),
+# the stylometric and Good-Turing oracles' per-source token profile head
+_TOKEN_PROFILE_SQL = """
 tf AS (
   SELECT source, tok, CAST(count(*) AS BIGINT) AS m
   FROM toks GROUP BY 1, 2
@@ -5448,7 +5323,16 @@ tf AS (
 prof AS (
   SELECT source,
          CAST(sum(m) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS n_types,
+         CAST(count(*) AS BIGINT) AS n_types,"""
+
+STYLOMETRIC_RICHNESS_SQL = f"""
+WITH toks AS (
+  SELECT source, x AS tok
+  FROM (SELECT source, unnest(string_split_regex(text, '\\s+')) AS x
+        FROM documents WHERE text IS NOT NULL)
+  WHERE x <> ''
+),
+{_TOKEN_PROFILE_SQL}
          CAST(sum(m * m) AS BIGINT) AS s_m2,
          CAST(sum(m * (m - 1)) AS BIGINT) AS s_rep
   FROM tf GROUP BY 1
@@ -6446,7 +6330,7 @@ def good_turing_unseen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-GOOD_TURING_SQL = r"""
+GOOD_TURING_SQL = rf"""
 WITH toks AS (
   SELECT source, t AS tok FROM (
     SELECT source,
@@ -6459,14 +6343,7 @@ WITH toks AS (
           FROM documents WHERE text IS NOT NULL)
   )
 ),
-tf AS (
-  SELECT source, tok, CAST(count(*) AS BIGINT) AS m
-  FROM toks GROUP BY 1, 2
-),
-prof AS (
-  SELECT source,
-         CAST(sum(m) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS n_types,
+{_TOKEN_PROFILE_SQL}
          CAST(sum(CASE WHEN m = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
          CAST(sum(CASE WHEN m = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
   FROM tf GROUP BY 1

@@ -144,6 +144,18 @@ def has_matching_headers(
     return (exact + 0.5 * partial) / len(h1) >= similarity_threshold
 
 
+def _header_match(d1: List[List[str]], d2: List[List[str]]) -> Optional[bool]:
+    """Whether two tables' header rows match; None when either table is
+    empty or their column counts differ (such tables never merge)."""
+    if not d1 or not d2 or len(d1[0]) != len(d2[0]):
+        return None
+    return has_matching_headers(d1[0], d2[0])
+
+
+def _similarity(match: Optional[bool]) -> float:
+    return 0.0 if match is None else 0.9 if match else 0.3
+
+
 def table_similarity(t1: Dict[str, Any], t2: Dict[str, Any]) -> float:
     """improved_table_merger.py:67-121 (bbox-free variant).
 
@@ -151,30 +163,9 @@ def table_similarity(t1: Dict[str, Any], t2: Dict[str, Any]) -> float:
     corpus carries no bboxes, so the score is the header component
     alone (the reference averages in bbox x-alignment when present).
     """
-    d1, d2 = t1.get("data") or [], t2.get("data") or []
-    if not d1 or not d2:
-        return 0.0
-    if len(d1[0]) != len(d2[0]):
-        return 0.0
-    headers_match = has_matching_headers(
-        [h.strip() for h in d1[0]], [h.strip() for h in d2[0]]
+    return _similarity(
+        _header_match(t1.get("data") or [], t2.get("data") or [])
     )
-    return 0.9 if headers_match else 0.3
-
-
-def merge_table_data_safely(
-    d1: List[List[str]], d2: List[List[str]]
-) -> Optional[List[List[str]]]:
-    """improved_table_merger.py:146-185: never merge on column-count
-    mismatch; drop the second table's header row iff headers match."""
-    if not d1:
-        return d2
-    if not d2:
-        return d1
-    if len(d1[0]) != len(d2[0]):
-        return None
-    start = 1 if has_matching_headers(d1[0], d2[0]) else 0
-    return d1 + d2[start:]
 
 
 STRATEGY_THRESHOLDS = {
@@ -200,24 +191,31 @@ def merge_multi_page_tables(
     out = [dict(tables[0])]
     for cur in tables[1:]:
         last = out[-1]
-        if (
-            cur.get("page", 0) == last.get("page", 0) + 1
-            and table_similarity(last, cur) >= similarity_threshold
-        ):
-            merged = merge_table_data_safely(last["data"], cur["data"])
-            if merged is None:
-                out.append(dict(cur))
-                continue
-            last["data"] = merged
-            last["is_multi_page"] = True
-            start = str(last.get("page", 0))
-            if last.get("page_range"):
-                parts = last["page_range"].split("-")
-                if len(parts) > 1:
-                    start = parts[0]
-            last["page_range"] = f"{start}-{cur.get('page', 0)}"
-        else:
+        merged = None
+        if cur.get("page", 0) == last.get("page", 0) + 1:
+            # improved_table_merger.py:146-185 — one header match serves
+            # the score and the header-row drop; never merge on a
+            # column-count mismatch
+            match = _header_match(
+                last.get("data") or [], cur.get("data") or []
+            )
+            if _similarity(match) >= similarity_threshold:
+                d1, d2 = last["data"], cur["data"]
+                if not d1 or not d2:
+                    merged = d1 or d2
+                elif match is not None:
+                    merged = d1 + d2[1 if match else 0:]
+        if merged is None:
             out.append(dict(cur))
+            continue
+        last["data"] = merged
+        last["is_multi_page"] = True
+        start = str(last.get("page", 0))
+        if last.get("page_range"):
+            parts = last["page_range"].split("-")
+            if len(parts) > 1:
+                start = parts[0]
+        last["page_range"] = f"{start}-{cur.get('page', 0)}"
     return out
 
 

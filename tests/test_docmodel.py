@@ -171,6 +171,20 @@ def test_merge_strategies():
     assert len(merge_multi_page_tables(fuzzy, 0.8)) == 2  # conservative: no
     assert len(merge_multi_page_tables(fuzzy, 0.6)) == 2  # col header sim 0.3|0.9 only
     assert len(merge_multi_page_tables(exact, 2.0)) == 2  # none
+    # at ≤ 0.3 same-width tables with different headers merge and keep
+    # the continuation's header row; a column-count mismatch never merges
+    other = [
+        {"page": 1, "data": [["Signal", "IO"], ["a", "b"]]},
+        {"page": 2, "data": [["Name", "Dir"], ["c", "d"]]},
+        {"page": 3, "data": [["Name", "Dir", "Type"], ["e", "f", "g"]]},
+    ]
+    for threshold in (0.3, 0.0):
+        merged = merge_multi_page_tables(other, threshold)
+        assert [t["data"] for t in merged] == [
+            [["Signal", "IO"], ["a", "b"], ["Name", "Dir"], ["c", "d"]],
+            other[2]["data"],
+        ]
+        assert merged[0]["page_range"] == "1-2"
 
 
 # --- text utils --------------------------------------------------------------
