@@ -29,6 +29,7 @@ import time
 from contextlib import contextmanager
 from typing import Callable, Iterable, Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,57 +50,31 @@ def bucket_of(doc_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(doc_id_col), F.lit(n_buckets)).cast("int")
 
 
-def _key_type_meta(df: DataFrame) -> str:
-    """The store key's DDL type string, recorded in the manifest META at
-    creation so keyed reads can hash probe keys with the store's native
-    type (``xxhash64("5") != xxhash64(5L)`` — a mistyped probe prunes to
-    buckets that cannot contain the key)."""
-    return df.schema["doc_id"].dataType.simpleString()
-
-
-def _store_key_type(spark: SparkSession, output_dir: str, lineage: dict):
-    """The store's native doc_id type: manifest META fast path; parquet
-    footer probe of one committed bucket for stores written before
-    key_type was recorded."""
-    kt = (lineage.get(META_KEY) or {}).get("key_type")
-    if kt:
-        try:
-            return T._parse_datatype_string(kt)
-        except Exception:
-            pass  # unparseable legacy value → footer probe below
-    sample = next(
-        (
-            _bucket_dir(output_dir, b, e)
-            for b, e in sorted(_bucket_items(lineage), key=lambda kv: int(kv[0]))
-            if e["status"] == "done" and e.get("row_count", 0) > 0
-        ),
-        None,
-    )
-    if sample is None:
-        raise FileNotFoundError(f"no committed buckets under {output_dir}")
-    return spark.read.parquet(sample).schema["doc_id"].dataType
-
-
-def _store_schema(lineage: dict) -> Optional[T.StructType]:
-    """The store's registered read schema, if the manifest carries one
-    (it does after the first :func:`evolve_store_schema`); None means
-    the schema is whatever the data files say — the pre-evolution
-    behavior, unchanged."""
-    sj = (lineage.get(META_KEY) or {}).get("schema")
-    return T.StructType.fromJson(sj) if sj else None
+def _store_schema(lineage: dict) -> T.StructType:
+    """The store's schema (every column but ``bucket``). The writer that
+    creates the store records it in the manifest META and
+    :func:`evolve_store_schema` widens it; every store read and MERGE
+    goes through it, so no read infers a schema from the data files.
+    Its ``doc_id`` type is the store's native key type, which keyed
+    reads and MERGE routing hash with (``xxhash64("5") !=
+    xxhash64(5L)`` — a mistyped probe prunes to buckets that cannot
+    contain the key)."""
+    meta = lineage.get(META_KEY)
+    if not meta:
+        raise FileNotFoundError("no lineage manifest: no committed store")
+    return T.StructType.fromJson(meta["schema"])
 
 
 def _conform_updates(
     df: DataFrame, schema: T.StructType, evolved: list[str]
 ) -> DataFrame:
-    """Align an update batch with the evolved store schema: EVOLVED
-    columns absent from the batch fill with NULL (a writer predating
-    the evolution keeps working); original columns must be present —
-    the projection raises on a genuinely malformed batch — and columns
-    the store does not know raise instead of silently dropping (the
-    same refusal a pre-evolution store's strict unionByName gives).
-    Output is in schema order so every generation file lays out
-    identically."""
+    """Align an update batch with the store schema (every MERGE does):
+    EVOLVED columns absent from the batch fill with NULL (a writer
+    predating the evolution keeps working); original columns must be
+    present — the projection raises on a genuinely malformed batch —
+    and columns the store does not know raise instead of silently
+    dropping. Output is in schema order so every generation file lays
+    out identically."""
     unknown = set(df.columns) - {f.name for f in schema.fields}
     if unknown:
         raise ValueError(
@@ -136,26 +111,8 @@ def evolve_store_schema(
         raise ValueError("add_columns is empty")
     with _manifest_lock(output_dir, wait_s=MERGE_LOCK_WAIT_S):
         lineage = read_lineage(output_dir)
-        meta = lineage.get(META_KEY)
-        if meta is None:
-            raise FileNotFoundError(f"no lineage manifest under {output_dir}")
         schema = _store_schema(lineage)
-        if schema is None:
-            sample = next(
-                (
-                    _bucket_dir(output_dir, b, e)
-                    for b, e in sorted(
-                        _bucket_items(lineage), key=lambda kv: int(kv[0])
-                    )
-                    if e["status"] == "done" and e.get("row_count", 0) > 0
-                ),
-                None,
-            )
-            if sample is None:
-                raise FileNotFoundError(
-                    f"no committed buckets under {output_dir}"
-                )
-            schema = spark.read.parquet(sample).schema
+        meta = lineage[META_KEY]
         existing = {f.name.lower() for f in schema.fields}
         evolved = list(meta.get("evolved_columns") or [])
         fields = list(schema.fields)
@@ -188,6 +145,13 @@ def _lineage_path(output_dir: str) -> str:
 
 def _snapshot_path(output_dir: str, version: int) -> str:
     return os.path.join(output_dir, f"lineage.v{version}.json")
+
+
+def _snapshot_versions(output_dir: str) -> list[int]:
+    """Versions of the retained manifest snapshots, ascending."""
+    names = os.listdir(output_dir)
+    found = (re.fullmatch(r"lineage\.v(\d+)\.json", n) for n in names)
+    return sorted(int(m.group(1)) for m in found if m)
 
 
 def read_lineage(
@@ -307,11 +271,18 @@ def _commit_lineage(
     return merged
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
+def _data_stats(path: str) -> tuple[int, int]:
+    """(rows, bytes) of a written data directory, read from its parquet
+    footers on the driver (no Spark job); (0, 0) when it holds no rows
+    or does not exist."""
+    rows = size = 0
     for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
+        for f in files:
+            full = os.path.join(root, f)
+            size += os.path.getsize(full)
+            if f.endswith(".parquet"):
+                rows += pq.read_metadata(full).num_rows
+    return (rows, size) if rows else (0, 0)
 
 
 def run_with_lineage(
@@ -326,9 +297,11 @@ def run_with_lineage(
 
     Re-invoking with the same ``output_dir`` skips completed buckets
     (anti-join against the lineage manifest). Each bucket is one write
-    followed by its own lineage commit, so a crash loses at most the
-    bucket in flight: a bucket written but not committed is redone
-    (overwritten) by the next run.
+    (its rows and bytes then read from the written footers) followed by
+    its own lineage commit, all under the store lock, so a crash loses
+    at most the bucket in flight: a bucket written but not committed is
+    redone (overwritten) by the next run. The first commit records the
+    store schema in the manifest META.
 
     Returns the lineage manifest {bucket: {status, row_count, bytes,
     wall_ms, run_id}}.
@@ -342,46 +315,52 @@ def run_with_lineage(
             f"bucketed with n_buckets={meta.get('n_buckets')} — mixing "
             "bucketings would silently drop documents"
         )
-    meta_entry = {"n_buckets": n_buckets, "key_type": _key_type_meta(docs)}
-    lineage[META_KEY] = meta_entry
     done = {int(b) for b, e in _bucket_items(lineage) if e["status"] == "done"}
-
-    bucketed = docs.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
     todo = sorted(set(range(n_buckets)) - done)
+    if not todo:
+        return lineage
 
-    # One pass computes every pending bucket; per-bucket commit happens
-    # in bucket order. (On a real cluster each bucket is one Iceberg
-    # partition append + one lineage-row insert — same protocol.)
-    pending = bucketed.filter(F.col("bucket").isin([int(b) for b in todo])) if todo else None
-    if pending is not None:
-        extracted = extract_elements(
-            pending.drop("bucket"), merge_strategy=merge_strategy
-        ).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-        extracted = extracted.persist()
-        try:
-            for b in todo:
+    # One pass computes every pending bucket; the persist keeps each
+    # bucket's write from extracting every pending doc again. Per-bucket
+    # commit happens in bucket order. (On a real cluster each bucket is
+    # one Iceberg partition append + one lineage-row insert — same
+    # protocol.)
+    extracted = extract_elements(
+        docs.filter(bucket_of(F.col("doc_id"), n_buckets).isin(todo)),
+        merge_strategy=merge_strategy,
+    ).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets)).persist()
+    try:
+        for b in todo:
+            # the lock spans write → stat → commit: a concurrent vacuum
+            # would otherwise reclaim the not-yet-referenced directory
+            with _manifest_lock(output_dir, wait_s=MERGE_LOCK_WAIT_S):
                 t0 = time.time()
                 part_dir = os.path.join(output_dir, f"bucket={b}")
-                part_df = extracted.filter(F.col("bucket") == int(b)).drop("bucket")
-                row_count = part_df.count()
-                if row_count > 0:
-                    part_df.sortWithinPartitions(*MERGE_KEYS).write.mode(
-                        "overwrite"
-                    ).parquet(part_dir)
-                entry = {
-                    "status": "done",
-                    "row_count": row_count,
-                    "bytes": _dir_bytes(part_dir) if row_count > 0 else 0,
-                    "wall_ms": int((time.time() - t0) * 1000),
-                    "run_id": run_id,
+                part = extracted.filter(F.col("bucket") == b).drop("bucket")
+                part.sortWithinPartitions(*MERGE_KEYS).write.mode(
+                    "overwrite"
+                ).parquet(part_dir)
+                row_count, nbytes = _data_stats(part_dir)
+                if not row_count:
+                    shutil.rmtree(part_dir)  # holds one schema-only file
+                delta = {
+                    str(b): {
+                        "status": "done",
+                        "row_count": row_count,
+                        "bytes": nbytes,
+                        "wall_ms": int((time.time() - t0) * 1000),
+                        "run_id": run_id,
+                    }
                 }
-                lineage[str(b)] = entry
-                _commit_lineage(
-                    output_dir,
-                    {META_KEY: dict(meta_entry), str(b): entry},
-                )
-        finally:
-            extracted.unpersist()
+                if meta is None and b == todo[0]:
+                    # the store's first commit records its schema
+                    delta[META_KEY] = {
+                        "n_buckets": n_buckets,
+                        "schema": part.schema.jsonValue(),
+                    }
+                lineage = _commit_lineage(output_dir, delta, locked=True)
+    finally:
+        extracted.unpersist()
     return lineage
 
 
@@ -395,13 +374,49 @@ def _bucket_dir(output_dir: str, b: str | int, entry: dict) -> str:
     return os.path.join(output_dir, f"bucket={b}")
 
 
+def _loaded_buckets(lineage: dict) -> dict[int, dict]:
+    """Committed non-empty buckets, bucket id → manifest entry, in
+    bucket order: the ones whose data files a read sees."""
+    return {
+        int(b): e
+        for b, e in sorted(_bucket_items(lineage), key=lambda kv: int(kv[0]))
+        if e["status"] == "done" and e.get("row_count", 0) > 0
+    }
+
+
+def _read_buckets(
+    spark: SparkSession,
+    output_dir: str,
+    lineage: dict,
+    wanted: Optional[set] = None,
+) -> DataFrame:
+    """Scan the committed non-empty buckets of ``lineage`` (only those
+    in ``wanted``, when given) through the manifest schema: files
+    predating an added column fill it with NULL — the Iceberg
+    read-time reconciliation — and an ``as_of`` manifest brings its own
+    schema, so time travel also travels the schema."""
+    parts = {
+        b: _bucket_dir(output_dir, b, e)
+        for b, e in _loaded_buckets(lineage).items()
+    }
+    if not parts:
+        raise FileNotFoundError(f"no committed buckets under {output_dir}")
+    reader = spark.read.schema(_store_schema(lineage))
+    pruned = [p for b, p in parts.items() if wanted is None or b in wanted]
+    if not pruned:
+        # pruned to buckets with no committed data: empty, store schema
+        return reader.parquet(*parts.values()).limit(0)
+    return reader.parquet(*pruned)
+
+
 def read_output(
     spark: SparkSession,
     output_dir: str,
     for_doc_ids: Optional[DataFrame] = None,
     as_of: Optional[int] = None,
 ) -> DataFrame:
-    """Read back committed non-empty buckets.
+    """Read back committed non-empty buckets, through the store schema
+    the manifest records.
 
     ``for_doc_ids`` (a DataFrame with a doc_id column) restricts the
     scan to the buckets those documents hash into — the Iceberg-style
@@ -415,54 +430,22 @@ def read_output(
     lineage = read_lineage(output_dir, as_of=as_of)
     wanted: Optional[set] = None
     if for_doc_ids is not None:
-        meta = lineage.get(META_KEY) or {}
-        n_buckets = meta.get("n_buckets")
-        if n_buckets:
-            # hash probe keys with the store's NATIVE key type:
-            # xxhash64 is type-sensitive (xxhash64("5") != xxhash64(5L)),
-            # so an int-typed probe against a long-keyed store — or any
-            # dtype drift in the caller — would prune to buckets that
-            # cannot contain the keys and silently return nothing
-            key_t = _store_key_type(spark, output_dir, lineage)
-            probe = for_doc_ids.select(
-                F.col("doc_id").cast(key_t).alias("doc_id")
+        # hash probe keys with the store's NATIVE key type:
+        # xxhash64 is type-sensitive (xxhash64("5") != xxhash64(5L)),
+        # so an int-typed probe against a long-keyed store — or any
+        # dtype drift in the caller — would prune to buckets that
+        # cannot contain the keys and silently return nothing
+        key_t = _store_schema(lineage)["doc_id"].dataType
+        probe = F.col("doc_id").cast(key_t)
+        wanted = {
+            r["bucket"]
+            for r in for_doc_ids.select(
+                bucket_of(probe, lineage[META_KEY]["n_buckets"]).alias("bucket")
             )
-            wanted = {
-                r["bucket"]
-                for r in probe.select(
-                    bucket_of(F.col("doc_id"), n_buckets).alias("bucket")
-                )
-                .distinct()
-                .collect()
-            }
-    all_parts = [
-        _bucket_dir(output_dir, b, e)
-        for b, e in sorted(_bucket_items(lineage), key=lambda kv: int(kv[0]))
-        if e["status"] == "done" and e.get("row_count", 0) > 0
-    ]
-    if not all_parts:
-        raise FileNotFoundError(f"no committed buckets under {output_dir}")
-    parts = (
-        all_parts
-        if wanted is None
-        else [
-            _bucket_dir(output_dir, b, e)
-            for b, e in _bucket_items(lineage)
-            if e["status"] == "done"
-            and e.get("row_count", 0) > 0
-            and int(b) in wanted
-        ]
-    )
-    # manifest schema (present after evolve_store_schema) drives the
-    # read: files predating an added column fill it with NULL — the
-    # Iceberg read-time reconciliation; as_of reads resolve the schema
-    # from the SNAPSHOT, so time travel also travels the schema
-    schema = _store_schema(lineage)
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    if not parts:
-        # pruned to buckets with no committed data: empty, store schema
-        return reader.parquet(*all_parts).limit(0)
-    return reader.parquet(*parts)
+            .distinct()
+            .collect()
+        }
+    return _read_buckets(spark, output_dir, lineage, wanted)
 
 
 # ---------------------------------------------------------------------------
@@ -498,26 +481,32 @@ def init_store(
     Refuses to overwrite an existing store: mutations go through
     merge_elements, exactly as ArangoDB creation vs CRUD are distinct.
     One Spark wave: the rows are written as the store's first
-    generation (:func:`_write_generation`), then one manifest commit.
+    generation (:func:`_write_generation`), then one manifest commit
+    that records ``rows``' schema in META. The existence check, write
+    and commit hold the store lock, so two concurrent creations
+    serialize and the loser raises.
     """
     for k in MERGE_KEYS:
         if k not in rows.columns:
             raise ValueError(f"init_store rows need column {k!r}")
     os.makedirs(output_dir, exist_ok=True)
-    lineage = read_lineage(output_dir)
-    if lineage.get(META_KEY):
-        raise FileExistsError(
-            f"{output_dir} already holds a committed store — use "
-            "merge_elements to mutate it"
+    with _manifest_lock(output_dir, wait_s=MERGE_LOCK_WAIT_S):
+        lineage = read_lineage(output_dir)
+        if lineage.get(META_KEY):
+            raise FileExistsError(
+                f"{output_dir} already holds a committed store — use "
+                "merge_elements to mutate it"
+            )
+        keyed = rows.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+        delta = _write_generation(
+            spark, output_dir, lineage, n_buckets,
+            dict.fromkeys(range(n_buckets), run_id), lambda _: keyed,
         )
-    delta = _write_generation(
-        spark, output_dir, lineage, n_buckets,
-        dict.fromkeys(range(n_buckets), run_id),
-        lambda _: rows.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets)),
-    )
-    delta[META_KEY] = {"n_buckets": n_buckets, "key_type": _key_type_meta(rows)}
-    _commit_lineage(output_dir, delta)
-    return read_lineage(output_dir)
+        delta[META_KEY] = {
+            "n_buckets": n_buckets,
+            "schema": keyed.drop("bucket").schema.jsonValue(),
+        }
+        return _commit_lineage(output_dir, delta, locked=True)
 
 
 def _clustered(df: DataFrame) -> DataFrame:
@@ -554,8 +543,9 @@ def _write_generation(
        ``partitionBy(bucket)`` dynamic-overwrite write (``current`` is
        None when no source bucket holds rows; a None result writes
        nothing);
-    4. count rows per bucket from the written files and build one
-       entry per bucket in ``run_ids`` (bucket → run_id).
+    4. read each bucket's rows and bytes from the written parquet
+       footers and build one entry per bucket in ``run_ids``
+       (bucket → run_id).
 
     The caller commits. Until it does, the manifest still references
     the old versions, so a crash leaves only an orphan that the retry's
@@ -575,23 +565,15 @@ def _write_generation(
     staging = os.path.join(output_dir, rel_root)
     if os.path.isdir(staging):
         shutil.rmtree(staging)  # orphan from a crashed attempt
-    src_dirs = [
-        _bucket_dir(output_dir, b, lineage[str(b)])
-        for b in sources
-        if lineage[str(b)]["status"] == "done"
-        and lineage[str(b)].get("row_count", 0) > 0
-    ]
+    wanted = set(sources) & set(_loaded_buckets(lineage))
     current = None
-    if src_dirs:
-        schema = _store_schema(lineage)
-        reader = spark.read.schema(schema) if schema is not None else spark.read
+    if wanted:
         # bucket is a pure function of doc_id, so the partition column
         # is recomputed rather than threaded through the store files
-        current = reader.parquet(*src_dirs).withColumn(
+        current = _read_buckets(spark, output_dir, lineage, wanted).withColumn(
             "bucket", bucket_of(F.col("doc_id"), n_buckets)
         )
     rows = build(current)
-    counts: dict = {}
     if rows is not None:
         (
             _clustered(rows).write.mode("overwrite")
@@ -599,26 +581,16 @@ def _write_generation(
             .partitionBy("bucket")
             .parquet(staging)
         )
-        # an empty frame writes no bucket=N dirs (and nothing to read)
-        if os.path.isdir(staging) and any(
-            name.startswith("bucket=") for name in os.listdir(staging)
-        ):
-            counts = {
-                r["bucket"]: r["count"]
-                for r in spark.read.parquet(staging)
-                .groupBy("bucket")
-                .count()
-                .collect()
-            }
     wall_ms = int((time.time() - t0) * 1000)  # shared wave wall
     entries: dict[str, dict] = {}
     for b, run_id in run_ids.items():
-        rc = int(counts.get(b, 0))
         rel_path = f"{rel_root}/bucket={b}"
+        # an empty frame writes no bucket=N dir: (0, 0)
+        rc, nbytes = _data_stats(os.path.join(output_dir, rel_path))
         entries[str(b)] = {
             "status": "done",
             "row_count": rc,
-            "bytes": _dir_bytes(os.path.join(output_dir, rel_path)) if rc > 0 else 0,
+            "bytes": nbytes,
             "wall_ms": wall_ms,
             "run_id": run_id,
             "version": gen,
@@ -649,24 +621,35 @@ def point_lookup(
     keys against a store bootstrapped with numeric doc_ids
     (:func:`init_store` accepts any keyed DataFrame) would prune to
     buckets that cannot contain them and silently return nothing. The
-    key type comes from the manifest META (recorded at store creation;
-    parquet-footer fallback for older stores) and both the pruning
-    probe (inside :func:`read_output`) and the ``IN`` predicate here
-    use values coerced to it.
+    key type is the ``doc_id`` type of the store schema in the manifest
+    META, and both the pruning probe and the ``IN`` predicate use
+    values coerced to it.
+
+    The probe keys form a local relation built from pandas, so
+    projecting their bucket ids and collecting them runs no Spark job:
+    the lookup is one job, its scan.
     """
+    import pandas as pd
+
     lineage = read_lineage(output_dir, as_of=as_of)
-    key_type = _store_key_type(spark, output_dir, lineage)
+    key_type = _store_schema(lineage)["doc_id"].dataType
     if isinstance(key_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         vals = [int(d) for d in doc_ids]
     elif isinstance(key_type, T.StringType):
         vals = [str(d) for d in doc_ids]
     else:
         vals = list(doc_ids)
-    ids_df = spark.createDataFrame(
-        [(v,) for v in vals],
-        T.StructType([T.StructField("doc_id", key_type)]),
-    )
-    scan = read_output(spark, output_dir, for_doc_ids=ids_df, as_of=as_of)
+    wanted: set = set()
+    if vals:
+        ids_df = spark.createDataFrame(
+            pd.DataFrame({"doc_id": vals}),
+            T.StructType([T.StructField("doc_id", key_type)]),
+        )
+        n_buckets = lineage[META_KEY]["n_buckets"]
+        wanted = {
+            r[0] for r in ids_df.select(bucket_of(F.col("doc_id"), n_buckets)).collect()
+        }
+    scan = _read_buckets(spark, output_dir, lineage, wanted)
     return scan.where(F.col("doc_id").isin(vals))
 
 _BUCKET_DIR_RE = re.compile(r"^bucket=\d+(__v\d+)?$")
@@ -690,8 +673,8 @@ def merge_elements(
     ONE Spark wave for any number of affected buckets: union-read every
     affected bucket's current version, one global anti-join on the
     touched keys, one ``partitionBy(bucket)`` write into a fresh
-    ``merge_v{gen}`` generation directory, per-bucket counts from one
-    ``groupBy(bucket).count()`` over the written files, then a single
+    ``merge_v{gen}`` generation directory, per-bucket rows and bytes
+    read from the written parquet footers on the driver, then a single
     manifest commit flips every affected bucket to the new generation
     atomically. No per-bucket driver loop — 10⁴ affected buckets cost
     the same number of Spark jobs as 1.
@@ -733,14 +716,13 @@ def _merge_elements_locked(
     # read side guards: xxhash64 is dtype-sensitive, so a mistyped
     # update/delete frame would rewrite the wrong buckets — deletes
     # silently no-op, upserts land in buckets keyed reads never visit)
-    key_t = _store_key_type(spark, output_dir, lineage)
+    schema = _store_schema(lineage)
+    key_t = schema["doc_id"].dataType
     if updates is not None:
-        updates = updates.withColumn("doc_id", F.col("doc_id").cast(key_t))
-        schema = _store_schema(lineage)
-        if schema is not None:
-            updates = _conform_updates(
-                updates, schema, meta.get("evolved_columns") or []
-            )
+        updates = _conform_updates(
+            updates.withColumn("doc_id", F.col("doc_id").cast(key_t)),
+            schema, meta.get("evolved_columns") or [],
+        )
     if delete_keys is not None:
         delete_keys = delete_keys.withColumn(
             "doc_id", F.col("doc_id").cast(key_t)
@@ -803,11 +785,7 @@ def _merge_elements_locked(
 def list_snapshots(output_dir: str) -> list[int]:
     """Manifest versions readable via ``as_of`` (retained snapshots +
     the current manifest), ascending."""
-    versions = []
-    for name in os.listdir(output_dir):
-        m = re.match(r"^lineage\.v(\d+)\.json$", name)
-        if m:
-            versions.append(int(m.group(1)))
+    versions = _snapshot_versions(output_dir)
     cur = read_lineage(output_dir).get(META_KEY, {}).get("manifest_version")
     if cur is not None:
         versions.append(cur)
@@ -850,17 +828,7 @@ def vacuum_store(
         }
 
     referenced = refs_of(lineage)
-    snap_versions = sorted(
-        v
-        for v in (
-            int(m.group(1))
-            for m in (
-                re.match(r"^lineage\.v(\d+)\.json$", n)
-                for n in os.listdir(output_dir)
-            )
-            if m
-        )
-    )
+    snap_versions = _snapshot_versions(output_dir)
     keep = set(snap_versions[len(snap_versions) - retain_snapshots:]) if retain_snapshots else set()
     removed: list[str] = []
     for v in snap_versions:
@@ -992,7 +960,7 @@ def patch_elements(
     # bucket pruning inside read_output hashes with it; the joins below
     # then compare like against like instead of relying on implicit
     # widening, which cannot bridge e.g. string vs long)
-    key_t = _store_key_type(spark, output_dir, read_lineage(output_dir))
+    key_t = _store_schema(read_lineage(output_dir))["doc_id"].dataType
     patches = patches.withColumn("doc_id", F.col("doc_id").cast(key_t))
     key_df = patches.select(*MERGE_KEYS)
     current = (
@@ -1074,9 +1042,8 @@ def _compact_store_locked(
     if meta is None:
         raise FileNotFoundError(f"no lineage manifest under {output_dir}")
     loaded = {
-        int(b): e.get("run_id", "compact")
-        for b, e in _bucket_items(lineage)
-        if e.get("status") == "done" and e.get("row_count", 0) > 0
+        b: e.get("run_id", "compact")
+        for b, e in _loaded_buckets(lineage).items()
     }
     if not loaded:
         return lineage

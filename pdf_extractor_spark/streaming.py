@@ -273,7 +273,9 @@ def stream_extract_merge(
     into the store. The batch therefore dedups per doc_id BEFORE
     extraction, keeping the newest source file (modification time,
     path as tie-break); extraction runs on the deduped batch inside
-    ``foreachBatch`` as a plain batch job.
+    ``foreachBatch`` as a plain batch job. A file-source
+    ``availableNow`` stream hands ``foreachBatch`` no empty batches, so
+    the batch is not probed for rows first.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -289,8 +291,6 @@ def stream_extract_merge(
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sess = batch_df.sparkSession
         w = Window.partitionBy("doc_id").orderBy(
             F.desc("_mtime"), F.desc("_fpath")

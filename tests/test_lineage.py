@@ -70,9 +70,8 @@ def test_crash_resume_produces_complete_output(
     calls = {"n": 0}
 
     def crashing_commit(output_dir, delta, locked=False):
-        # an unlocked commit re-enters itself once it holds the lock;
-        # count each bucket commit once
-        calls["n"] += not locked
+        # each bucket commits once, under the lock its write holds
+        calls["n"] += 1
         if calls["n"] == 3:
             raise RuntimeError("injected crash before lineage commit")
         return real_commit(output_dir, delta, locked=locked)
@@ -93,6 +92,38 @@ def test_crash_resume_produces_complete_output(
     # resumed buckets carry the resume run_id; completed ones keep r1
     assert {e["run_id"] for e in lineage.values()} == {"r1", "r2"}
     assert read_output(spark, out).count() == expected_total_rows()
+
+
+def test_concurrent_vacuum_waits_for_bucket_commit(
+    spark, docs_df, tmp_path, monkeypatch
+):
+    """A vacuum that starts while run_with_lineage has a bucket written
+    but not yet committed must not reclaim that directory: each bucket's
+    write, footer stat and commit hold the store lock, so the vacuum
+    waits for the commit and then finds the bucket referenced."""
+    import threading
+    import time
+
+    from pdf_extractor_spark import lineage as L
+
+    out = str(tmp_path / "out")
+    real_commit = L._commit_lineage
+    vacuums = []
+
+    def commit_beside_vacuum(output_dir, delta, locked=False):
+        vacuums.append(threading.Thread(target=L.vacuum_store, args=(out,)))
+        vacuums[-1].start()
+        time.sleep(1.0)
+        return real_commit(output_dir, delta, locked=locked)
+
+    monkeypatch.setattr(L, "_commit_lineage", commit_beside_vacuum)
+    run_with_lineage(spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r1")
+    for t in vacuums:
+        t.join()
+    monkeypatch.setattr(L, "_commit_lineage", real_commit)
+    assert read_output(spark, out).count() == expected_total_rows()
+    on_disk, referenced = dirs_on_disk_and_referenced(out)
+    assert on_disk == referenced
 
 
 def test_second_run_is_noop(spark, docs_df, tmp_path):

@@ -150,6 +150,7 @@ def test_writer_omitting_evolved_column_null_fills(spark, store):
 
 
 def test_evolution_validation(spark, store):
+    before = read_lineage(store)[META_KEY]["schema"]
     with pytest.raises(ValueError, match="empty"):
         evolve_store_schema(spark, store, {})
     with pytest.raises(ValueError, match="already exists"):
@@ -157,7 +158,7 @@ def test_evolution_validation(spark, store):
     with pytest.raises(Exception):
         evolve_store_schema(spark, store, {"broken": "not_a_type!!"})
     # failed calls must not have committed anything
-    assert "schema" not in read_lineage(store)[META_KEY]
+    assert read_lineage(store)[META_KEY]["schema"] == before
 
     evolve_store_schema(spark, store, {"a": "string"})
     with pytest.raises(ValueError, match="already exists"):
