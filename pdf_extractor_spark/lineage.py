@@ -366,9 +366,8 @@ def run_with_lineage(
 
 def _bucket_dir(output_dir: str, b: str | int, entry: dict) -> str:
     """Resolve a bucket's current data directory: the manifest ``path``
-    when a generation writer produced it (``merge_v{gen}/bucket=N``, or
-    ``bucket=N__vK``, a layout older stores may hold), the
-    run_with_lineage base path otherwise."""
+    when a generation writer produced it (``merge_v{gen}/bucket=N``),
+    the run_with_lineage base path otherwise."""
     if entry.get("path"):
         return os.path.join(output_dir, entry["path"])
     return os.path.join(output_dir, f"bucket={b}")
@@ -652,7 +651,7 @@ def point_lookup(
     scan = _read_buckets(spark, output_dir, lineage, wanted)
     return scan.where(F.col("doc_id").isin(vals))
 
-_BUCKET_DIR_RE = re.compile(r"^bucket=\d+(__v\d+)?$")
+_BUCKET_DIR_RE = re.compile(r"^bucket=\d+$")
 _MERGE_ROOT_RE = re.compile(r"^merge_v\d+$")
 
 
@@ -800,7 +799,7 @@ def vacuum_store(
     Copy-on-write MERGE leaves the previous version of every rewritten
     bucket on disk (that is what makes the commit crash-safe); without
     retention, frequent CDC merges grow the store without bound. After
-    a successful commit, every ``bucket=N[__vK]`` dir and ``merge_vG``
+    a successful commit, every ``bucket=N`` dir and ``merge_vG``
     generation member NOT referenced by the manifest — nor by one of
     the ``retain_snapshots`` newest manifest snapshots (the Iceberg
     expire-snapshots window; those stay time-travel-readable via

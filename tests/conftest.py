@@ -11,6 +11,21 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(op)`` runs ``op()`` and returns the Spark jobs it
+    ran, as the change in ``dagScheduler().numTotalJobs()``: a job group
+    would miss the jobs ``foreachBatch`` runs on the stream's own thread."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def count(op) -> int:
+        before = sched.numTotalJobs()
+        op()
+        return sched.numTotalJobs() - before
+
+    return count
+
+
 def pytest_terminal_summary(terminalreporter):
     """Name the golden-fixture skip: test_reference_golden.py skips as a
     module when the reference checkout is absent, and one ``s`` among

@@ -94,6 +94,119 @@ def test_cli_convert_pdf_dir(spark, tmp_path):
         "x.pdf", "y.pdf"}
     assert got.where("page = 2").count() > 0
 
+
+def _many_files(spark, tmp_path):
+    """33 tiny files per core: more than the default split packing (at
+    most 32 small files per split) fits in one split per core."""
+    src = tmp_path / "many"
+    src.mkdir()
+    for i in range(33 * spark.sparkContext.defaultParallelism):
+        (src / f"d{i:04d}.md").write_text(f"# Doc {i}\n\ntext {i}\n")
+    return src
+
+
+def _printed_count(capsys) -> int:
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert line.startswith("convert: ") and " elements -> " in line, line
+    return int(line.split()[1])
+
+
+def test_cli_convert_is_one_job_in_one_wave(spark, tmp_path, capsys, count_jobs):
+    """convert runs one Spark job (the write), with at most one scan
+    task per core, and prints the element count the write observed."""
+    from pdf_extractor_spark.__main__ import main
+
+    src, out = _many_files(spark, tmp_path), tmp_path / "elements"
+    rcs = []
+    n_jobs = count_jobs(
+        lambda: rcs.append(main(["convert", "--input", str(src), "--output", str(out)]))
+    )
+    assert rcs == [0]
+    assert n_jobs == 1
+    parts = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert 1 <= len(parts) <= spark.sparkContext.defaultParallelism, parts
+    assert _printed_count(capsys) == spark.read.parquet(str(out)).count() > 0
+
+
+def test_cli_convert_json_dir_job_count(spark, tmp_path, count_jobs):
+    """--json-dir runs the convert write plus the JSON write's 3 jobs,
+    and writes the lines of the doc-level path."""
+    from pdf_extractor_spark.__main__ import main
+    from pdf_extractor_spark.operators.extract import extract_spans
+    from pdf_extractor_spark.sources import read_text_docs, write_docs_json
+
+    src, jdir = _many_files(spark, tmp_path), str(tmp_path / "json")
+    n_jobs = count_jobs(lambda: main([
+        "convert", "--input", str(src), "--output", str(tmp_path / "elements"),
+        "--json-dir", jdir,
+    ]))
+    assert n_jobs == 4
+    ref = str(tmp_path / "json_ref")
+    write_docs_json(extract_spans(read_text_docs(spark, str(src))), ref)
+    assert _json_lines(jdir) == _json_lines(ref)
+
+
+def test_cli_convert_no_input_files(spark, tmp_path, capsys):
+    """An empty directory, or one where no file matches the glob,
+    converts to 0 elements in a parquet output with FLAT_SCHEMA's
+    columns."""
+    from pdf_extractor_spark.__main__ import main
+    from pdf_extractor_spark.schema import FLAT_SCHEMA
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    no_match = tmp_path / "no_match"
+    no_match.mkdir()
+    (no_match / "notes.txt").write_text("# not markdown\n")
+    for src in (empty, no_match):
+        out = str(tmp_path / f"out_{src.name}")
+        assert main(["convert", "--input", str(src), "--output", out]) == 0
+        assert _printed_count(capsys) == 0
+        got = spark.read.parquet(out)
+        assert got.count() == 0
+        assert got.columns == FLAT_SCHEMA.names
+
+
+def test_cli_convert_mixed_tree_matches_per_file_kernel(spark, tmp_path, capsys):
+    """A skewed tree through the capped scan: one file ~500x the others,
+    invalid UTF-8, an empty file and a nested file. Every file's flat
+    rows equal extract_document(text_to_spans(bytes)) under its relative
+    path, so no file is dropped or repeated."""
+    from pdf_extractor_spark.__main__ import main
+    from pdf_extractor_spark.docmodel import extract_document
+    from pdf_extractor_spark.sources import text_to_spans
+
+    src = tmp_path / "mixed"
+    (src / "sub").mkdir(parents=True)
+    small = "# Doc {i}\n\ntext {i}\n\n| a | b |\n| {i} | 2 |\n"
+    for i in range(12):
+        (src / f"d{i:02d}.md").write_text(small.format(i=i))
+    (src / "big.md").write_text(
+        "".join(f"## Part {i}\n\nline {i} of the big file\n" for i in range(800))
+    )
+    (src / "bad_utf8.md").write_bytes(b"# Caf\xe9 \xff\xfe\n\nna\xefve \x80 text\n")
+    (src / "empty.md").write_bytes(b"")
+    (src / "sub" / "nested.md").write_text(small.format(i="nested"))
+    assert (src / "big.md").stat().st_size > 400 * (src / "d00.md").stat().st_size
+
+    out = str(tmp_path / "elements")
+    assert main(["convert", "--input", str(src), "--output", out]) == 0
+    got: dict = {}
+    for row in spark.read.parquet(out).collect():
+        el = row.asDict(recursive=True)
+        got.setdefault(el.pop("doc_id"), []).append(el)
+    for els in got.values():
+        els.sort(key=lambda el: el["offset"])
+    expect = {}
+    for path in sorted(src.rglob("*.md")):
+        els = extract_document(text_to_spans(path.read_bytes()))
+        if els:
+            expect[path.relative_to(src).as_posix()] = els
+    assert {"big.md", "bad_utf8.md", "sub/nested.md"} <= set(expect)
+    assert got == expect
+    assert _printed_count(capsys) == sum(map(len, expect.values()))
+
+
 def test_cli_search_bm25(spark, capsys):
     from pdf_extractor_spark.__main__ import main
 

@@ -534,46 +534,6 @@ def test_vacuum_reclaims_superseded_versions(spark, docs_df, tmp_path):
     assert after.filter(F.col("text") == "E2").count() == 1
 
 
-def test_legacy_versioned_bucket_dir_is_read_merged_and_vacuumed(
-    spark, docs_df, tmp_path
-):
-    """Older stores may reference per-bucket rewrite dirs
-    (``bucket=N__vK``): they read back, a MERGE allocates its generation
-    past their version, and the post-commit vacuum reclaims them."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark import lineage as L
-
-    out = str(tmp_path / "out")
-    run_with_lineage(spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r1")
-    n = read_output(spark, out).count()
-    entry = read_lineage(out)["0"]
-    assert entry["row_count"] > 0
-    os.rename(os.path.join(out, "bucket=0"), os.path.join(out, "bucket=0__v1"))
-    L._commit_lineage(
-        out, {"0": {**entry, "version": 1, "path": "bucket=0__v1"}}
-    )
-    assert read_output(spark, out).count() == n
-
-    row = (
-        read_output(spark, out)
-        .filter(L.bucket_of(F.col("doc_id"), N_BUCKETS) == 0)
-        .limit(1)
-        .collect()
-    )
-    edit = spark.createDataFrame(row, read_output(spark, out).schema)
-    L.upsert_elements(spark, out, edit.withColumn("text", F.lit("EDIT")))
-
-    assert read_lineage(out)["0"]["path"] == "merge_v2/bucket=0"
-    on_disk, referenced = dirs_on_disk_and_referenced(out)
-    assert on_disk == referenced and "bucket=0__v1" not in on_disk
-    after = read_output(spark, out)
-    assert after.count() == n
-    assert after.filter(F.col("text") == "EDIT").count() == 1
-
-
 def test_concurrent_manifest_commits_lose_no_update(tmp_path):
     """Two interleaved committers (streaming CDC + batch backfill shape):
     the locked read-merge-write commit serializes them — every delta

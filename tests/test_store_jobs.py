@@ -4,8 +4,7 @@ The manifest records the store schema and every bucket's row count and
 bytes, so a store operation runs only the jobs its data needs: no
 schema inference from parquet footers, no read-back count after a
 write, and no probe job for a point lookup's handful of keys. Jobs are
-counted as the change in ``dagScheduler().numTotalJobs()``: a job group
-would miss the jobs ``foreachBatch`` runs on the stream's own thread.
+counted by the ``count_jobs`` fixture (conftest.py).
 """
 
 import pytest
@@ -27,13 +26,6 @@ from pdf_extractor_spark.streaming import stream_extract_merge
 
 N_DOCS = 16
 N_BUCKETS = 4
-
-
-def _jobs(spark, op) -> int:
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    before = sched.numTotalJobs()
-    op()
-    return sched.numTotalJobs() - before
 
 
 def _docs(spark, rows):
@@ -161,9 +153,9 @@ CASES = [
 @pytest.mark.parametrize(
     "setup, limit, exact", CASES, ids=[c[0].__name__[6:] for c in CASES]
 )
-def test_store_operation_job_count(spark, tmp_path, setup, limit, exact):
+def test_store_operation_job_count(spark, tmp_path, count_jobs, setup, limit, exact):
     op, check = setup(spark, tmp_path)
-    n = _jobs(spark, op)
+    n = count_jobs(op)
     check()
     if exact:
         assert n == limit, f"{n} Spark jobs, expected {limit}"
