@@ -17,4 +17,16 @@ Reference behaviors are cited in docstrings as ``path:line`` into the
 against the public PySpark API.
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+# Inside a Python worker, Spark has loaded pyspark.core.files and set
+# this flag before any UDF (and so this package) is unpickled.
+if (
+    "pyspark.core.files" in _sys.modules
+    and _sys.modules["pyspark.core.files"].SparkFiles._is_running_on_worker
+):
+    from .zipgate import gate_zip_invalidation
+
+    gate_zip_invalidation()

@@ -19,10 +19,13 @@ Scale design (this is the 100 TB shape, not just the local[32] shape):
 * Files (CLI ``convert``) skip the ``(doc_id, spans)`` stage:
   :func:`extract_files` is one ``binaryFile`` scan feeding one
   ``mapInArrow`` pass that decodes and extracts each file once. The
-  scan is coalesced to one task per core: a Python task costs about
-  0.18 s of worker CPU before the UDF runs (the worker's per-task
-  ``importlib.invalidate_caches()`` re-reads every zipimporter's
-  archive directory), against about 1 ms of extraction per small file.
+  scan is coalesced to one task per core, so the pass runs in one
+  wave and writes one part file per core. A task in a reused Python
+  worker costs about 0.02 s of worker CPU before the UDF runs, against
+  about 1 ms of extraction per small file; it was 0.13 s while Spark's
+  per-task ``importlib.invalidate_caches()`` re-read every
+  zipimporter's archive, which ``zipgate`` now skips for unchanged
+  archives.
 * All tokenize/classify work happens inside Arrow batches — the plan
   contains only ``MapInArrow``/``ArrowEvalPython`` nodes, never
   row-at-a-time ``BatchEvalPython`` (north-rule "zero per-row Python"
@@ -229,10 +232,11 @@ def extract_files(
     and then ``extract_document_rows``. Each file is read and decoded
     once, with no exchange and no nested array in between. The scan
     has at most one partition per core (``sources.binary_files``), so
-    the pass runs in one wave of Python tasks and pays the fixed
-    per-task worker cost (about 0.18 s of CPU) once per core, not once
-    per 32 files. Count the rows with an ``Observation`` on the write
-    (as ``convert`` does), not by reading the output back.
+    the pass runs in one wave of Python tasks and writes one part file
+    per core; each task pays the fixed per-task worker cost (about
+    0.02 s of CPU in a reused worker, see ``zipgate``) once. Count the
+    rows with an ``Observation`` on the write (as ``convert`` does),
+    not by reading the output back.
     """
     files = binary_files(spark, path, glob).select("path", "content")
     return files.mapInArrow(

@@ -108,18 +108,21 @@ def binary_files(
 
     The scan is coalesced to at most one partition per core
     (``defaultParallelism``), so every Python stage fed by files runs
-    in one wave. Spark's default split packing puts at most 32 small
-    files in a split (128 MB ``maxPartitionBytes`` over the 4 MB
-    ``openCostInBytes``), so 256 files would become 8 Python tasks,
-    and each Python task costs about 0.18 s of worker CPU before the
-    UDF runs: the worker's per-task ``importlib.invalidate_caches()``
-    makes every zipimporter re-read its archive's directory (measured
-    on 4 cores, Python 3.11). A coalesce only lowers the partition
-    count and adds no exchange; memory per Python batch stays bounded
-    by ``arrow.maxRecordsPerBatch`` and ``arrow.maxBytesPerBatch``,
-    not by partition size. The trade-off is on a cluster: a large
-    directory becomes one task per core, so a failed task redoes
-    1/cores of the input and no later wave absorbs a straggler."""
+    in one wave, and a write of it makes one part file per core.
+    Spark's default split packing puts at most 32 small files in a
+    split (128 MB ``maxPartitionBytes`` over the 4 MB
+    ``openCostInBytes``), so 256 files would become 8 Python tasks in
+    2 waves and 8 part files. A task in a reused worker costs about
+    0.02 s of worker CPU before the UDF runs, now that ``zipgate``
+    stops Spark's per-task ``importlib.invalidate_caches()`` from
+    re-reading every zipimporter's archive (that re-read made it
+    0.13 s; 4 cores, Python 3.11). A coalesce only lowers the
+    partition count and adds no exchange; memory per Python batch
+    stays bounded by ``arrow.maxRecordsPerBatch`` and
+    ``arrow.maxBytesPerBatch``, not by partition size. The trade-off
+    is on a cluster: a large directory becomes one task per core, so a
+    failed task redoes 1/cores of the input and no later wave absorbs
+    a straggler."""
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)

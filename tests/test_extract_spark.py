@@ -366,3 +366,55 @@ def test_nested_flat_view_evaluates_udf_once(spark):
     assert plan.count("ArrowEvalPython [") == 1, plan
     expect = extract_elements(df)
     assert sorted(map(tuple, flat.collect())) == sorted(map(tuple, expect.collect()))
+
+
+def test_worker_import_gates_zip_invalidation(spark, tmp_path):
+    """In a Python worker, importing the package installs the stat-gated
+    zip invalidation, so Spark's per-task ``importlib.invalidate_caches()``
+    re-reads no archive directory (pyspark.zip, py4j, the package zip).
+    The driver keeps the stdlib method, also after a ``convert``."""
+    import sys
+    import zipimport
+
+    from pdf_extractor_spark.__main__ import main
+
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        import pyarrow as pa
+
+        import pdf_extractor_spark  # noqa: F401
+
+        reads = []
+        stdlib_read = zipimport._read_directory
+
+        def counting_read(path):
+            reads.append(path)
+            return stdlib_read(path)
+
+        zipimport._read_directory = counting_read
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = stdlib_read
+        for _ in batches:
+            pass
+        gate = zipimport.zipimporter.invalidate_caches.__module__
+        yield pa.RecordBatch.from_pydict({"reads": [len(reads)], "gate": [gate]})
+
+    (row,) = spark.range(1, numPartitions=1).mapInArrow(
+        probe, "reads long, gate string"
+    ).collect()
+    assert row["reads"] == 0
+    if sys.version_info < (3, 13):  # 3.13+ re-reads lazily; no gate
+        assert row["gate"] == "pdf_extractor_spark.zipgate"
+
+    src = tmp_path / "docs"
+    src.mkdir()
+    (src / "a.md").write_text("# Title\n\nBody.\n")
+    assert main(["convert", "--input", str(src), "--output", str(tmp_path / "out")]) == 0
+    method = zipimport.zipimporter.invalidate_caches
+    assert (method.__module__, method.__qualname__) == (
+        "zipimport", "zipimporter.invalidate_caches"
+    )
