@@ -3,7 +3,13 @@
 
 Prints exactly ONE JSON line on stdout:
   {"metric": ..., "value": <total_sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...}
+   "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...,
+   "walls": {name: [sec, ...]}, "build_s": {name: [sec, ...]},
+   "run_s": {name: [sec, ...]}, "host_cores": ...}
+
+``queries`` holds each headline's min timed wall and ``value`` their
+sum. ``walls`` lists every timed wall in order. A headliner's wall is
+its DataFrame build (``build_s``) plus its noop-write run (``run_s``).
 
 The extraction headline stages its deterministic corpus to parquet
 (untimed — input materialization is not extraction) and then times a
@@ -42,6 +48,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     timings: dict[str, float] = {}
+    all_walls: dict[str, list[float]] = {}
+    build_s: dict[str, list[float]] = {}
+    run_s: dict[str, list[float]] = {}
 
     # --- extraction headline: corpus staged untimed, warm, min of 2 ---
     from pdf_extractor_spark.corpus import corpus_fingerprint
@@ -71,6 +80,7 @@ def main() -> int:
         walls.append(time.time() - t0)
     extract_wall = min(walls)
     timings["extract_elements_flat"] = round(extract_wall, 3)
+    all_walls["extract_elements_flat"] = [round(w, 3) for w in walls]
     log(f"extract: {extract_wall:.2f}s over {n_docs} docs")
 
     # --- analytics headliners (same protocol as extraction: warm
@@ -87,13 +97,20 @@ def main() -> int:
         if not spec.headline or name == "extract_elements_flat":
             continue
         run_full(spec.fn(spark, sf_dir))  # warm: scan cache + codegen
-        q_walls = []
+        builds, runs = [], []
         for _ in range(3):
             t0 = time.time()
-            run_full(spec.fn(spark, sf_dir))
-            q_walls.append(time.time() - t0)
+            df = spec.fn(spark, sf_dir)
+            t1 = time.time()
+            run_full(df)
+            builds.append(t1 - t0)
+            runs.append(time.time() - t1)
+        q_walls = [b + r for b, r in zip(builds, runs)]
         wall = min(q_walls)
         timings[name] = round(wall, 3)
+        all_walls[name] = [round(w, 3) for w in q_walls]
+        build_s[name] = [round(b, 3) for b in builds]
+        run_s[name] = [round(r, 3) for r in runs]
         log(f"{name}: {wall:.2f}s")
     spark.stop()
 
@@ -108,6 +125,10 @@ def main() -> int:
                 "sf": sf,
                 "docs_per_sec": round(n_docs / extract_wall, 2),
                 "n_docs_extracted": n_docs,
+                "walls": all_walls,
+                "build_s": build_s,
+                "run_s": run_s,
+                "host_cores": len(os.sched_getaffinity(0)),
             }
         )
     )

@@ -27,6 +27,8 @@ if (
     "pyspark.core.files" in _sys.modules
     and _sys.modules["pyspark.core.files"].SparkFiles._is_running_on_worker
 ):
+    from .gcfreeze import freeze_after_first_collect
     from .zipgate import gate_zip_invalidation
 
     gate_zip_invalidation()
+    freeze_after_first_collect()

@@ -21,11 +21,12 @@ Scale design (this is the 100 TB shape, not just the local[32] shape):
   ``mapInArrow`` pass that decodes and extracts each file once. The
   scan is coalesced to one task per core, so the pass runs in one
   wave and writes one part file per core. A task in a reused Python
-  worker costs about 0.02 s of worker CPU before the UDF runs, against
-  about 1 ms of extraction per small file; it was 0.13 s while Spark's
-  per-task ``importlib.invalidate_caches()`` re-read every
-  zipimporter's archive, which ``zipgate`` now skips for unchanged
-  archives.
+  worker costs about 2 ms of worker CPU outside the UDF, against
+  about 1 ms of extraction per small file. It was 0.13 s while
+  Spark's per-task ``importlib.invalidate_caches()`` re-read every
+  zipimporter's archive (``zipgate`` now skips unchanged archives),
+  and 0.02–0.04 s while the daemon's full ``gc.collect()`` after each task
+  walked the worker's long-lived heap (``gcfreeze`` now freezes it).
 * All tokenize/classify work happens inside Arrow batches — the plan
   contains only ``MapInArrow``/``ArrowEvalPython`` nodes, never
   row-at-a-time ``BatchEvalPython`` (north-rule "zero per-row Python"
@@ -234,9 +235,9 @@ def extract_files(
     has at most one partition per core (``sources.binary_files``), so
     the pass runs in one wave of Python tasks and writes one part file
     per core; each task pays the fixed per-task worker cost (about
-    0.02 s of CPU in a reused worker, see ``zipgate``) once. Count the
-    rows with an ``Observation`` on the write (as ``convert`` does),
-    not by reading the output back.
+    2 ms of CPU in a reused worker, see ``zipgate`` and ``gcfreeze``)
+    once. Count the rows with an ``Observation`` on the write (as
+    ``convert`` does), not by reading the output back.
     """
     files = binary_files(spark, path, glob).select("path", "content")
     return files.mapInArrow(

@@ -9,6 +9,7 @@ table_extraction.py:59).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import tempfile
@@ -17,7 +18,8 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
-def _package_zip() -> str:
+@functools.cache
+def _build_package_zip() -> str:
     """Zip this package so executors can import it — the programmatic
     equivalent of ``spark-submit --py-files`` (north rule deployment
     mode). Without this, UDFs unpickle-fail on workers whenever the
@@ -59,20 +61,29 @@ def _package_zip() -> str:
     return out
 
 
+def _package_zip() -> str:
+    """The package zip, hashed once per process; a zip whose file has
+    gone since (a cleaned temp dir) is hashed and built again."""
+    out = _build_package_zip()
+    if not os.path.exists(out):
+        _build_package_zip.cache_clear()
+        out = _build_package_zip()
+    return out
+
+
 def ensure_pyfiles(spark: SparkSession) -> None:
     """Ship this package to executors on an externally-created session
     (the driver contract hands us its own SparkSession). Idempotent —
-    the zip name is content-addressed, so an endswith match on the file
-    registry means THIS exact code is already shipped; any other zip
-    (same package, different content) falls through to addPyFile."""
+    the zip name is content-addressed, so finding it among the
+    session's Python includes means THIS exact code is already shipped;
+    any other zip (same package, different content) falls through to
+    addPyFile. PySpark records there the name of every ``addPyFile``
+    and ``spark.submit.pyFiles`` archive; reading it is a driver-side
+    list lookup, where walking ``sc.listFiles`` through py4j cost about
+    20 ms per call."""
     zip_path = _package_zip()
     sc = spark.sparkContext
-    zip_name = "/" + os.path.basename(zip_path)
-    try:
-        listed = list(sc.listFiles)
-    except Exception:  # noqa: BLE001 — API absent on exotic backends
-        listed = []
-    if any(f.endswith(zip_name) for f in listed):
+    if os.path.basename(zip_path) in sc._python_includes:
         return
     sc.addPyFile(zip_path)
 

@@ -113,13 +113,15 @@ def binary_files(
     split (128 MB ``maxPartitionBytes`` over the 4 MB
     ``openCostInBytes``), so 256 files would become 8 Python tasks in
     2 waves and 8 part files. A task in a reused worker costs about
-    0.02 s of worker CPU before the UDF runs, now that ``zipgate``
-    stops Spark's per-task ``importlib.invalidate_caches()`` from
-    re-reading every zipimporter's archive (that re-read made it
-    0.13 s; 4 cores, Python 3.11). A coalesce only lowers the
-    partition count and adds no exchange; memory per Python batch
-    stays bounded by ``arrow.maxRecordsPerBatch`` and
-    ``arrow.maxBytesPerBatch``, not by partition size. The trade-off
+    2 ms of worker CPU outside the UDF (4 cores, Python 3.11): the
+    re-read of every zipimporter's archive on Spark's per-task
+    ``importlib.invalidate_caches()`` made it 0.13 s until ``zipgate``,
+    and the daemon's full ``gc.collect()`` after each task, walking
+    about 73,600 long-lived objects, made it 0.02–0.04 s until
+    ``gcfreeze``. A coalesce only lowers the partition count and adds
+    no exchange; memory per Python batch stays bounded by
+    ``arrow.maxRecordsPerBatch`` and ``arrow.maxBytesPerBatch``, not by
+    partition size. The trade-off
     is on a cluster: a large directory becomes one task per core, so a
     failed task redoes 1/cores of the input and no later wave absorbs
     a straggler."""
